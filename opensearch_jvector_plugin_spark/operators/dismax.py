@@ -44,17 +44,18 @@ def field_postings_df(
 ) -> DataFrame:
     """(doc_id, field, dl, term, tf) over every field in one corpus scan.
 
-    `field` is the index into `fields`. NULL / empty field values simply
-    produce no postings for that (doc, field) — exactly Lucene's "document
-    has no value for the field" (it is then absent from that field's
-    docCount and avgdl).
+    `field` is the field's name, so a consumer joins per-field boosts and
+    stats by name whatever order its field list has. NULL / empty field
+    values simply produce no postings for that (doc, field) — exactly
+    Lucene's "document has no value for the field" (it is then absent from
+    that field's docCount and avgdl).
     """
     structs = [
         F.struct(
-            F.lit(i).cast("int").alias("field"),
+            F.lit(name).alias("field"),
             tokenize_col(name).alias("toks"),
         )
-        for i, name in enumerate(fields)
+        for name in fields
     ]
     per_field = (
         corpus.select(
@@ -92,9 +93,10 @@ def multi_match_scores(
     fields: [(column_name, boost), ...] — static, small (2-5 in practice).
     `postings`: optional pre-derived field_postings_df relation (the
     per-field segment state a mapper persists) — when given, the corpus is
-    not rescanned and nothing is persisted. Callers release executor
-    storage via the `_ojs_persisted` handle after materializing, the
-    repo-wide persist discipline.
+    not rescanned and nothing is persisted; it may hold more fields than
+    `fields`, in any order (boosts and stats join by field name). Callers
+    release executor storage via the `_ojs_persisted` handle after
+    materializing, the repo-wide persist discipline.
     """
     persisted = None
     if postings is None:
@@ -119,8 +121,7 @@ def multi_match_scores(
         F.count("*").cast("long").alias("df")
     )
     boosts_df = postings.sparkSession.createDataFrame(
-        [(i, float(b)) for i, (_n, b) in enumerate(fields)],
-        "field INT, boost DOUBLE",
+        [(n, float(b)) for n, b in fields], "field STRING, boost DOUBLE"
     )
     qterms = query_terms_df(queries)
     # Small side: (query_id, term) × per-field df/stats -> per-(query, field,
@@ -156,9 +157,9 @@ def multi_match_scores(
     # the plain scorer runs — no pivot, no second shuffle.
     sums = [
         F.sum(
-            F.when(F.col("field") == i, F.col("contrib")).otherwise(F.lit(0.0))
+            F.when(F.col("field") == n, F.col("contrib")).otherwise(F.lit(0.0))
         ).alias(f"_s{i}")
-        for i in range(len(fields))
+        for i, (n, _b) in enumerate(fields)
     ]
     agged = contribs.groupBy("query_id", "doc_id").agg(*sums)
     scols = [F.col(f"_s{i}") for i in range(len(fields))]

@@ -378,7 +378,7 @@ def _exact_weights(
         return {qid: {} for qid in qtfs}
     from .query import lookup_term_dfs
 
-    global_df = lookup_term_dfs(spark, index, all_terms)
+    global_df = lookup_term_dfs(spark, index.dict_path, all_terms)
     return {
         qid: {
             t: float(c) * bm25_idf_py(global_df[t], index.n_docs)

@@ -53,6 +53,7 @@ from .query import (
     _query_weights,
     _segment_granularity,
     decode_segment_postings,
+    lookup_term_dfs,
 )
 from .score import query_terms_df
 from ..plans.stats import CorpusStats, corpus_stats, postings_df
@@ -611,7 +612,7 @@ def search_phrase(
     for qid, ts in qs:
         if all(t in weights.get(qid, {}) for t in set(ts)):
             live[qid] = ts
-            dfs = _dict_dfs(spark, index, sorted(set(ts)))
+            dfs = lookup_term_dfs(spark, index.dict_path, sorted(set(ts)))
             # occurrence-order left fold (see module docstring)
             w = bm25_idf_py(dfs[ts[0]], n_docs)
             for t in ts[1:]:
@@ -696,18 +697,6 @@ def search_phrase(
             ).alias("score"),
         )
     )
-
-
-def _dict_dfs(
-    spark: SparkSession, index: IndexHandle, terms: list[str]
-) -> dict[str, int]:
-    # Round 7: routed through the shared cost-switched dict lookup (small
-    # dict -> one driver-side pyarrow load per process, invalidated by
-    # merge rewrites; large dict -> distributed term-pruned scan). Replaces
-    # a per-(index, terms) cache that never invalidated on merge.
-    from .query import lookup_term_dfs
-
-    return lookup_term_dfs(spark, index, terms)
 
 
 def compile_boolean_clauses(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import bm25_idf_py
 from ..functions.tokenizer import tokenize_text
+from ..plans.state import term_df_map
 from .codec import decode_postings
 from .wand import maxscore_topk, minscore_all, term_upper_bound
 
@@ -99,64 +100,21 @@ def load_index(index_dir: str) -> IndexHandle:
     )
 
 
-# A dictionary below this total on-disk size is read driver-side with
-# pyarrow instead of a Spark job (Lucene memory-maps the terms dict of a
-# shard the same way; the env knob keeps the switch scale-configurable —
-# a 100 TB index's vocabulary goes through the distributed scan).
-DICT_DRIVER_MAX_BYTES = int(
-    os.environ.get("OJS_DICT_DRIVER_BYTES", str(64 << 20))
-)
-# (dict_path) -> (fingerprint, term -> df). Fingerprint is (file names,
-# sizes, mtimes), so a merge that rewrites the dict invalidates the entry.
-_DICT_CACHE: dict[str, tuple[tuple, dict[str, int]]] = {}
-
-
-def _dict_fingerprint(dict_path: str) -> tuple | None:
-    try:
-        names = sorted(
-            n for n in os.listdir(dict_path) if n.endswith(".parquet")
-        )
-        stats = []
-        total = 0
-        for n in names:
-            st = os.stat(os.path.join(dict_path, n))
-            stats.append((n, st.st_size, st.st_mtime_ns))
-            total += st.st_size
-        return tuple(stats) if total <= DICT_DRIVER_MAX_BYTES else None
-    except OSError:
-        return None
-
-
 def lookup_term_dfs(
-    spark: SparkSession, index: IndexHandle, terms: list[str]
+    spark: SparkSession, dict_path: str, terms: list[str]
 ) -> dict[str, int]:
-    """term -> global df from the persisted dictionary, for the terms that
-    exist. Cost-switched (the FilterIdsSelector.java:78-109 discipline,
-    round 7): a small dictionary is loaded once per process driver-side via
-    pyarrow — no Spark job per query batch, the dominant fixed cost of the
-    batched-query path (measured 0.46s of a 1.8s 200-query batch) — while a
-    large dictionary keeps the distributed term-pruned scan."""
-    fp = _dict_fingerprint(index.dict_path)
-    if fp is not None:
-        cached = _DICT_CACHE.get(index.dict_path)
-        if cached is None or cached[0] != fp:
-            import pyarrow.parquet as pq
-
-            t = pq.read_table(index.dict_path, columns=["term", "df"])
-            cached = (
-                fp,
-                dict(
-                    zip(
-                        t.column("term").to_pylist(),
-                        (int(x) for x in t.column("df").to_pylist()),
-                    )
-                ),
-            )
-            _DICT_CACHE[index.dict_path] = cached
-        full = cached[1]
+    """term -> global df from the (term, df) parquet at `dict_path`, for the
+    terms that exist. Cost-switched (the FilterIdsSelector.java:78-109
+    discipline, round 7): a small dictionary is loaded once per process
+    driver-side (plans/state.term_df_map) — no Spark job per query batch,
+    the dominant fixed cost of the batched-query path (measured 0.46s of a
+    1.8s 200-query batch) — while a large dictionary keeps the distributed
+    term-pruned scan."""
+    full = term_df_map(dict_path)
+    if full is not None:
         return {t: full[t] for t in terms if t in full}
 
-    dict_df = spark.read.parquet(index.dict_path)
+    dict_df = spark.read.parquet(dict_path)
     if len(terms) <= 64:
         # Few terms: the In() predicate pushes into the Parquet scan (row
         # groups without the terms are skipped entirely).
@@ -196,7 +154,7 @@ def _query_weights(
     if not all_terms:
         return {qid: {} for qid in qtfs}, ks, []
 
-    global_df = lookup_term_dfs(spark, index, all_terms)
+    global_df = lookup_term_dfs(spark, index.dict_path, all_terms)
     weights = {
         qid: {
             t: float(c) * bm25_idf_py(global_df[t], index.n_docs)

@@ -1,10 +1,11 @@
-"""Job metrics — the analog of the reference's stats counters
+"""Index metrics log — the analog of the reference's stats counters
 (KNNCounter/StatNames monotonic counters and the REST stats handler,
 plugin/stats/KNNCounter.java, plugin/rest/RestKNNStatsHandler.java).
 
-Spark-first: `DataFrame.observe` attaches named aggregates that are
-computed AS the job runs (no extra pass), collected by a
-QueryExecutionListener and appended to a metrics log next to the index.
+Index builds, appends and merges call `append_metrics` with one JSON record,
+kept next to the index: a line of `metrics.jsonl`, or, on an object store,
+one object under `metrics/`. `read_metrics` returns the records of both
+layouts.
 """
 
 from __future__ import annotations
@@ -12,17 +13,6 @@ from __future__ import annotations
 import json
 import os
 import time
-
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
-
-
-def observed_rowcount(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    """Attach a zero-cost row/byte observation to a DataFrame. After an
-    action runs, `observation.get` yields the metrics."""
-    obs = Observation(name)
-    out = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    return out, obs
 
 
 def append_metrics(index_dir: str, record: dict, storage=None) -> None:

@@ -1,0 +1,80 @@
+"""Per-process derived state, named by its source files.
+
+The serving discipline of the reference (QuantizationStateCache, SURVEY §0):
+derive index state once, then serve every query from it. Here every such
+derivation goes through `memo`, whose entries are keyed on the fingerprint
+of the files they were derived from — `(name, size, mtime_ns)`, the way
+Delta Lake names table state by its log version — so a rewritten source
+rebuilds and replaces its entry instead of being served stale.
+
+`term_df_map` is the one driver-side read of a (term, df) parquet into a
+dict. Dictionaries larger than `DICT_DRIVER_MAX_BYTES` on disk are not
+read; callers then take a distributed term-pruned scan
+(`operators.query.lookup_term_dfs`).
+"""
+
+from __future__ import annotations
+
+import os
+from typing import Callable
+
+# A dictionary below this total on-disk size is read driver-side with
+# pyarrow instead of a Spark job (Lucene memory-maps the terms dict of a
+# shard the same way; the env knob keeps the switch scale-configurable —
+# a 100 TB index's vocabulary goes through the distributed scan).
+DICT_DRIVER_MAX_BYTES = int(
+    os.environ.get("OJS_DICT_DRIVER_BYTES", str(64 << 20))
+)
+
+# (kind, key) -> (fingerprint of the sources, value)
+_MEMO: dict[tuple, tuple[tuple, object]] = {}
+
+
+def source_key(path: str) -> tuple:
+    """((name, size, mtime_ns), ...) over a file, or over the `*.parquet`
+    files of a directory."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    for n in sorted(os.listdir(path)):
+        if n.endswith(".parquet"):
+            st = os.stat(os.path.join(path, n))
+            out.append((n, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def memo(kind: str, key, sources: list[str], build: Callable[[], object]):
+    """`build()` once per (kind, key) while the fingerprint of `sources`
+    is unchanged; a changed source rebuilds and replaces the entry."""
+    fp = tuple(source_key(s) for s in sources)
+    hit = _MEMO.get((kind, key))
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    _MEMO[(kind, key)] = (fp, value)
+    return value
+
+
+def term_df_map(path: str) -> dict[str, int] | None:
+    """term -> df of the (term, df) parquet at `path`, or None when it is
+    missing or larger than DICT_DRIVER_MAX_BYTES."""
+    try:
+        size = sum(s for _n, s, _m in source_key(path))
+    except OSError:
+        return None
+    if size > DICT_DRIVER_MAX_BYTES:
+        return None
+
+    def read() -> dict[str, int]:
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(path, columns=["term", "df"])
+        return dict(
+            zip(
+                t.column("term").to_pylist(),
+                (int(x) for x in t.column("df").to_pylist()),
+            )
+        )
+
+    return memo("term_df", path, [path], read)

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int) -> str:
+    """The driver heap when SPARK_DRIVER_MEM is unset: half of physical
+    memory, at least 1g and at most 48g, in MiB. A fixed 48g gets the
+    driver JVM killed by the kernel on a host with less memory."""
+    mib = min(48 << 10, max(1 << 10, (phys_bytes >> 20) // 2))
+    return f"{mib}m"
+
+
 def get_spark(
     cores: int | str | None = None,
     app_name: str = "opensearch_jvector_plugin_spark",
@@ -41,7 +49,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM")
+            or default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -80,7 +80,7 @@ def main() -> None:
         from opensearch_jvector_plugin_spark.operators.query import (
             _query_weights,
         )
-        t("_query_weights alone (dict job)",
+        t("_query_weights alone (dict lookup)",
           lambda: _query_weights(spark, idx, qpdf))
         t("_transcript_attrs materialize",
           lambda: eq._transcript_attrs(spark).count())

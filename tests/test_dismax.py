@@ -39,14 +39,14 @@ def two_field_corpus(spark):
 
 def test_field_postings_null_and_empty_excluded(spark, two_field_corpus):
     fp = field_postings_df(two_field_corpus, ["text", "tool"]).toPandas()
-    # doc 2 has no field-1 postings; doc 4 has no field-0 postings.
-    assert fp[(fp.doc_id == 2) & (fp.field == 1)].empty
-    assert fp[(fp.doc_id == 4) & (fp.field == 0)].empty
+    # doc 2 has no tool postings; doc 4 has no text postings.
+    assert fp[(fp.doc_id == 2) & (fp.field == "tool")].empty
+    assert fp[(fp.doc_id == 4) & (fp.field == "text")].empty
     # dl is per-(doc, field): doc 0 text has 3 tokens, tool has 1.
     d0 = fp[fp.doc_id == 0].set_index("field")["dl"].groupby(level=0).first()
-    assert int(d0[0]) == 3 and int(d0[1]) == 1
+    assert int(d0["text"]) == 3 and int(d0["tool"]) == 1
     # tf counts repeats within a field: apple x2 in doc 0's text.
-    row = fp[(fp.doc_id == 0) & (fp.field == 0) & (fp.term == "apple")]
+    row = fp[(fp.doc_id == 0) & (fp.field == "text") & (fp.term == "apple")]
     assert int(row["tf"].iloc[0]) == 2
 
 
@@ -128,3 +128,36 @@ def test_docs_matching_no_field_absent(spark, two_field_corpus):
     )
     assert got[got.query_id == 0].empty
     assert set(got[got.query_id == 1].doc_id) == {3}
+
+
+def test_field_order_does_not_move_boosts(spark, two_field_corpus):
+    """Boosts and per-field stats follow the field NAME: the same fields in
+    the opposite order — over the corpus, or over a field-postings sidecar
+    built in the other order — score identically."""
+    queries = spark.createDataFrame(
+        [(0, "grep apple", 10), (1, "bash cherry", 10), (2, "apple", 10)],
+        "query_id INT, query_text STRING, k LONG",
+    )
+    fields = [("text", 1.0), ("tool", 2.0)]
+    sidecar = field_postings_df(two_field_corpus, ["text", "tool"])
+    want = _pdf(
+        multi_match_scores(two_field_corpus, queries, fields, tie_breaker=0.3)
+    ).set_index(["query_id", "doc_id"])["score"].sort_index()
+    for postings in (None, sidecar):
+        got = _pdf(
+            multi_match_scores(
+                two_field_corpus, queries, fields[::-1], tie_breaker=0.3,
+                postings=postings,
+            )
+        ).set_index(["query_id", "doc_id"])["score"].sort_index()
+        assert got.index.equals(want.index)
+        np.testing.assert_allclose(got.to_numpy(), want.to_numpy(), rtol=1e-12)
+    # A subset of the sidecar's fields scores as if only it were indexed.
+    tool = ("tool", 2.0)
+    sub, alone = (
+        _pdf(multi_match_scores(two_field_corpus, queries, [tool], postings=p))
+        .set_index(["query_id", "doc_id"])["score"].sort_index()
+        for p in (sidecar, None)
+    )
+    assert sub.index.equals(alone.index)
+    np.testing.assert_allclose(sub.to_numpy(), alone.to_numpy(), rtol=1e-12)

@@ -1,0 +1,156 @@
+"""plans/state.py — the fingerprint-keyed memo and the one term-df reader —
+and the registry state built on them: a rewritten source re-derives its
+state, a dictionary over the driver threshold takes the distributed scan,
+and the positional-query sidecar scan keeps splits it already has."""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+import duckdb
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from test_entry_oracles import SF_DIRS, normalize
+
+from opensearch_jvector_plugin_spark import entry_queries as eq
+from opensearch_jvector_plugin_spark.operators import query
+from opensearch_jvector_plugin_spark.plans import state
+
+
+def _write_dict(path, terms, dfs):
+    pq.write_table(pa.table({"term": terms, "df": dfs}), path)
+
+
+def test_memo_rebuilds_when_source_changes(tmp_path):
+    f = str(tmp_path / "src.parquet")
+    _write_dict(f, ["a"], [1])
+    builds = []
+
+    def build():
+        builds.append(1)
+        return len(builds)
+
+    assert state.memo("test", "k", [f], build) == 1
+    assert state.memo("test", "k", [f], build) == 1
+    _write_dict(f, ["a", "b"], [1, 2])
+    assert state.memo("test", "k", [f], build) == 2
+    assert state.memo("test", "k", [f], build) == 2
+    # Another key over the same source is its own entry.
+    assert state.memo("test", "other", [f], build) == 3
+
+
+def test_source_key_covers_directory_parquet_files(tmp_path):
+    d = tmp_path / "dict"
+    d.mkdir()
+    _write_dict(str(d / "part-0.parquet"), ["a"], [1])
+    (d / "_SUCCESS").write_text("")
+    key = state.source_key(str(d))
+    assert [n for n, _s, _m in key] == ["part-0.parquet"]
+    _write_dict(str(d / "part-1.parquet"), ["b"], [2])
+    assert state.source_key(str(d)) != key
+
+
+def test_term_df_map_size_guard_and_invalidation(tmp_path, monkeypatch):
+    d = tmp_path / "dict"
+    d.mkdir()
+    _write_dict(str(d / "part-0.parquet"), ["a", "b"], [3, 1])
+    assert state.term_df_map(str(d)) == {"a": 3, "b": 1}
+    _write_dict(str(d / "part-0.parquet"), ["a", "b", "c"], [4, 1, 2])
+    assert state.term_df_map(str(d)) == {"a": 4, "b": 1, "c": 2}
+    monkeypatch.setattr(state, "DICT_DRIVER_MAX_BYTES", 0)
+    assert state.term_df_map(str(d)) is None
+    assert state.term_df_map(str(tmp_path / "missing")) is None
+
+
+def test_rewritten_documents_rederive_corpus_state(spark, tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    docs = str(sf / "documents.parquet")
+    shutil.copyfile(os.path.join(SF_DIRS[0], "documents.parquet"), docs)
+    before = normalize(eq.q_bm25_topk(spark, str(sf)).toPandas())
+
+    pdf = pd.read_parquet(docs)
+    # Every doc takes its neighbour's text; even docs gain query terms.
+    pdf["text"] = np.roll(pdf["text"].to_numpy(), 1)
+    pdf.loc[pdf["doc_id"] % 2 == 0, "text"] += " customer spark join"
+    pdf.to_parquet(docs, index=False)
+
+    got = normalize(eq.q_bm25_topk(spark, str(sf)).toPandas())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    want = normalize(con.execute(eq.ORACLES["bm25_topk"]).df())
+    assert not got.equals(before)
+    assert list(got.columns) == list(want.columns)
+    assert len(got) == len(want)
+    np.testing.assert_allclose(
+        got["score"].to_numpy(float), want["score"].to_numpy(float),
+        rtol=0, atol=1.5e-6,
+    )
+    for c in ("query_id", "rank", "doc_id"):
+        assert got[c].tolist() == want[c].tolist(), c
+
+
+@pytest.fixture
+def lookup_jobs(spark, monkeypatch):
+    """Spark jobs launched by each lookup_term_dfs call, in call order."""
+    sc = spark.sparkContext
+    orig = query.lookup_term_dfs
+    counts: list[int] = []
+
+    def counted(*a, **kw):
+        group = f"ojs-test-lookup-{len(counts)}-{id(counts)}"
+        sc.setJobGroup(group, "term-df lookup")
+        try:
+            return orig(*a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(query, "lookup_term_dfs", counted)
+    monkeypatch.setattr(eq, "lookup_term_dfs", counted)
+    return counts
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["bm25_topk", "bm25_synonyms", "bm25_boolean", "transcript_bm25_indexed"],
+)
+def test_large_dict_takes_distributed_scan(
+    name, spark, monkeypatch, lookup_jobs
+):
+    fn = eq.QUERIES[name]
+    driver = normalize(fn(spark, SF_DIRS[0]).toPandas())
+    assert lookup_jobs and not any(lookup_jobs)
+    lookup_jobs.clear()
+    monkeypatch.setattr(state, "DICT_DRIVER_MAX_BYTES", 0)
+    scanned = normalize(fn(spark, SF_DIRS[0]).toPandas())
+    assert lookup_jobs and all(lookup_jobs)
+    pd.testing.assert_frame_equal(driver, scanned)
+
+
+def test_toks_parallel_keeps_a_scan_with_enough_splits(spark, tmp_path):
+    par = spark.sparkContext.defaultParallelism
+
+    def sidecar(n_files: int):
+        d = tmp_path / f"state{n_files}"
+        (
+            spark.range(0, 400)
+            .selectExpr("id AS doc_id", "array('a', 'b') AS toks", "2 AS dl")
+            .repartition(n_files)
+            .write.parquet(str(d / "toks"))
+        )
+        return eq._SidecarState(str(d), stats=None)
+
+    def plan(st) -> str:
+        df = st.toks(spark, parallel=True)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    many = sidecar(2 * par)
+    assert many.read(spark, "toks").rdd.getNumPartitions() >= par
+    assert "RoundRobinPartitioning" not in plan(many)
+    assert "RoundRobinPartitioning" in plan(sidecar(1))
