@@ -8,8 +8,8 @@ engine mirrors that contract exactly:
 
 - `delete_docs` unions ids into `deletes.json` (atomic PUT through the
   text-index storage client; single-writer, like the merge marker).
-- Every kernel-served query (`search` / `search_weighted` /
-  `search_min_score`, and everything built on them — the indexed
+- Every kernel-served query (everything served through
+  `query._serve_segments`: top-k, radial, and the indexed
   expansion/boolean/phrase surface) applies the deleted set as a
   broadcast denied-array INSIDE the kernel, before any top-k cut, so a
   filtered query still fills k from live matches.

@@ -7,7 +7,10 @@ never rescans source data to serve a query — JVectorReader.java:108-133
 reads the on-disk structure; the FST term dictionary backs Lucene's
 MultiTermQuery expansion the same way the dict parquet does here).
 
-Two serving tails, both fed by dictionary expansion:
+Two serving tails, both fed by dictionary expansion and both per-query
+bodies of the one per-segment serving path (`query._serve_segments`: the
+merged-vs-segments choice, term-pruned scan, broadcast and decode live
+there only):
 
 - **Top-k weighted disjunction** (fuzzy/prefix/wildcard/regexp): the
   capped expansion compiles to per-(query, term) weights — exactly the
@@ -35,7 +38,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.bm25 import bm25_idf_py
 from ..functions.tokenizer import tokenize_text
 from .fuzzy import (
     MAX_EDITS,
@@ -46,15 +48,13 @@ from .fuzzy import (
     wildcard_to_like,
 )
 from .query import (
+    RESULT_SCHEMA,
     IndexHandle,
-    _filter_terms,
-    _segment_granularity,
-    decode_segment_postings,
+    _query_weights,
+    _serve_segments,
     search_weighted,
 )
 from .score import query_terms_df
-
-RESULT_SCHEMA = "query_id INT, doc_id LONG, score DOUBLE"
 
 
 def _dict_df(spark: SparkSession, index: IndexHandle) -> DataFrame:
@@ -205,114 +205,61 @@ def search_weighted_all(
     contract (all qualifying docs, unranked); rank with the caller's
     window exactly like minscore results.
     """
+    score_terms = sorted({t for w in weights.values() for t in w})
+    if not score_terms:
+        return spark.createDataFrame([], RESULT_SCHEMA)
     msm = msm or {}
     must = must or {}
     n_must = n_must or {}
     must_not = must_not or {}
-    empty = spark.createDataFrame([], RESULT_SCHEMA)
-    score_terms = sorted({t for w in weights.values() for t in w})
     extra_terms = sorted(
         {t for ts in must_not.values() for t in ts} - set(score_terms)
     )
-    if not score_terms:
-        return empty
 
-    if use_merged is None:
-        use_merged = index.merged_is_current()
-    elif use_merged and not index.merged_is_current():
-        raise ValueError(
-            "merged index is stale: segments were appended after the last "
-            "merge_segments(); re-merge or search with use_merged=False"
-        )
-    base = index.merged_path if use_merged else index.segments_path
-    postings = _filter_terms(
-        spark, spark.read.parquet(base), score_terms + extra_terms
-    )
-    postings = _segment_granularity(spark, postings, index, "seg_id")
-
-    avgdl = index.avgdl
-    _del = index.deleted()
-    bc = spark.sparkContext.broadcast(
-        {"w": weights, "msm": msm, "must": must, "n_must": n_must,
-         "must_not": must_not,
-         "denied": _del if len(_del) else None}
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .wand import _tf_norm_np
-
-        q = bc.value
-        denied = q["denied"]
-        decoded = decode_segment_postings(pdf)
-        norm_cache: dict[str, np.ndarray] = {}
-
-        def norm_of(t: str) -> np.ndarray:
-            arr = norm_cache.get(t)
-            if arr is None:
-                _doc, tf, dl = decoded[t]
-                arr = _tf_norm_np(tf, dl, avgdl)
-                norm_cache[t] = arr
-            return arr
-
-        out_q, out_d, out_s = [], [], []
-        for qid, wmap in q["w"].items():
-            present = [t for t in sorted(wmap) if t in decoded]
-            if not present:
-                continue
-            cand = np.unique(
-                np.concatenate([decoded[t][0] for t in present])
-            )
-            scores = np.zeros(len(cand), dtype=np.float64)
-            nmatch = np.zeros(len(cand), dtype=np.int64)
-            for t in present:
-                doc = decoded[t][0]
-                pos = np.searchsorted(cand, doc)  # doc ⊆ cand
-                np.add.at(scores, pos, wmap[t] * norm_of(t))
-                nmatch[pos] += 1
-            keep = np.ones(len(cand), dtype=bool)
-            if denied is not None:
-                # liveDocs mask (operators/deletes.py contract): tombstoned
-                # docs never emit. Applied as a keep-gate — NOT by shrinking
-                # cand — because the scoring/must searchsorted calls above
-                # and below rely on every term's doc list being ⊆ cand.
-                m = np.searchsorted(denied, cand)
-                m[m == len(denied)] = 0
-                keep &= denied[m] != cand
-            if qid in q["msm"]:
-                keep &= nmatch >= q["msm"][qid]
-            req = q["n_must"].get(qid, 0)
-            if req:
-                mcount = np.zeros(len(cand), dtype=np.int64)
-                for t in q["must"].get(qid, ()):
-                    if t in decoded:
-                        # must ⊆ scoring terms, so doc ⊆ cand here too.
-                        mcount[np.searchsorted(cand, decoded[t][0])] += 1
-                keep &= mcount >= req
-            for t in q["must_not"].get(qid, ()):
+    def per_query(qid, q, seg):
+        wmap, min_match, must_q, req, must_not_q = q
+        decoded = seg.decoded
+        present = [t for t in sorted(wmap) if t in decoded]
+        if not present:
+            return None
+        cand = np.unique(np.concatenate([decoded[t][0] for t in present]))
+        scores = np.zeros(len(cand), dtype=np.float64)
+        nmatch = np.zeros(len(cand), dtype=np.int64)
+        for t in present:
+            pos = np.searchsorted(cand, decoded[t][0])  # doc ⊆ cand
+            np.add.at(scores, pos, wmap[t] * seg.norm(t))
+            nmatch[pos] += 1
+        # liveDocs as a keep-gate — NOT by shrinking cand — because the
+        # scoring/must searchsorted calls rely on every term's doc list
+        # being ⊆ cand.
+        keep = seg.live(cand)
+        if min_match is not None:
+            keep &= nmatch >= min_match
+        if req:
+            mcount = np.zeros(len(cand), dtype=np.int64)
+            for t in must_q:
                 if t in decoded:
-                    # Exclude cand docs present in the must_not posting
-                    # list (sorted-array membership, the createBits shape).
-                    doc = decoded[t][0]
-                    m = np.searchsorted(doc, cand)
-                    m_c = np.minimum(m, len(doc) - 1)
-                    keep &= ~(doc[m_c] == cand)
-            if keep.any():
-                out_q.append(np.full(int(keep.sum()), qid, dtype=np.int32))
-                out_d.append(cand[keep])
-                out_s.append(scores[keep])
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype=np.int32),
-                 "doc_id": pd.Series([], dtype=np.int64),
-                 "score": pd.Series([], dtype=np.float64)}
-            )
-        return pd.DataFrame(
-            {"query_id": np.concatenate(out_q),
-             "doc_id": np.concatenate(out_d),
-             "score": np.concatenate(out_s)}
-        )
+                    # must ⊆ scoring terms, so doc ⊆ cand here too.
+                    mcount[np.searchsorted(cand, decoded[t][0])] += 1
+            keep &= mcount >= req
+        for t in must_not_q:
+            if t in decoded:
+                # Exclude cand docs present in the must_not posting list
+                # (sorted-array membership, the createBits shape).
+                doc = decoded[t][0]
+                m = np.minimum(np.searchsorted(doc, cand), len(doc) - 1)
+                keep &= ~(doc[m] == cand)
+        return cand[keep], scores[keep]
 
-    return postings.groupBy("seg_id").applyInPandas(kernel, RESULT_SCHEMA)
+    payload = {
+        qid: (wmap, msm.get(qid), must.get(qid, ()), n_must.get(qid, 0),
+              must_not.get(qid, ()))
+        for qid, wmap in weights.items()
+    }
+    return _serve_segments(
+        spark, index, score_terms + extra_terms, payload, per_query,
+        use_merged=use_merged,
+    )
 
 
 def search_msm(
@@ -324,7 +271,7 @@ def search_msm(
     """Index-served minimum_should_match: BM25 scoring restricted to docs
     matching >= msm[query_id] DISTINCT query terms — frame-identical to
     msm_scores pre-ranking. queries: (query_id, query_text)."""
-    weights = _exact_weights(spark, index, queries)
+    weights, _ks, _terms = _query_weights(spark, index, queries)
     return search_weighted_all(spark, index, weights, msm=msm)
 
 
@@ -343,7 +290,7 @@ def search_boolean(
             + bool_queries["should_text"].fillna("")
         )
     )[["query_id", "query_text"]]
-    weights = _exact_weights(spark, index, pooled)
+    weights, _ks, _terms = _query_weights(spark, index, pooled)
     must: dict[int, list[str]] = {}
     n_must: dict[int, int] = {}
     must_not: dict[int, list[str]] = {}
@@ -360,30 +307,3 @@ def search_boolean(
         spark, index, weights, must=must, n_must=n_must, must_not=must_not
     )
 
-
-def _exact_weights(
-    spark: SparkSession, index: IndexHandle, queries: pd.DataFrame
-) -> dict[int, dict[str, float]]:
-    """qtf * idf weights from the persisted dictionary (no expansion) —
-    `_query_weights` without the k plumbing, via one term-pruned dict
-    scan."""
-    from collections import Counter
-
-    qtfs = {
-        int(q.query_id): Counter(tokenize_text(q.query_text))
-        for q in queries.itertuples(index=False)
-    }
-    all_terms = sorted({t for c in qtfs.values() for t in c})
-    if not all_terms:
-        return {qid: {} for qid in qtfs}
-    from .query import lookup_term_dfs
-
-    global_df = lookup_term_dfs(spark, index.dict_path, all_terms)
-    return {
-        qid: {
-            t: float(c) * bm25_idf_py(global_df[t], index.n_docs)
-            for t, c in qtf.items()
-            if t in global_df
-        }
-        for qid, qtf in qtfs.items()
-    }

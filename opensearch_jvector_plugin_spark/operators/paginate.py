@@ -12,7 +12,8 @@ relation; the cursor cut is a codegen'd predicate, and the page cut is the
 same bounded per-query window every top-k in the engine uses. Nothing
 re-scores: `scored` can be the output of any scoring operator (brute-force,
 indexed, multi_match), so a pager over a 10^12-turn corpus only pays the
-scoring plan once per page plus a broadcast.
+scoring plan once per page plus a broadcast (`page_cursors` collects the
+cursors, so no page's plan nests an earlier one).
 """
 
 from __future__ import annotations
@@ -57,8 +58,12 @@ def page_cursors(page: DataFrame, ks: DataFrame) -> DataFrame:
     """Extract the search_after cursor from a ranked page: the sort values
     of each query's LAST hit (rank == page size). A query whose page came
     back short has no further results — it yields no cursor, so the next
-    `search_after` round naturally drops it."""
-    return (
+    `search_after` round naturally drops it.
+
+    The cursors (one row per live query) are collected into a literal
+    frame: a lazy one would nest this page's plan, scoring included, into
+    the next page's, so page N would re-run all N-1 earlier pages."""
+    cursors = (
         page.join(F.broadcast(ks), "query_id")
         .where(F.col("rank") == F.col("_k"))
         .select(
@@ -67,4 +72,7 @@ def page_cursors(page: DataFrame, ks: DataFrame) -> DataFrame:
             F.col("doc_id").alias("after_doc_id"),
             "_k",
         )
+    )
+    return page.sparkSession.createDataFrame(
+        cursors.collect(), cursors.schema
     )

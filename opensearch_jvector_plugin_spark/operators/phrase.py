@@ -48,11 +48,9 @@ from pyspark.sql import functions as F
 from ..functions.bm25 import bm25_idf, bm25_idf_py, bm25_tf_norm
 from ..functions.tokenizer import tokenize_col, tokenize_text
 from .query import (
+    RESULT_SCHEMA,
     IndexHandle,
-    _filter_terms,
-    _query_weights,
-    _segment_granularity,
-    decode_segment_postings,
+    _serve_segments,
     lookup_term_dfs,
 )
 from .score import query_terms_df
@@ -598,21 +596,21 @@ def search_phrase(
     terms, so verification can only shrink phase 1's output — never miss.
     """
     qs = _compile_phrases(queries)
-    empty = spark.createDataFrame([], "query_id INT, doc_id LONG, score DOUBLE")
+    empty = spark.createDataFrame([], RESULT_SCHEMA)
     if not qs:
         return empty
-    weights, _ks, terms = _query_weights(spark, index, queries)
-    if not terms:
-        return empty
-    # Only phrases whose EVERY term exists in the dict can match; their
-    # weight is the occurrence-order idf fold over the dict dfs.
+    # One dict lookup for every phrase term. Only phrases whose EVERY term
+    # exists in the dict can match; their weight is the occurrence-order
+    # idf fold over the dict dfs.
+    dfs = lookup_term_dfs(
+        spark, index.dict_path, sorted({t for _q, ts in qs for t in ts})
+    )
     n_docs = index.n_docs
     live: dict[int, list[str]] = {}
     wmap: dict[int, float] = {}
     for qid, ts in qs:
-        if all(t in weights.get(qid, {}) for t in set(ts)):
+        if all(t in dfs for t in ts):
             live[qid] = ts
-            dfs = lookup_term_dfs(spark, index.dict_path, sorted(set(ts)))
             # occurrence-order left fold (see module docstring)
             w = bm25_idf_py(dfs[ts[0]], n_docs)
             for t in ts[1:]:
@@ -621,44 +619,16 @@ def search_phrase(
     if not live:
         return empty
 
-    use_merged = index.merged_is_current()
-    base = index.merged_path if use_merged else index.segments_path
+    def per_query(qid, ts, seg):
+        # liveDocs mask: tombstoned docs are not phrase candidates.
+        cand = _conjunction_docs(seg.decoded, ts)
+        cand = cand[seg.live(cand)]
+        return cand, np.zeros(len(cand))
+
     needed = sorted({t for ts in live.values() for t in ts})
-    postings = _filter_terms(spark, spark.read.parquet(base), needed)
-    postings = _segment_granularity(spark, postings, index, "seg_id")
-    _del = index.deleted()
-    bc_live = spark.sparkContext.broadcast(
-        (live, _del if len(_del) else None)
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        live_map, denied = bc_live.value
-        decoded = decode_segment_postings(pdf)
-        out_q, out_d = [], []
-        for qid, ts in live_map.items():
-            cand = _conjunction_docs(decoded, ts)
-            if denied is not None and len(cand):
-                # liveDocs mask: tombstoned docs are not phrase candidates
-                # (same sorted-membership test as the MaxScore kernel's).
-                pos = np.searchsorted(denied, cand)
-                pos[pos == len(denied)] = 0
-                cand = cand[denied[pos] != cand]
-            if len(cand):
-                out_q.append(np.full(len(cand), qid, dtype=np.int32))
-                out_d.append(cand)
-        if not out_q:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype=np.int32),
-                    "doc_id": pd.Series([], dtype=np.int64),
-                }
-            )
-        return pd.DataFrame(
-            {"query_id": np.concatenate(out_q), "doc_id": np.concatenate(out_d)}
-        )
-
-    cands = postings.groupBy("seg_id").applyInPandas(
-        kernel, "query_id INT, doc_id LONG"
+    # The kernel's placeholder score is dropped: verification scores.
+    cands = _serve_segments(spark, index, needed, live, per_query).select(
+        "query_id", "doc_id"
     )
 
     if toksed is None:

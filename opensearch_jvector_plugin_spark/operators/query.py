@@ -15,6 +15,15 @@ Scale properties:
 - Pre-filter semantics: an optional set of allowed docIDs is applied inside
   the kernel (acceptDocs, JVectorReader.java:128), never after the heap —
   so a filtered query still returns k results when k matches exist.
+
+One serving path (`_serve_segments`), like the reference's one
+`JVectorReader.search`: it picks merged vs raw segments, runs the
+term-pruned scan, broadcasts the compiled queries with the acceptDocs and
+liveDocs arrays, and decodes each segment's postings once for the batch.
+Every index-served text query is one per-query body run there:
+MaxScore top-k (`search_weighted`), radial min_score (`search_min_score`),
+gated full scoring (`indexed_text.search_weighted_all`) and conjunctive
+phrase candidates (`phrase.search_phrase`).
 """
 
 from __future__ import annotations
@@ -34,13 +43,22 @@ from ..functions.bm25 import bm25_idf_py
 from ..functions.tokenizer import tokenize_text
 from ..plans.state import term_df_map
 from .codec import decode_postings
-from .wand import maxscore_topk, minscore_all, term_upper_bound
+from .wand import _tf_norm_np, maxscore_topk, minscore_all, term_upper_bound
 
 RESULT_SCHEMA = "query_id INT, doc_id LONG, score DOUBLE"
+RANKED_SCHEMA = "query_id INT, rank INT, doc_id LONG, score DOUBLE"
 
 # Mirror of the reference's K_MAX validation (KNNQueryBuilder.java:82,
 # 254-257: k must be in (0, 10000]).
 K_MAX = 10_000
+
+
+def _check_ks(ks: dict[int, int]) -> None:
+    for qid, k in ks.items():
+        if k <= 0 or k > K_MAX:
+            raise ValueError(
+                f"query {qid}: k must be in (0, {K_MAX}], got {k}"
+            )
 
 
 @dataclass
@@ -145,11 +163,7 @@ def _query_weights(
         if "k" in queries.columns
         else {}
     )
-    for qid, k in ks.items():
-        if k <= 0 or k > K_MAX:
-            raise ValueError(
-                f"query {qid}: k must be in (0, {K_MAX}], got {k}"
-            )
+    _check_ks(ks)
     all_terms = sorted({t for c in qtfs.values() for t in c})
     if not all_terms:
         return {qid: {} for qid in qtfs}, ks, []
@@ -168,8 +182,7 @@ def _query_weights(
 
 
 def _segment_granularity(
-    spark: SparkSession, postings: DataFrame, index: IndexHandle,
-    group_col: str,
+    spark: SparkSession, postings: DataFrame, index: IndexHandle
 ) -> DataFrame:
     """Set the query-kernel stage's task granularity to ~one segment — but
     only when the index actually has more segments than the default shuffle
@@ -191,7 +204,7 @@ def _segment_granularity(
     par = spark.sparkContext.defaultParallelism
     n_part = min(index.n_segments, 4096)
     if n_part >= 2 * par:
-        return postings.repartition(n_part, group_col)
+        return postings.repartition(n_part, "seg_id")
     return postings
 
 
@@ -244,6 +257,124 @@ def decode_segment_postings(pdf: pd.DataFrame) -> dict[str, tuple]:
     return decoded
 
 
+class _Segment:
+    """One segment's term-pruned postings as every per-query body sees
+    them, decoded once for the whole batch (terms are shared across
+    queries). `allowed` is the acceptDocs pre-filter and `denied` the
+    liveDocs deleted set, both sorted docIDs or None."""
+
+    def __init__(self, pdf: pd.DataFrame, avgdl: float, allowed, denied):
+        self.pdf = pdf
+        self.avgdl = avgdl
+        self.allowed = allowed
+        self.denied = denied
+        self.decoded = decode_segment_postings(pdf)
+        # term -> tf_norm array, shared by every query of the batch (the
+        # MaxScore kernels fill it through their tf_norm_cache argument).
+        self.norm_cache: dict[str, np.ndarray] = {}
+        self._ub_base: dict[str, float] | None = None
+
+    def norm(self, t: str) -> np.ndarray:
+        arr = self.norm_cache.get(t)
+        if arr is None:
+            _doc, tf, dl = self.decoded[t]
+            arr = _tf_norm_np(tf, dl, self.avgdl)
+            self.norm_cache[t] = arr
+        return arr
+
+    def live(self, docs: np.ndarray) -> np.ndarray:
+        """liveDocs mask over sorted docIDs: False where tombstoned
+        (operators/deletes.py contract; sorted-array membership)."""
+        if self.denied is None:
+            return np.ones(len(docs), dtype=bool)
+        m = np.searchsorted(self.denied, docs)
+        m[m == len(self.denied)] = 0
+        return self.denied[m] != docs
+
+    def maxscore_inputs(self, wmap: dict[str, float]):
+        """(postings, weights, upper bounds) of the query's terms present
+        in this segment — the MaxScore kernels' inputs — or None when none
+        is. The idf-free block-max bound of each term is computed once per
+        segment and scaled by each query's weight."""
+        tp = {t: self.decoded[t] for t in wmap if t in self.decoded}
+        if not tp:
+            return None
+        if self._ub_base is None:
+            pdf = self.pdf
+            self._ub_base = {
+                t: term_upper_bound(
+                    1.0, np.asarray(btf, dtype=np.int64),
+                    np.asarray(bdl, dtype=np.int64), self.avgdl,
+                )
+                for t, btf, bdl in zip(
+                    pdf["term"], pdf["block_max_tf"], pdf["block_min_dl"]
+                )
+            }
+        tw = {t: wmap[t] for t in tp}
+        return tp, tw, {t: tw[t] * self._ub_base[t] for t in tp}
+
+
+def _serve_segments(
+    spark: SparkSession,
+    index: IndexHandle,
+    terms,
+    payload: dict,
+    per_query,
+    allowed_docs: np.ndarray | None = None,
+    use_merged: bool | None = None,
+) -> DataFrame:
+    """The one per-segment serving path (JVectorReader.search,
+    JVectorReader.java:108-133): unranked (query_id, doc_id, score) rows.
+
+    `payload` maps query_id -> that query's compiled form; it travels in
+    one broadcast with the acceptDocs (`allowed_docs`) and liveDocs arrays.
+    Per segment, `per_query(qid, payload[qid], seg)` runs for every query
+    over the `_Segment` `seg` and returns (doc_ids, scores), or None for
+    no hits. `use_merged`: None serves the merged index only when it
+    covers every committed segment; True on a stale merge raises."""
+    if use_merged is None:
+        # Appends after a merge make it stale: serving it would silently
+        # drop the new docs.
+        use_merged = index.merged_is_current()
+    elif use_merged and not index.merged_is_current():
+        raise ValueError(
+            "merged index is stale: segments were appended after the last "
+            "merge_segments(); re-merge or search with use_merged=False"
+        )
+    base = index.merged_path if use_merged else index.segments_path
+    postings = _filter_terms(spark, spark.read.parquet(base), terms)
+    postings = _segment_granularity(spark, postings, index)
+
+    deleted = index.deleted()
+    bc = spark.sparkContext.broadcast((
+        payload,
+        None if allowed_docs is None
+        else np.sort(np.asarray(allowed_docs, dtype=np.int64)),
+        deleted if len(deleted) else None,
+    ))
+    avgdl = index.avgdl
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        queries, allowed, denied = bc.value
+        seg = _Segment(pdf, avgdl, allowed, denied)
+        out_q, out_d, out_s = [], [], []
+        for qid, q in queries.items():
+            hit = per_query(qid, q, seg)
+            if hit is not None and len(hit[0]):
+                out_q.append(np.full(len(hit[0]), qid, dtype=np.int32))
+                out_d.append(hit[0])
+                out_s.append(hit[1])
+        if not out_q:
+            return pd.DataFrame({"query_id": np.empty(0, dtype=np.int32),
+                                 "doc_id": np.empty(0, dtype=np.int64),
+                                 "score": np.empty(0, dtype=np.float64)})
+        return pd.DataFrame({"query_id": np.concatenate(out_q),
+                             "doc_id": np.concatenate(out_d),
+                             "score": np.concatenate(out_s)})
+
+    return postings.groupBy("seg_id").applyInPandas(kernel, RESULT_SCHEMA)
+
+
 def search(
     spark: SparkSession,
     index: IndexHandle,
@@ -264,9 +395,8 @@ def search(
     if isinstance(queries, DataFrame):
         queries = queries.toPandas()
     weights, ks, terms = _query_weights(spark, index, queries)
-    empty = spark.createDataFrame([], "query_id INT, rank INT, doc_id LONG, score DOUBLE")
     if not terms:
-        return empty
+        return spark.createDataFrame([], RANKED_SCHEMA)
     return search_weighted(
         spark, index, weights, ks, allowed_docs=allowed_docs,
         use_merged=use_merged, tie_epsilon=tie_epsilon,
@@ -291,91 +421,26 @@ def search_weighted(
     (JVectorReader.java:108-133 — the reference never rescans source data
     to serve a query). Returns (query_id, rank, doc_id, score)."""
     terms = sorted({t for w in weights.values() for t in w})
-    empty = spark.createDataFrame(
-        [], "query_id INT, rank INT, doc_id LONG, score DOUBLE"
-    )
     if not terms:
-        return empty
-    for qid, k in ks.items():
-        if k <= 0 or k > K_MAX:
-            raise ValueError(
-                f"query {qid}: k must be in (0, {K_MAX}], got {k}"
-            )
+        return spark.createDataFrame([], RANKED_SCHEMA)
+    _check_ks(ks)
 
-    if use_merged is None:
-        # Auto mode: prefer the merged index only when it covers every
-        # committed segment (appends after a merge make it stale).
-        use_merged = index.merged_is_current()
-    elif use_merged and not index.merged_is_current():
-        raise ValueError(
-            "merged index is stale: segments were appended after the last "
-            "merge_segments(); re-merge or search with use_merged=False"
+    def per_query(qid, q, seg: _Segment):
+        wmap, k = q
+        inputs = seg.maxscore_inputs(wmap)
+        if inputs is None:
+            return None
+        return maxscore_topk(
+            *inputs, k, seg.avgdl, allowed=seg.allowed,
+            tf_norm_cache=seg.norm_cache, tie_epsilon=tie_epsilon,
+            denied=seg.denied,
         )
-    base = index.merged_path if use_merged else index.segments_path
-    postings = _filter_terms(spark, spark.read.parquet(base), terms)
-    group_col = "seg_id"
-    postings = _segment_granularity(spark, postings, index, group_col)
 
-    avgdl = index.avgdl
-    bc_weights = spark.sparkContext.broadcast(weights)
-    bc_allowed = spark.sparkContext.broadcast(
-        np.sort(np.asarray(allowed_docs, dtype=np.int64))
-        if allowed_docs is not None
-        else None
+    per_segment = _serve_segments(
+        spark, index, terms,
+        {qid: (wmap, ks[qid]) for qid, wmap in weights.items()},
+        per_query, allowed_docs=allowed_docs, use_merged=use_merged,
     )
-    _del = index.deleted()
-    bc_denied = spark.sparkContext.broadcast(_del if len(_del) else None)
-    bc_ks = spark.sparkContext.broadcast(ks)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        w_all = bc_weights.value
-        allowed = bc_allowed.value
-        denied = bc_denied.value
-        ks_map = bc_ks.value
-        decoded = decode_segment_postings(pdf)
-        meta: dict[str, tuple] = {}
-        for term, btf, bdl in zip(
-            pdf["term"], pdf["block_max_tf"], pdf["block_min_dl"]
-        ):
-            meta[term] = (
-                np.asarray(btf, dtype=np.int64),
-                np.asarray(bdl, dtype=np.int64),
-            )
-        out_q, out_d, out_s = [], [], []
-        # Query-independent per-term state shared across the whole batch:
-        # tf_norm arrays and idf-free upper bounds computed once per segment.
-        norm_cache: dict[str, np.ndarray] = {}
-        ub_base = {
-            t: term_upper_bound(1.0, meta[t][0], meta[t][1], avgdl)
-            for t in decoded
-        }
-        for qid, wmap in w_all.items():
-            tp = {t: decoded[t] for t in wmap if t in decoded}
-            if not tp:
-                continue
-            tw = {t: wmap[t] for t in tp}
-            ubs = {t: tw[t] * ub_base[t] for t in tp}
-            docs, scores = maxscore_topk(
-                tp, tw, ubs, ks_map[qid], avgdl, allowed=allowed,
-                tf_norm_cache=norm_cache, tie_epsilon=tie_epsilon,
-                denied=denied,
-            )
-            out_q.append(np.full(len(docs), qid, dtype=np.int32))
-            out_d.append(docs)
-            out_s.append(scores)
-        if not out_q:
-            return pd.DataFrame({"query_id": pd.Series([], dtype=np.int32),
-                                 "doc_id": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
-
-    per_segment = postings.groupBy(group_col).applyInPandas(kernel, RESULT_SCHEMA)
 
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     ks_df = spark.createDataFrame(
@@ -458,106 +523,28 @@ def search_min_score(
     `queries` columns: query_id, query_text, min_score.
     """
     weights, _, terms = _query_weights(spark, index, queries)
-    empty = spark.createDataFrame(
-        [], "query_id INT, rank INT, doc_id LONG, score DOUBLE"
-    )
     if not terms:
-        return empty
+        return spark.createDataFrame([], RANKED_SCHEMA)
     ms = {
         int(q.query_id): float(q.min_score)
         for q in queries.itertuples(index=False)
     }
 
-    if use_merged is None:
-        # Auto mode mirrors search(): serve the merged index only when it
-        # covers every committed segment — appends after a merge make it
-        # stale and would silently drop the new docs from radial results.
-        use_merged = index.merged_is_current()
-    elif use_merged and not index.merged_is_current():
-        raise ValueError(
-            "merged index is stale: segments were appended after the last "
-            "merge_segments(); re-merge or search with use_merged=False"
+    def per_query(qid, q, seg: _Segment):
+        wmap, min_score = q
+        inputs = seg.maxscore_inputs(wmap)
+        if inputs is None:
+            return None
+        return minscore_all(
+            *inputs, min_score, seg.avgdl, allowed=seg.allowed,
+            tf_norm_cache=seg.norm_cache, denied=seg.denied,
         )
-    base = index.merged_path if use_merged else index.segments_path
-    postings = _filter_terms(spark, spark.read.parquet(base), terms)
-    # Same per-segment task granularity as search() (_segment_granularity).
-    postings = _segment_granularity(spark, postings, index, "seg_id")
 
-    avgdl = index.avgdl
-    bc_weights = spark.sparkContext.broadcast(weights)
-    bc_ms = spark.sparkContext.broadcast(ms)
-    bc_allowed = spark.sparkContext.broadcast(
-        np.sort(np.asarray(allowed_docs, dtype=np.int64))
-        if allowed_docs is not None
-        else None
+    per_segment = _serve_segments(
+        spark, index, terms,
+        {qid: (wmap, ms[qid]) for qid, wmap in weights.items()},
+        per_query, allowed_docs=allowed_docs, use_merged=use_merged,
     )
-    _del = index.deleted()
-    bc_denied = spark.sparkContext.broadcast(_del if len(_del) else None)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .codec import decode_postings_batch
-
-        w_all = bc_weights.value
-        ms_map = bc_ms.value
-        allowed = bc_allowed.value
-        denied = bc_denied.value
-        decoded: dict[str, tuple] = {}
-        meta: dict[str, tuple] = {}
-        if len(pdf) and (
-            "codec" not in pdf.columns or (pdf["codec"].to_numpy() == 1).all()
-        ):
-            lists = decode_postings_batch(
-                list(pdf["blob"]), pdf["df"].to_numpy(),
-                pdf["checksum"].to_numpy(),
-            )
-            for term, dec in zip(pdf["term"], lists):
-                decoded[term] = (dec.doc_ids, dec.tfs, dec.dls)
-        else:
-            for r in pdf.itertuples(index=False):
-                dec = decode_postings(
-                    r.blob, int(r.df), int(r.tf_offset), int(r.dl_offset),
-                    int(r.checksum), codec=int(getattr(r, "codec", 1)),
-                )
-                decoded[r.term] = (dec.doc_ids, dec.tfs, dec.dls)
-        for term, btf, bdl in zip(
-            pdf["term"], pdf["block_max_tf"], pdf["block_min_dl"]
-        ):
-            meta[term] = (
-                np.asarray(btf, dtype=np.int64),
-                np.asarray(bdl, dtype=np.int64),
-            )
-        norm_cache: dict[str, np.ndarray] = {}
-        ub_base = {
-            t: term_upper_bound(1.0, meta[t][0], meta[t][1], avgdl)
-            for t in decoded
-        }
-        out_q, out_d, out_s = [], [], []
-        for qid, wmap in w_all.items():
-            tp = {t: decoded[t] for t in wmap if t in decoded}
-            if not tp:
-                continue
-            tw = {t: wmap[t] for t in tp}
-            ubs = {t: tw[t] * ub_base[t] for t in tp}
-            docs, scores = minscore_all(
-                tp, tw, ubs, ms_map[qid], avgdl, allowed=allowed,
-                tf_norm_cache=norm_cache, denied=denied,
-            )
-            out_q.append(np.full(len(docs), qid, dtype=np.int32))
-            out_d.append(docs)
-            out_s.append(scores)
-        if not out_q:
-            return pd.DataFrame({"query_id": pd.Series([], dtype=np.int32),
-                                 "doc_id": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
-
-    per_segment = postings.groupBy("seg_id").applyInPandas(kernel, RESULT_SCHEMA)
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return per_segment.withColumn(
         "rank", F.row_number().over(w).cast("int")

@@ -59,7 +59,13 @@ def test_pages_partition_the_full_ranking(spark, corpus_queries):
     )
     seen = []
     offsets = {int(r.query_id): 0 for r in queries.select("query_id").collect()}
+    plan_sizes = []
     for _page_no in range(40):
+        # Cursors are literal rows, so no page's plan nests the pages
+        # before it: page N's plan is no larger than page 2's.
+        plan_sizes.append(
+            len(page._jdf.queryExecution().analyzed().treeString().splitlines())
+        )
         pdf = page.toPandas()
         if pdf.empty:
             break
@@ -74,6 +80,8 @@ def test_pages_partition_the_full_ranking(spark, corpus_queries):
         page = search_after(scored, cursors)
     else:
         pytest.fail("pagination did not terminate")
+    assert len(plan_sizes) > 3
+    assert max(plan_sizes[2:]) <= plan_sizes[1]
 
     got = (
         pd.concat(seen)[["query_id", "global_rank", "doc_id", "score"]]

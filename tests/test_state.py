@@ -17,7 +17,7 @@ import pytest
 from test_entry_oracles import SF_DIRS, normalize
 
 from opensearch_jvector_plugin_spark import entry_queries as eq
-from opensearch_jvector_plugin_spark.operators import query
+from opensearch_jvector_plugin_spark.operators import phrase, query
 from opensearch_jvector_plugin_spark.plans import state
 
 
@@ -111,25 +111,31 @@ def lookup_jobs(spark, monkeypatch):
             sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
             counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
 
-    monkeypatch.setattr(query, "lookup_term_dfs", counted)
-    monkeypatch.setattr(eq, "lookup_term_dfs", counted)
+    for mod in (query, eq, phrase):
+        monkeypatch.setattr(mod, "lookup_term_dfs", counted)
     return counts
 
 
 @pytest.mark.parametrize(
     "name",
-    ["bm25_topk", "bm25_synonyms", "bm25_boolean", "transcript_bm25_indexed"],
+    ["bm25_topk", "bm25_synonyms", "bm25_boolean", "transcript_bm25_indexed",
+     "bm25_phrase_indexed", "bm25_msm_indexed", "bm25_boolean_indexed"],
 )
 def test_large_dict_takes_distributed_scan(
     name, spark, monkeypatch, lookup_jobs
 ):
     fn = eq.QUERIES[name]
+    # The indexed phrase query makes one dictionary lookup for all its
+    # phrase terms, on either path.
+    one_lookup = name == "bm25_phrase_indexed"
     driver = normalize(fn(spark, SF_DIRS[0]).toPandas())
     assert lookup_jobs and not any(lookup_jobs)
+    assert not one_lookup or len(lookup_jobs) == 1
     lookup_jobs.clear()
     monkeypatch.setattr(state, "DICT_DRIVER_MAX_BYTES", 0)
     scanned = normalize(fn(spark, SF_DIRS[0]).toPandas())
     assert lookup_jobs and all(lookup_jobs)
+    assert not one_lookup or len(lookup_jobs) == 1
     pd.testing.assert_frame_equal(driver, scanned)
 
 

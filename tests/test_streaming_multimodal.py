@@ -291,6 +291,41 @@ def test_stale_merge_detected_after_append(spark, small_corpus_pdf, tmp_path):
     with _pytest.raises(ValueError, match="stale"):
         search_min_score(spark, idx, rq, use_merged=True).count()
 
+    # The gated and phrase kernels serve through the same path: auto mode
+    # reads the raw segments and finds the appended docs too.
+    from opensearch_jvector_plugin_spark.operators.indexed_text import (
+        search_msm,
+        search_weighted_all,
+    )
+    from opensearch_jvector_plugin_spark.operators.phrase import (
+        msm_scores,
+        phrase_scores,
+        search_phrase,
+    )
+    from tests.test_phrase import _norm
+
+    corpus = spark.createDataFrame(small_corpus_pdf)
+    mq = pd.DataFrame([(0, "term0001 term0002 term0003"),
+                       (1, "term0002 term0010")],
+                      columns=["query_id", "query_text"])
+    msm = {0: 2, 1: 2}
+    got_m = _norm(search_msm(spark, idx, mq, msm).toPandas())
+    want_m = _norm(msm_scores(corpus, spark.createDataFrame(mq), msm).toPandas())
+    pd.testing.assert_frame_equal(got_m, want_m)
+    assert (got_m["doc_id"] >= 1000).any()
+
+    pq = pd.DataFrame([(0, "term0001 term0002"), (1, "term0006 term0006")],
+                      columns=["query_id", "query_text"])
+    got_p = _norm(search_phrase(spark, idx, corpus, pq).toPandas())
+    want_p = _norm(phrase_scores(corpus, pq).toPandas())
+    pd.testing.assert_frame_equal(got_p, want_p)
+    assert (got_p["doc_id"] >= 1000).any()
+
+    with _pytest.raises(ValueError, match="stale"):
+        search_weighted_all(
+            spark, idx, {0: {"term0001": 1.0}}, use_merged=True
+        ).count()
+
     # Re-merging restores merged serving.
     merge_segments(spark, load_index(d))
     got2 = search(spark, load_index(d), queries, use_merged=True).toPandas()
