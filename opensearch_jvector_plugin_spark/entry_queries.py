@@ -4439,10 +4439,28 @@ FROM base
 """
 
 
+# The extended_stats projection over b(query_id, count, min, max, sum,
+# sum_of_squares). Spark computes avg/variance from the same exact sums
+# with the identical expression order (sumsq/n - (sum/n)^2) — bit-equal
+# doubles on both engines before the round-6 projection — and clamps a
+# rounding-negative variance to 0 the same way (DuckDB's sqrt of a
+# negative raises).
+EXTENDED_STATS_SELECT_SQL = """
+SELECT query_id, count, min, max, sum, sum_of_squares,
+       round(sum / count, 6) AS avg,
+       round(var, 6) AS variance,
+       round(sqrt(var), 6) AS std_deviation
+FROM (
+  SELECT *, CASE WHEN v < 0 THEN 0 ELSE v END AS var
+  FROM (
+    SELECT *, sum_of_squares / count - (sum / count) * (sum / count) AS v
+    FROM b
+  )
+)
+"""
+
+
 def _extended_stats_sql() -> str:
-    # Spark computes avg/variance from the same exact integer sums with
-    # the identical expression order (sumsq/n - (sum/n)^2) — bit-equal
-    # doubles on both engines before the round-6 projection.
     return f"""{_agg_prefix_sql()},
 b AS (
   SELECT query_id, count(turn_idx)::BIGINT AS count,
@@ -4450,15 +4468,7 @@ b AS (
          sum(turn_idx)::DOUBLE AS sum,
          sum(turn_idx * turn_idx)::DOUBLE AS sum_of_squares
   FROM j GROUP BY query_id
-)
-SELECT query_id, count, min, max, sum, sum_of_squares,
-       round(sum / count, 6) AS avg,
-       round(sum_of_squares / count - (sum / count) * (sum / count), 6)
-         AS variance,
-       round(sqrt(sum_of_squares / count - (sum / count) * (sum / count)), 6)
-         AS std_deviation
-FROM b
-"""
+){EXTENDED_STATS_SELECT_SQL}"""
 
 
 def _date_histogram_sql() -> str:

@@ -138,7 +138,12 @@ def extended_stats_agg(
     """extended_stats aggregation: the stats set plus sum_of_squares,
     population variance and std_deviation, computed exactly as OpenSearch
     documents them (variance = sumsq/n - mean^2) from the same one
-    hit-sized groupBy. NULL metric values are excluded throughout."""
+    hit-sized groupBy. NULL metric values are excluded throughout.
+
+    A rounding error can make the variance of equal values a tiny negative
+    number (three 0.1s give -1.7e-18); like InternalExtendedStats
+    .getVariance it is clamped to 0, and std_deviation is the root of the
+    clamped value, not NaN."""
     m = F.col(field)
     base = (
         _hit_attrs(hits, attrs, [field])
@@ -152,7 +157,8 @@ def extended_stats_agg(
         )
     )
     mean = F.col("sum") / F.col("count")
-    var = F.col("sum_of_squares") / F.col("count") - mean * mean
+    raw = F.col("sum_of_squares") / F.col("count") - mean * mean
+    var = F.when(raw < 0, F.lit(0.0)).otherwise(raw)
     return base.select(
         "query_id", "count", "min", "max", "sum", "sum_of_squares",
         mean.alias("avg"),

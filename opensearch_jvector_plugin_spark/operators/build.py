@@ -47,11 +47,13 @@ from ..functions.tokenizer import TOKENIZER_VERSION
 from .codec import CODEC_VERSION
 from .segment import encode_segment
 
+# The postings files' schema (seg_id is the hive partition column). The
+# distributed query scan reads with it, so it pays no schema-inference job.
 POSTINGS_SPARK_SCHEMA = (
     "seg_id INT, term STRING, df INT, ctf LONG, max_tf INT, "
     "tf_offset INT, dl_offset INT, checksum LONG, blob BINARY, "
     "block_last_doc ARRAY<LONG>, block_max_tf ARRAY<INT>, "
-    "block_min_dl ARRAY<INT>"
+    "block_min_dl ARRAY<INT>, codec INT"
 )
 
 SUMMARY_SCHEMA = (

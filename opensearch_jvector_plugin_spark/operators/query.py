@@ -8,22 +8,33 @@ Scale properties:
 - The postings scan is filtered by `term isin (query terms)` — a Parquet
   predicate pushdown, so a 100 TB index reads only the row groups containing
   query terms (plus dictionary pages). Same for the global dict lookup.
-- Query weights/stats travel to executors as one small broadcast (the
-  QuantizationStateCache analog).
-- Per-segment top-k uses k' = k: exact for the global reduce (per-partition
-  heaps -> union -> window rank), the ResultUtil.reduceToTopK shape.
+- Two executors, chosen once per call from one bound (the reference
+  searches segments inside the shard process; KNNConcurrentSearchRequest
+  Decider picks how). A call whose terms' sum(df) is at most
+  `LOCAL_SERVE_POSTINGS` (the postings the driver reads and decodes, so
+  also its memory) runs in the driver: a pyarrow term-filtered read, the
+  per-segment body per segment, the global reduce in pandas and a local
+  result frame — no Spark job. Any other call (more postings, or a
+  dictionary over the driver-read size) runs as Spark jobs over the
+  fixed-schema scan.
+- On Spark, query weights/stats travel to executors as one small broadcast
+  (the QuantizationStateCache analog).
+- Per-segment top-k uses k' = k: exact for the global reduce (per-segment
+  heaps -> union -> rank), the ResultUtil.reduceToTopK shape.
 - Pre-filter semantics: an optional set of allowed docIDs is applied inside
   the kernel (acceptDocs, JVectorReader.java:128), never after the heap —
   so a filtered query still returns k results when k matches exist.
 
 One serving path (`_serve_segments`), like the reference's one
-`JVectorReader.search`: it picks merged vs raw segments, runs the
-term-pruned scan, broadcasts the compiled queries with the acceptDocs and
-liveDocs arrays, and decodes each segment's postings once for the batch.
-Every index-served text query is one per-query body run there:
-MaxScore top-k (`search_weighted`), radial min_score (`search_min_score`),
-gated full scoring (`indexed_text.search_weighted_all`) and conjunctive
-phrase candidates (`phrase.search_phrase`).
+`JVectorReader.search`: it picks merged vs raw segments and the executor,
+runs the term-pruned read, hands the compiled queries with the acceptDocs
+and liveDocs arrays to one per-segment body (`_segment_kernel`) that
+decodes each segment's postings once for the batch, and applies the global
+reduce (pandas or a Spark window, side by side). Every index-served text
+query is one per-query body run there: MaxScore top-k (`search_weighted`),
+radial min_score (`search_min_score`), gated full scoring
+(`indexed_text.search_weighted_all`) and conjunctive phrase candidates
+(`phrase.search_phrase`).
 """
 
 from __future__ import annotations
@@ -35,6 +46,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -42,11 +54,27 @@ from pyspark.sql import functions as F
 from ..functions.bm25 import bm25_idf_py
 from ..functions.tokenizer import tokenize_text
 from ..plans.state import term_df_map
+from .build import POSTINGS_SPARK_SCHEMA
 from .codec import decode_postings
 from .wand import _tf_norm_np, maxscore_topk, minscore_all, term_upper_bound
 
 RESULT_SCHEMA = "query_id INT, doc_id LONG, score DOUBLE"
 RANKED_SCHEMA = "query_id INT, rank INT, doc_id LONG, score DOUBLE"
+
+# A `_serve_segments` call whose terms' sum(df) is at most this many
+# postings runs in the driver: the same per-segment body over a pyarrow
+# term-filtered read, the global reduce in pandas, and a local result
+# frame, so it launches no Spark job. sum(df) is the rows the driver reads
+# and decodes (each term once per segment, whatever the batch size), so it
+# bounds driver memory. Measured crossover (scripts/serve_crossover.py: 4
+# cores, warm, aligned 5-segment indexes of 30k and 300k turns,
+# search().collect(), median of 3): every measured call up to sum(df) 5.3M
+# ran faster in the driver (one query at 5.3M: 1.44 s against 1.94 s on
+# Spark; 100 queries at 4.8M: 1.24 s against 2.35 s; 4000 queries at 1.19M:
+# 4.83 s against 5.52 s), and Spark won from 500 queries at 8.0M (3.34 s
+# against 3.93 s), its per-segment parallelism beating the driver's one
+# thread. The bound is the power of two under the last driver win.
+LOCAL_SERVE_POSTINGS = 1 << 22
 
 # Mirror of the reference's K_MAX validation (KNNQueryBuilder.java:82,
 # 254-257: k must be in (0, 10000]).
@@ -314,6 +342,94 @@ class _Segment:
         return tp, tw, {t: tw[t] * self._ub_base[t] for t in tp}
 
 
+def _segment_kernel(per_query, avgdl: float):
+    """The per-segment body both executors run: `run(pdf, (payload,
+    allowed, denied))` decodes one segment's term-pruned postings once and
+    runs `per_query` for every query of the payload over it."""
+
+    def run(pdf: pd.DataFrame, ctx) -> pd.DataFrame:
+        queries, allowed, denied = ctx
+        seg = _Segment(pdf, avgdl, allowed, denied)
+        out_q, out_d, out_s = [], [], []
+        for qid, q in queries.items():
+            hit = per_query(qid, q, seg)
+            if hit is not None and len(hit[0]):
+                out_q.append(np.full(len(hit[0]), qid, dtype=np.int32))
+                out_d.append(hit[0])
+                out_s.append(hit[1])
+        if not out_q:
+            return _no_rows()
+        return pd.DataFrame({"query_id": np.concatenate(out_q),
+                             "doc_id": np.concatenate(out_d),
+                             "score": np.concatenate(out_s)})
+
+    return run
+
+
+def _no_rows() -> pd.DataFrame:
+    """An empty RESULT_SCHEMA-typed frame."""
+    return pd.DataFrame({"query_id": np.empty(0, dtype=np.int32),
+                         "doc_id": np.empty(0, dtype=np.int64),
+                         "score": np.empty(0, dtype=np.float64)})
+
+
+def _serves_locally(index: IndexHandle, terms) -> bool:
+    """The executor choice: the driver when the dictionary is driver-sized
+    and sum(df of the terms), the postings the driver reads and decodes,
+    is at most LOCAL_SERVE_POSTINGS."""
+    dfs = term_df_map(index.dict_path)
+    return dfs is not None and (
+        sum(dfs.get(t, 0) for t in terms) <= LOCAL_SERVE_POSTINGS
+    )
+
+
+def _rank_local(rows: pd.DataFrame, rank, tie_epsilon: float) -> pd.DataFrame:
+    """The global reduce in pandas, row for row the same as `_rank_spark`."""
+    rows = rows.sort_values(
+        ["query_id", "score", "doc_id"], ascending=[True, False, True],
+        kind="stable",
+    )
+    rows["rank"] = (rows.groupby("query_id").cumcount() + 1).astype(np.int32)
+    if rank is not True:
+        k = rows["query_id"].map(rank)
+        keep = rows["rank"] <= k
+        if tie_epsilon > 0.0:
+            kth = rows["score"].where(rows["rank"] == k).groupby(
+                rows["query_id"]
+            ).transform("max")
+            keep |= rows["score"] >= kth - tie_epsilon
+        rows = rows[keep]
+    return rows[["query_id", "rank", "doc_id", "score"]]
+
+
+def _rank_spark(
+    spark: SparkSession, rows: DataFrame, rank, tie_epsilon: float
+) -> DataFrame:
+    """The global reduce as a Spark window: rank by (score desc, doc_id
+    asc) per query, then cut at each query's k (`rank` a qid -> k map)."""
+    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    ranked = rows.withColumn("rank", F.row_number().over(w).cast("int"))
+    if rank is not True:
+        ks_df = spark.createDataFrame(
+            [(int(q), int(k)) for q, k in rank.items()], "query_id INT, _k LONG"
+        )
+        ranked = ranked.join(F.broadcast(ks_df), "query_id")
+        if tie_epsilon > 0.0:
+            # Epsilon-extended global cut (matching the kernel's): keep any
+            # row within tie_epsilon of the query's k-th raw score too.
+            kth = F.max(
+                F.when(F.col("rank") == F.col("_k"), F.col("score"))
+            ).over(W.partitionBy("query_id"))
+            ranked = ranked.withColumn("_kth", kth)
+            keep = (F.col("rank") <= F.col("_k")) | (
+                F.col("score") >= F.col("_kth") - F.lit(tie_epsilon)
+            )
+        else:
+            keep = F.col("rank") <= F.col("_k")
+        ranked = ranked.where(keep)
+    return ranked.select("query_id", "rank", "doc_id", "score")
+
+
 def _serve_segments(
     spark: SparkSession,
     index: IndexHandle,
@@ -322,16 +438,25 @@ def _serve_segments(
     per_query,
     allowed_docs: np.ndarray | None = None,
     use_merged: bool | None = None,
+    rank: bool | dict[int, int] | None = None,
+    tie_epsilon: float = 0.0,
 ) -> DataFrame:
     """The one per-segment serving path (JVectorReader.search,
-    JVectorReader.java:108-133): unranked (query_id, doc_id, score) rows.
+    JVectorReader.java:108-133, then ResultUtil.reduceToTopK).
 
-    `payload` maps query_id -> that query's compiled form; it travels in
-    one broadcast with the acceptDocs (`allowed_docs`) and liveDocs arrays.
-    Per segment, `per_query(qid, payload[qid], seg)` runs for every query
-    over the `_Segment` `seg` and returns (doc_ids, scores), or None for
-    no hits. `use_merged`: None serves the merged index only when it
-    covers every committed segment; True on a stale merge raises."""
+    `payload` maps query_id -> that query's compiled form; it travels with
+    the acceptDocs (`allowed_docs`) and liveDocs arrays. Per segment,
+    `per_query(qid, payload[qid], seg)` runs for every query over the
+    `_Segment` `seg` and returns (doc_ids, scores), or None for no hits.
+    `use_merged`: None serves the merged index only when it covers every
+    committed segment; True on a stale merge raises.
+
+    `rank`: None returns the unranked (query_id, doc_id, score) rows; True
+    ranks them all by (score desc, doc_id asc); a qid -> k map also cuts at
+    each query's k, keeping rows within `tie_epsilon` of the k-th score.
+
+    A call under the LOCAL_SERVE_POSTINGS bound runs in the driver and
+    returns a local frame; any other runs as Spark jobs."""
     if use_merged is None:
         # Appends after a merge make it stale: serving it would silently
         # drop the new docs.
@@ -342,37 +467,43 @@ def _serve_segments(
             "merge_segments(); re-merge or search with use_merged=False"
         )
     base = index.merged_path if use_merged else index.segments_path
-    postings = _filter_terms(spark, spark.read.parquet(base), terms)
-    postings = _segment_granularity(spark, postings, index)
-
     deleted = index.deleted()
-    bc = spark.sparkContext.broadcast((
+    ctx = (
         payload,
         None if allowed_docs is None
         else np.sort(np.asarray(allowed_docs, dtype=np.int64)),
         deleted if len(deleted) else None,
-    ))
-    avgdl = index.avgdl
+    )
+    run = _segment_kernel(per_query, index.avgdl)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        queries, allowed, denied = bc.value
-        seg = _Segment(pdf, avgdl, allowed, denied)
-        out_q, out_d, out_s = [], [], []
-        for qid, q in queries.items():
-            hit = per_query(qid, q, seg)
-            if hit is not None and len(hit[0]):
-                out_q.append(np.full(len(hit[0]), qid, dtype=np.int32))
-                out_d.append(hit[0])
-                out_s.append(hit[1])
-        if not out_q:
-            return pd.DataFrame({"query_id": np.empty(0, dtype=np.int32),
-                                 "doc_id": np.empty(0, dtype=np.int64),
-                                 "score": np.empty(0, dtype=np.float64)})
-        return pd.DataFrame({"query_id": np.concatenate(out_q),
-                             "doc_id": np.concatenate(out_d),
-                             "score": np.concatenate(out_s)})
+    if _serves_locally(index, terms):
+        # The same term-pruned rows Spark would scan (pyarrow's default
+        # ignore-prefixes skip `_`/`.` files as Spark does), grouped by
+        # segment in the driver.
+        postings = ds.dataset(base, format="parquet", partitioning="hive")
+        pdf = postings.to_table(
+            filter=ds.field("term").isin(list(terms))
+        ).to_pandas()
+        rows = pd.concat(
+            [run(seg, ctx) for _sid, seg in pdf.groupby("seg_id")]
+            or [_no_rows()],
+            ignore_index=True,
+        )
+        if rank is not None:
+            rows = _rank_local(rows, rank, tie_epsilon)
+        return spark.createDataFrame(
+            rows, RESULT_SCHEMA if rank is None else RANKED_SCHEMA
+        )
 
-    return postings.groupBy("seg_id").applyInPandas(kernel, RESULT_SCHEMA)
+    postings = _filter_terms(
+        spark, spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(base), terms
+    )
+    postings = _segment_granularity(spark, postings, index)
+    bc = spark.sparkContext.broadcast(ctx)
+    rows = postings.groupBy("seg_id").applyInPandas(
+        lambda pdf: run(pdf, bc.value), RESULT_SCHEMA
+    )
+    return rows if rank is None else _rank_spark(spark, rows, rank, tie_epsilon)
 
 
 def search(
@@ -436,32 +567,12 @@ def search_weighted(
             denied=seg.denied,
         )
 
-    per_segment = _serve_segments(
+    return _serve_segments(
         spark, index, terms,
         {qid: (wmap, ks[qid]) for qid, wmap in weights.items()},
         per_query, allowed_docs=allowed_docs, use_merged=use_merged,
+        rank=ks, tie_epsilon=tie_epsilon,
     )
-
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    ks_df = spark.createDataFrame(
-        [(int(q), int(k)) for q, k in ks.items()], "query_id INT, _k LONG"
-    )
-    ranked = per_segment.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).join(F.broadcast(ks_df), "query_id")
-    if tie_epsilon > 0.0:
-        # Epsilon-extended global cut (matching the kernel's): keep any row
-        # within tie_epsilon of the query's k-th raw score too.
-        kth = F.max(
-            F.when(F.col("rank") == F.col("_k"), F.col("score"))
-        ).over(W.partitionBy("query_id"))
-        ranked = ranked.withColumn("_kth", kth)
-        keep = (F.col("rank") <= F.col("_k")) | (
-            F.col("score") >= F.col("_kth") - F.lit(tie_epsilon)
-        )
-    else:
-        keep = F.col("rank") <= F.col("_k")
-    return ranked.where(keep).select("query_id", "rank", "doc_id", "score")
 
 
 def search_radial(
@@ -540,12 +651,9 @@ def search_min_score(
             tf_norm_cache=seg.norm_cache, denied=seg.denied,
         )
 
-    per_segment = _serve_segments(
+    return _serve_segments(
         spark, index, terms,
         {qid: (wmap, ms[qid]) for qid, wmap in weights.items()},
         per_query, allowed_docs=allowed_docs, use_merged=use_merged,
+        rank=True,
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return per_segment.withColumn(
-        "rank", F.row_number().over(w).cast("int")
-    ).select("query_id", "rank", "doc_id", "score")

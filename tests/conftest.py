@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
 
@@ -7,6 +9,21 @@ from opensearch_jvector_plugin_spark.session import get_spark
 from opensearch_jvector_plugin_spark.sources.transcripts import (
     synthesize_transcripts_pdf,
 )
+
+_JOB_GROUPS = itertools.count()
+
+
+def spark_jobs(spark, fn):
+    """(fn(), the number of Spark jobs it launched), counted by job group."""
+    sc = spark.sparkContext
+    group = f"ojs-test-jobs-{next(_JOB_GROUPS)}-{id(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "jobs probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

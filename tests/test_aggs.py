@@ -110,6 +110,42 @@ def test_extended_stats_values(spark, hit_attrs):
     assert q0["min"] == 0.0 and q0["max"] == 4.0
 
 
+def test_extended_stats_clamps_rounding_negative_variance(spark):
+    """Three 0.1s have variance 0, but sumsq/n - mean^2 rounds to -1.7e-18:
+    both the Spark operator and the DuckDB oracle clamp it to 0 (as
+    OpenSearch's InternalExtendedStats.getVariance does), so the std is 0,
+    not NaN on Spark and not an error on DuckDB."""
+    import duckdb
+
+    from opensearch_jvector_plugin_spark.entry_queries import (
+        EXTENDED_STATS_SELECT_SQL,
+    )
+    from opensearch_jvector_plugin_spark.operators.aggs import (
+        extended_stats_agg,
+    )
+
+    vals = [0.1, 0.1, 0.1]
+    n, total = len(vals), sum(vals)
+    assert sum(v * v for v in vals) / n - (total / n) ** 2 < 0
+    attrs = spark.createDataFrame(
+        [(d, v) for d, v in enumerate(vals)], "doc_id LONG, x DOUBLE"
+    )
+    hits = spark.createDataFrame(
+        [(0, d) for d in range(n)], "query_id INT, doc_id LONG"
+    )
+    got = extended_stats_agg(hits, attrs, "x").toPandas().iloc[0]
+    assert got["variance"] == 0.0 and got["std_deviation"] == 0.0
+
+    oracle = duckdb.sql(
+        "WITH b AS (SELECT 0 AS query_id, count(x)::BIGINT AS count,"
+        " min(x) AS min, max(x) AS max, sum(x) AS sum,"
+        " sum(x * x) AS sum_of_squares"
+        " FROM (VALUES (0.1::DOUBLE), (0.1), (0.1)) t(x))"
+        + EXTENDED_STATS_SELECT_SQL
+    ).df().iloc[0]
+    assert oracle["variance"] == 0.0 and oracle["std_deviation"] == 0.0
+
+
 def test_pipeline_aggs_cumsum_and_derivative(spark, hit_attrs):
     """cumulative_sum runs per query over bucket order; derivative of the
     first bucket is NULL (no previous bucket, the OpenSearch contract)."""

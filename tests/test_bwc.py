@@ -20,6 +20,7 @@ from opensearch_jvector_plugin_spark import FORMAT_VERSION
 from opensearch_jvector_plugin_spark.functions.tokenizer import (
     TOKENIZER_VERSION,
 )
+from opensearch_jvector_plugin_spark.operators import query
 from opensearch_jvector_plugin_spark.operators.codec import CODEC_VERSION
 from opensearch_jvector_plugin_spark.operators.query import load_index, search
 
@@ -53,24 +54,42 @@ def test_fixture_versions_match_current_code():
         assert m["codec_version"] == CODEC_VERSION, name
 
 
-def test_current_reader_serves_frozen_index(spark):
-    """Query results over the frozen bytes must equal the values pinned at
-    freeze time — catches silent codec/scoring drift that a same-session
-    build-then-read test cannot."""
-    idx = load_index(FIXTURE)
-    assert idx.n_docs == 10 and idx.n_segments == 3
-    qpdf = pd.DataFrame(BWC_QUERIES, columns=["query_id", "query_text", "k"])
-    res = (
-        search(spark, idx, qpdf)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
+def _pinned_rows(res) -> list:
+    res = res.toPandas().sort_values(["query_id", "rank"]).reset_index(
+        drop=True
     )
-    got = [
+    return [
         (int(r.query_id), int(r.rank), int(r.doc_id), round(float(r.score), 6))
         for r in res.itertuples(index=False)
     ]
-    assert got == EXPECTED
+
+
+def _on_both_executors(spark, monkeypatch, idx, **kw) -> list:
+    """The BWC queries' pinned-form rows from each serving executor: the
+    driver (the default bound; the frozen index is tiny) and Spark (the
+    bound forced to 0, so the fixed-schema parquet scan reads the frozen
+    files)."""
+    qpdf = pd.DataFrame(BWC_QUERIES, columns=["query_id", "query_text", "k"])
+    out = []
+    for bound, scan in ((query.LOCAL_SERVE_POSTINGS, "LocalTableScan"),
+                        (0, "FileScan parquet")):
+        with monkeypatch.context() as m:
+            m.setattr(query, "LOCAL_SERVE_POSTINGS", bound)
+            res = search(spark, idx, qpdf, **kw)
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert scan in plan, plan
+        out.append(_pinned_rows(res))
+    return out
+
+
+def test_current_reader_serves_frozen_index(spark, monkeypatch):
+    """Query results over the frozen bytes must equal the values pinned at
+    freeze time — catches silent codec/scoring drift that a same-session
+    build-then-read test cannot — on both serving executors."""
+    idx = load_index(FIXTURE)
+    assert idx.n_docs == 10 and idx.n_segments == 3
+    for got in _on_both_executors(spark, monkeypatch, idx):
+        assert got == EXPECTED
 
 
 VEC_FIXTURE = os.path.join(
@@ -136,9 +155,10 @@ def test_current_reader_serves_frozen_vector_index(spark):
             assert set(want_ids) == got_ids, (codec, qid)
 
 
-def test_frozen_index_survives_merge(spark, tmp_path):
+def test_frozen_index_survives_merge(spark, tmp_path, monkeypatch):
     """The current merge must also accept the frozen segments (upgrade
-    path: old index, new code, force-merge) and serve identical results."""
+    path: old index, new code, force-merge) and serve identical results
+    on both serving executors."""
     import shutil
 
     from opensearch_jvector_plugin_spark.operators.merge import merge_segments
@@ -147,18 +167,8 @@ def test_frozen_index_survives_merge(spark, tmp_path):
     shutil.copytree(FIXTURE, work)
     merge_segments(spark, load_index(work))
     idx = load_index(work)
-    qpdf = pd.DataFrame(BWC_QUERIES, columns=["query_id", "query_text", "k"])
-    res = (
-        search(spark, idx, qpdf, use_merged=True)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    got = [
-        (int(r.query_id), int(r.rank), int(r.doc_id), round(float(r.score), 6))
-        for r in res.itertuples(index=False)
-    ]
-    assert got == EXPECTED
+    for got in _on_both_executors(spark, monkeypatch, idx, use_merged=True):
+        assert got == EXPECTED
 
 
 def test_frozen_vector_index_survives_compaction(spark, tmp_path):

@@ -12,7 +12,9 @@ import shutil
 import numpy as np
 import pandas as pd
 import pytest
+from test_local_serve import assert_served_locally
 
+from opensearch_jvector_plugin_spark.operators import query
 from opensearch_jvector_plugin_spark.operators.build import (
     build_index,
     committed_segments,
@@ -67,11 +69,15 @@ def test_search_rank_identity_single_and_multi_segment(
         assert_rank_identical(got, want)
 
 
-def test_search_rank_identity_many_terms(spark, built, small_corpus_pdf):
+def test_search_rank_identity_many_terms(
+    spark, built, small_corpus_pdf, monkeypatch
+):
     """A query batch spanning MORE than 64 unique terms routes the postings
     filter through the broadcast-join branch of _filter_terms (round 4:
     the multi-thousand-literal In() cost seconds of serial driver time per
-    batch); results must stay rank-identical to the oracle."""
+    batch); results must stay rank-identical to the oracle. The bound is
+    forced to 0 so the batch takes the distributed scan this pins."""
+    monkeypatch.setattr(query, "LOCAL_SERVE_POSTINGS", 0)
     from opensearch_jvector_plugin_spark.functions.tokenizer import (
         tokenize_text,
     )
@@ -93,6 +99,12 @@ def test_search_rank_identity_many_terms(spark, built, small_corpus_pdf):
     # The plan must show the broadcast join, not a 96-literal In filter.
     plan = search(spark, index, queries)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+    # Served in the driver, the batch is rank-identical too and rescans
+    # nothing.
+    monkeypatch.setattr(query, "LOCAL_SERVE_POSTINGS", 1 << 40)
+    local = search(spark, index, queries)
+    assert_served_locally(spark, local)
+    assert_rank_identical(local.toPandas(), want)
 
 
 def test_merge_then_query_identity(spark, built, small_corpus_pdf):

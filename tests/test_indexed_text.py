@@ -13,7 +13,9 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from test_local_serve import assert_served_locally
 
+from opensearch_jvector_plugin_spark.operators import query
 from opensearch_jvector_plugin_spark.operators.build import build_index
 from opensearch_jvector_plugin_spark.operators.fuzzy import (
     fuzzy_scores,
@@ -83,6 +85,20 @@ def _assert_served_from_index(df) -> None:
     assert "InMemoryTableScan" not in plan, plan
 
 
+def _served_both(spark, monkeypatch, call) -> list:
+    """`call()`'s result on both serving executors, each shown to read only
+    the persisted index: in the driver (a small call), the plan is the
+    result alone and collecting it launches no job; forced onto Spark
+    (LOCAL_SERVE_POSTINGS = 0), the plan scans only index parquet."""
+    local = call()
+    assert_served_locally(spark, local)
+    with monkeypatch.context() as m:
+        m.setattr(query, "LOCAL_SERVE_POSTINGS", 0)
+        dist = call()
+    _assert_served_from_index(dist)
+    return [local, dist]
+
+
 FUZZY_Q = [(0, "term0001", 10), (1, "term0001 term0100", 10),
            (2, "qqqqq", 10)]
 PREFIX_Q = [(0, "term00", 10), (1, "hot", 10), (2, "qqq", 10)]
@@ -91,68 +107,80 @@ REGEX_P = [(0, "term000(1|2)"), (1, "hot.*"), (2, "zzz+")]
 KS3 = {0: 10, 1: 10, 2: 10}
 
 
-def test_fuzzy_indexed_matches_declarative(spark, corpus_and_index):
+def test_fuzzy_indexed_matches_declarative(
+    spark, corpus_and_index, monkeypatch
+):
     corpus, idx = corpus_and_index
     qpdf = pd.DataFrame(FUZZY_Q, columns=["query_id", "query_text", "k"])
     queries = spark.createDataFrame(qpdf)
     want = _topk(fuzzy_scores(corpus, queries).toPandas(), KS3)
-    res = search_fuzzy(spark, idx, qpdf, tie_epsilon=1e-6)
-    _assert_served_from_index(res)
-    got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
-    pd.testing.assert_frame_equal(got, want)
+    for res in _served_both(
+        spark, monkeypatch, lambda: search_fuzzy(spark, idx, qpdf, tie_epsilon=1e-6)
+    ):
+        got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
+        pd.testing.assert_frame_equal(got, want)
 
 
-def test_prefix_indexed_matches_declarative(spark, corpus_and_index):
+def test_prefix_indexed_matches_declarative(
+    spark, corpus_and_index, monkeypatch
+):
     corpus, idx = corpus_and_index
     qpdf = pd.DataFrame(PREFIX_Q, columns=["query_id", "query_text", "k"])
     queries = spark.createDataFrame(qpdf)
     want = _topk(prefix_scores(corpus, queries).toPandas(), KS3)
-    res = search_prefix(spark, idx, qpdf, tie_epsilon=1e-6)
-    _assert_served_from_index(res)
-    got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
-    pd.testing.assert_frame_equal(got, want)
+    for res in _served_both(
+        spark, monkeypatch, lambda: search_prefix(spark, idx, qpdf, tie_epsilon=1e-6)
+    ):
+        got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
+        pd.testing.assert_frame_equal(got, want)
 
 
-def test_wildcard_indexed_matches_declarative(spark, corpus_and_index):
+def test_wildcard_indexed_matches_declarative(
+    spark, corpus_and_index, monkeypatch
+):
     corpus, idx = corpus_and_index
     want = _topk(wildcard_scores(corpus, WILD_P).toPandas(), KS3)
-    res = search_wildcard(spark, idx, WILD_P, KS3, tie_epsilon=1e-6)
-    _assert_served_from_index(res)
-    got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
-    pd.testing.assert_frame_equal(got, want)
+    for res in _served_both(
+        spark, monkeypatch, lambda: search_wildcard(spark, idx, WILD_P, KS3, tie_epsilon=1e-6)
+    ):
+        got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
+        pd.testing.assert_frame_equal(got, want)
 
 
-def test_regexp_indexed_matches_declarative(spark, corpus_and_index):
+def test_regexp_indexed_matches_declarative(
+    spark, corpus_and_index, monkeypatch
+):
     corpus, idx = corpus_and_index
     want = _topk(regexp_scores(corpus, REGEX_P).toPandas(), KS3)
-    res = search_regexp(spark, idx, REGEX_P, KS3, tie_epsilon=1e-6)
-    _assert_served_from_index(res)
-    got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
-    pd.testing.assert_frame_equal(got, want)
+    for res in _served_both(
+        spark, monkeypatch, lambda: search_regexp(spark, idx, REGEX_P, KS3, tie_epsilon=1e-6)
+    ):
+        got = _topk(res.select("query_id", "doc_id", "score").toPandas(), KS3)
+        pd.testing.assert_frame_equal(got, want)
 
 
 MSM_Q = [(0, "term0001 term0002 term0003", 2), (1, "hotcommon term0001", 2),
          (2, "term0001 zzznotaword", 2)]
 
 
-def test_msm_indexed_matches_declarative(spark, corpus_and_index):
+def test_msm_indexed_matches_declarative(
+    spark, corpus_and_index, monkeypatch
+):
     corpus, idx = corpus_and_index
     queries = spark.createDataFrame(
         [(q, t) for q, t, _m in MSM_Q], "query_id INT, query_text STRING"
     )
     msm = {q: m for q, _t, m in MSM_Q}
     want = _norm_scores(msm_scores(corpus, queries, msm).toPandas())
-    res = search_msm(
-        spark, idx,
-        pd.DataFrame([(q, t) for q, t, _m in MSM_Q],
-                     columns=["query_id", "query_text"]),
-        msm,
-    )
-    _assert_served_from_index(res)
-    got = _norm_scores(res.toPandas())
-    pd.testing.assert_frame_equal(got, want)
-    # The OOV-term msm=2 query must be empty on both sides.
-    assert 2 not in set(got["query_id"])
+    qpdf = pd.DataFrame([(q, t) for q, t, _m in MSM_Q],
+                        columns=["query_id", "query_text"])
+    for res in _served_both(
+        spark, monkeypatch, lambda: search_msm(spark, idx, qpdf, msm)
+    ):
+        got = _norm_scores(res.toPandas())
+        pd.testing.assert_frame_equal(got, want)
+        # The OOV-term msm=2 query must be empty on both sides.
+        assert 2 not in set(got["query_id"])
 
 
 BOOL_Q = [
@@ -164,7 +192,9 @@ BOOL_Q = [
 ]
 
 
-def test_boolean_indexed_matches_declarative(spark, corpus_and_index):
+def test_boolean_indexed_matches_declarative(
+    spark, corpus_and_index, monkeypatch
+):
     corpus, idx = corpus_and_index
     bq = spark.createDataFrame(
         BOOL_Q,
@@ -172,16 +202,15 @@ def test_boolean_indexed_matches_declarative(spark, corpus_and_index):
         " must_not_text STRING",
     )
     want = _norm_scores(boolean_scores(corpus, bq).toPandas())
-    res = search_boolean(
-        spark, idx,
-        pd.DataFrame(BOOL_Q, columns=[
-            "query_id", "must_text", "should_text", "must_not_text"
-        ]),
-    )
-    _assert_served_from_index(res)
-    got = _norm_scores(res.toPandas())
-    pd.testing.assert_frame_equal(got, want)
-    assert {3, 4}.isdisjoint(set(got["query_id"]))
+    bpdf = pd.DataFrame(BOOL_Q, columns=[
+        "query_id", "must_text", "should_text", "must_not_text"
+    ])
+    for res in _served_both(
+        spark, monkeypatch, lambda: search_boolean(spark, idx, bpdf)
+    ):
+        got = _norm_scores(res.toPandas())
+        pd.testing.assert_frame_equal(got, want)
+        assert {3, 4}.isdisjoint(set(got["query_id"]))
 
 
 def test_weighted_all_empty_weights_returns_empty(spark, corpus_and_index):

@@ -14,6 +14,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import spark_jobs
 from test_entry_oracles import SF_DIRS, normalize
 
 from opensearch_jvector_plugin_spark import entry_queries as eq
@@ -97,19 +98,13 @@ def test_rewritten_documents_rederive_corpus_state(spark, tmp_path):
 @pytest.fixture
 def lookup_jobs(spark, monkeypatch):
     """Spark jobs launched by each lookup_term_dfs call, in call order."""
-    sc = spark.sparkContext
     orig = query.lookup_term_dfs
     counts: list[int] = []
 
     def counted(*a, **kw):
-        group = f"ojs-test-lookup-{len(counts)}-{id(counts)}"
-        sc.setJobGroup(group, "term-df lookup")
-        try:
-            return orig(*a, **kw)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-            counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        out, jobs = spark_jobs(spark, lambda: orig(*a, **kw))
+        counts.append(jobs)
+        return out
 
     for mod in (query, eq, phrase):
         monkeypatch.setattr(mod, "lookup_term_dfs", counted)
