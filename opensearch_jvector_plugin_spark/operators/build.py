@@ -36,7 +36,8 @@ import json
 import os
 import time
 
-
+import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +69,44 @@ def _seg_dir(index_dir: str, seg_id: int) -> str:
 
 def _manifest_path(index_dir: str, seg_id: int) -> str:
     return os.path.join(index_dir, "manifests", f"seg-{seg_id:05d}.json")
+
+
+def _list_column(arrays, value_type) -> pa.ListArray:
+    """Per-term NumPy arrays -> one Arrow list column (offsets + values)."""
+    lens = np.fromiter(map(len, arrays), np.int64, len(arrays))
+    offsets = np.zeros(len(arrays) + 1, np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    values = np.concatenate(arrays) if len(arrays) else np.zeros(0, np.int64)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), pa.array(values, value_type)
+    )
+
+
+def write_postings(out_dir: str, rows: pd.DataFrame) -> None:
+    """Write one segment's postings rows (the frame of
+    segment.encode_postings_rows) as out_dir/postings.parquet: written to
+    a `_`-prefixed temp file, which every reader skips, then renamed into
+    place."""
+    os.makedirs(out_dir, exist_ok=True)
+    table = pa.Table.from_pydict(
+        {
+            "term": pa.array(rows["term"], pa.string()),
+            "df": pa.array(rows["df"], pa.int32()),
+            "ctf": pa.array(rows["ctf"], pa.int64()),
+            "max_tf": pa.array(rows["max_tf"], pa.int32()),
+            "tf_offset": pa.array(rows["tf_offset"], pa.int32()),
+            "dl_offset": pa.array(rows["dl_offset"], pa.int32()),
+            "checksum": pa.array(rows["checksum"], pa.int64()),
+            "blob": pa.array(rows["blob"], pa.binary()),
+            "block_last_doc": _list_column(rows["block_last_doc"], pa.int64()),
+            "block_max_tf": _list_column(rows["block_max_tf"], pa.int32()),
+            "block_min_dl": _list_column(rows["block_min_dl"], pa.int32()),
+            "codec": pa.array(rows["codec"], pa.int32()),
+        }
+    )
+    tmp = os.path.join(out_dir, "_postings.parquet.tmp")
+    pq.write_table(table, tmp, compression="snappy")
+    os.replace(tmp, os.path.join(out_dir, "postings.parquet"))
 
 
 def _text_storage(storage):
@@ -145,48 +184,16 @@ def build_index(
             work = work.where(~F.col("seg_id").isin(skip_ids))
 
     def _empty_summary():
-        import pandas as pd
-
         return pd.DataFrame(
             columns=["seg_id", "n_docs", "sum_dl", "doc_lo", "doc_hi",
                      "n_terms", "n_postings", "crc", "build_ms", "path"]
         )
 
     def write_segment(seg_id, doc_ids, texts):
-        import pandas as pd
-
         t0 = time.monotonic()
         rows, summary = encode_segment(doc_ids, texts)
         out_dir = _seg_dir(index_dir, seg_id)
-        os.makedirs(out_dir, exist_ok=True)
-        table = pa.Table.from_pydict(
-            {
-                "term": pa.array(rows["term"], pa.string()),
-                "df": pa.array(rows["df"], pa.int32()),
-                "ctf": pa.array(rows["ctf"], pa.int64()),
-                "max_tf": pa.array(rows["max_tf"], pa.int32()),
-                "tf_offset": pa.array(rows["tf_offset"], pa.int32()),
-                "dl_offset": pa.array(rows["dl_offset"], pa.int32()),
-                "checksum": pa.array(rows["checksum"], pa.int64()),
-                "blob": pa.array(rows["blob"], pa.binary()),
-                "block_last_doc": pa.array(
-                    [list(map(int, b)) for b in rows["block_last_doc"]],
-                    pa.list_(pa.int64()),
-                ),
-                "block_max_tf": pa.array(
-                    [list(map(int, b)) for b in rows["block_max_tf"]],
-                    pa.list_(pa.int32()),
-                ),
-                "block_min_dl": pa.array(
-                    [list(map(int, b)) for b in rows["block_min_dl"]],
-                    pa.list_(pa.int32()),
-                ),
-                "codec": pa.array(rows["codec"], pa.int32()),
-            }
-        )
-        tmp = os.path.join(out_dir, "_postings.parquet.tmp")
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, os.path.join(out_dir, "postings.parquet"))
+        write_postings(out_dir, rows)
         ms = int((time.monotonic() - t0) * 1000)
         return pd.DataFrame(
             [
@@ -209,7 +216,6 @@ def build_index(
         skip_set = set(skip_ids)
 
         def build_partition(batches):
-            import pandas as pd
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
@@ -308,7 +314,10 @@ def finalize_index(spark: SparkSession, index_dir: str, storage=None) -> dict:
 
     seg_glob = os.path.join(index_dir, "segments")
     if manifests:
-        postings_meta = spark.read.parquet(seg_glob).select("term", "df", "ctf")
+        postings_meta = (
+            spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(seg_glob)
+            .select("term", "df", "ctf")
+        )
         (
             postings_meta.groupBy("term")
             .agg(F.sum("df").cast("long").alias("df"),

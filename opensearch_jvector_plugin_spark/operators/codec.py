@@ -45,60 +45,81 @@ SKIP_BLOCK = 128  # postings per skip block (Lucene's block size)
 # ---------------------------------------------------------------- varint ---
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-style varint encode of a uint64 array, fully vectorized.
+def _varint_nbytes(v: np.ndarray) -> np.ndarray:
+    """Bytes each uint64 value needs (ceil(bits / 7), min 1)."""
+    nbytes = np.ones(v.shape, dtype=np.int64)
+    for k in range(1, 10):
+        wider = v >= np.uint64(1 << (7 * k))
+        if not wider.any():
+            break
+        nbytes += wider
+    return nbytes
+
+
+def varint_encode_with_bounds(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """LEB128-style varint encode of a uint64 array, fully vectorized;
+    returns (buffer, end offset of each value's bytes).
 
     Each value emits ceil(bits/7) bytes; continuation bit 0x80 on all but
-    the last byte of each value.
+    the last byte of each value. Byte j of every value is written in one
+    pass over the values that still have a byte j (most have one byte).
     """
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
-        return b""
-    # Bytes needed per value: position of highest set bit / 7, min 1.
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp > 0
-        if not nz.any():
-            break
-        nbits[nz] += 1
-        tmp >>= np.uint64(7)
-    nbytes = np.maximum(nbits, 1)
-    total = int(nbytes.sum())
-
-    out = np.zeros(total, dtype=np.uint8)
-    # End offset of each value's byte run.
+        return b"", np.zeros(0, dtype=np.int64)
+    nbytes = _varint_nbytes(v)
     ends = np.cumsum(nbytes)
     starts = ends - nbytes
-    # Byte slot j of value i holds bits [7j, 7j+7) with cont bit if j < n-1.
-    max_b = int(nbytes.max())
-    for j in range(max_b):
-        mask = nbytes > j
-        idx = starts[mask] + j
-        chunk = ((v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[mask] - 1 > j).astype(np.uint8) * np.uint8(0x80)
-        out[idx] = chunk | cont
-    return out.tobytes()
+    out = np.empty(int(ends[-1]), dtype=np.uint8)
+    more = nbytes > 1
+    out[starts] = (v & np.uint64(0x7F)).astype(np.uint8) | (
+        more.astype(np.uint8) << np.uint8(7)
+    )
+    sel = np.flatnonzero(more)
+    j = 1
+    while sel.size:
+        cont = nbytes[sel] > j + 1
+        out[starts[sel] + j] = (
+            ((v[sel] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
+            | (cont.astype(np.uint8) << np.uint8(7))
+        )
+        sel = sel[cont]
+        j += 1
+    return out.tobytes(), ends
 
 
-def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Vectorized varint decode -> uint64 array."""
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-style varint encode of a uint64 array (see
+    varint_encode_with_bounds)."""
+    return varint_encode_with_bounds(values)[0]
+
+
+def varint_decode(buf, count: int | None = None) -> np.ndarray:
+    """Vectorized varint decode -> uint64 array. Byte j of every value is
+    read in one pass over the values that still have a byte j; a trailing
+    unterminated run decodes as one last value."""
     arr = np.frombuffer(buf, dtype=np.uint8)
     if arr.size == 0:
         return np.zeros(0, dtype=np.uint64)
-    is_last = arr < 128
-    # Group id for each byte: cumulative count of completed values before it.
-    group = np.zeros(arr.size, dtype=np.int64)
-    group[1:] = np.cumsum(is_last)[:-1]
-    # Bit shift within group = byte position within its value * 7.
-    starts_mask = np.ones(arr.size, dtype=bool)
-    starts_mask[1:] = is_last[:-1]
-    start_idx = np.flatnonzero(starts_mask)
-    pos_in_group = np.arange(arr.size) - start_idx[group]
-    contrib = (arr & np.uint8(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * pos_in_group.astype(np.uint64)
-    )
-    vals = np.add.reduceat(contrib, start_idx)
+    ends = np.flatnonzero(arr < 128)  # last byte of each value
+    if ends.size == arr.size:
+        vals = arr.astype(np.uint64)
+    else:
+        if not ends.size or ends[-1] != arr.size - 1:
+            ends = np.append(ends, arr.size - 1)
+        starts = np.empty_like(ends)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        vals = (arr[starts] & np.uint8(0x7F)).astype(np.uint64)
+        sel = np.flatnonzero(ends > starts)
+        j = 1
+        while sel.size:
+            at = starts[sel] + j
+            vals[sel] |= (arr[at] & np.uint8(0x7F)).astype(np.uint64) << (
+                np.uint64(7 * j)
+            )
+            sel = sel[ends[sel] > at]
+            j += 1
     if count is not None and vals.size != count:
         raise ValueError(f"decoded {vals.size} values, expected {count}")
     return vals
@@ -243,44 +264,60 @@ def decode_postings(
     )
 
 
-def decode_postings_batch(
-    blobs: list[bytes],
+def decode_varint_lists(
+    buf,
+    bounds: np.ndarray,
     dfs: np.ndarray,
     checksums: np.ndarray | None = None,
-) -> list[PostingList]:
-    """Decode MANY varint posting lists in one vectorized pass.
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY back-to-back varint posting lists in one vectorized pass
+    -> concatenated (doc_ids, tfs, dls), int64, doc_ids per list ascending.
 
-    Concatenates every blob (each blob is three back-to-back whole varint
-    streams: doc deltas, tfs, dls — so the concatenation is itself one
-    valid varint stream of sum(3*df) values), runs a single varint decode,
-    and splits by the known per-list counts. ~10x faster than per-list
-    decode when lists are small relative to call overhead (the common case
-    for a multi-thousand-term query batch).
+    `buf` holds the lists' blobs back to back, blob i at
+    buf[bounds[i]:bounds[i + 1]], with df dfs[i]. Each blob is three whole
+    varint streams (doc deltas, tfs, dls), so the buffer is itself one
+    varint stream of sum(3*df) values: one decode, then index gathers split
+    it into sections and a cumsum restarted at each list rebuilds the
+    docIDs. Each blob's checksum is verified first when given.
     """
+    arr = np.frombuffer(buf, dtype=np.uint8)
     if checksums is not None:
-        for b, c in zip(blobs, checksums):
-            actual = zlib.crc32(b) & 0xFFFFFFFF
+        for i, c in enumerate(checksums):
+            actual = zlib.crc32(arr[bounds[i]:bounds[i + 1]]) & 0xFFFFFFFF
             if actual != int(c):
                 raise ValueError(
                     f"postings checksum mismatch: stored={int(c)} actual={actual}"
                 )
     dfs = np.asarray(dfs, dtype=np.int64)
-    big = b"".join(blobs)
-    vals = varint_decode(big, int(3 * dfs.sum()))
+    n = int(dfs.sum())
+    vals = varint_decode(arr, 3 * n).astype(np.int64)
+    first = np.cumsum(dfs) - dfs  # each list's start in posting space
+    rep = np.repeat(dfs, dfs)
+    at = np.arange(n, dtype=np.int64) + 2 * np.repeat(first, dfs)
+    deltas, tfs, dls = vals[at], vals[at + rep], vals[at + 2 * rep]
+    cs = np.cumsum(deltas)
+    before = np.concatenate(([0], cs))[first]  # running sum before each list
+    return cs - np.repeat(before, dfs), tfs, dls
 
-    # Per-list section boundaries in VALUE space.
-    ends = np.cumsum(3 * dfs)
-    starts = ends - 3 * dfs
-    out: list[PostingList] = []
-    v64 = vals.astype(np.int64)
-    for s, n in zip(starts, dfs):
-        s = int(s)
-        n = int(n)
-        out.append(
-            PostingList(
-                doc_ids=np.cumsum(v64[s:s + n]),
-                tfs=v64[s + n:s + 2 * n],
-                dls=v64[s + 2 * n:s + 3 * n],
-            )
+
+def decode_postings_batch(
+    blobs: list[bytes],
+    dfs: np.ndarray,
+    checksums: np.ndarray | None = None,
+) -> list[PostingList]:
+    """decode_varint_lists over separate blobs, split back into one
+    PostingList per blob. ~10x faster than per-list decode when lists are
+    small relative to call overhead (the common case for a multi-thousand-
+    term query batch)."""
+    if not len(blobs):
+        return []
+    dfs = np.asarray(dfs, dtype=np.int64)
+    bounds = np.concatenate(([0], np.cumsum([len(b) for b in blobs])))
+    docs, tfs, dls = decode_varint_lists(b"".join(blobs), bounds, dfs, checksums)
+    cuts = np.cumsum(dfs)[:-1]
+    return [
+        PostingList(doc_ids=d, tfs=t, dls=l)
+        for d, t, l in zip(
+            np.split(docs, cuts), np.split(tfs, cuts), np.split(dls, cuts)
         )
-    return out
+    ]

@@ -11,8 +11,18 @@ of its per-segment lists in segment order — pure decode + concat + re-encode,
 O(N) per term, no rebase needed because our docIDs are global from build
 time (the docID-rebasing discipline is paid once, at docID assignment).
 
-Shuffle shape: one shuffle keyed by (merged_seg, term-hash) — each merged
-segment is assembled by one task; fan_in controls memory per task.
+Task shape: no shuffle. The driver plans the merged segments as one small
+frame of (merged_seg, input seg_ids); a mapInPandas task per merged segment
+reads its input `segments/seg_id=N/` files itself with pyarrow (the same
+filesystem the merged output is written through), so no posting byte moves
+between workers. fan_in bounds the memory of one task.
+
+Kernel: the input rows are walked in term order and cut into chunks of
+whole terms of at most BATCH_VALUES decoded values. Each chunk is one flat
+varint decode, index gathers into doc/tf/dl, a docID cumsum reset per list,
+the expunge mask, a (term, doc) lexsort only when the chunk is out of
+order, and the build's whole-array encoder (segment.encode_postings_rows),
+so a merged segment is byte-identical to a single-segment build.
 """
 
 from __future__ import annotations
@@ -25,23 +35,190 @@ import zlib
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.parquet as pq
+import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .build import committed_segments
+from .build import POSTINGS_SPARK_SCHEMA, committed_segments, write_postings
 from .codec import (
+    CODEC_VARINT,
     PostingList,
     decode_postings,
-    decode_postings_batch,
+    decode_varint_lists,
     encode_postings,
 )
 from .query import IndexHandle
+from .segment import encode_postings_rows, postings_rows_frame
 
 MERGE_SUMMARY_SCHEMA = (
     "seg_id INT, n_terms LONG, n_postings LONG, crc LONG, merge_ms LONG, "
     "dl_purged LONG"
 )
+
+# Decoded values (3 per posting) per kernel chunk. MEASURED
+# (scripts/merge_scale.py, 4 cores, medians of 3, interleaved with the
+# per-term loop this kernel replaced; CRC-identical outputs): the
+# `ingest` shape (6 segments, 593k postings) merges in 0.70-0.84 s, task
+# 217-296 ms, against 2.14-2.87 s, task 1.06-1.67 s; a 200k-turn,
+# 5-segment index (9.87M postings, max df 186k) in 1.87-2.20 s against
+# 3.01-3.69 s. Budget sweep of the in-process kernel (same host, medians
+# of 3, interleaved): 200k-turn rows 1.47/1.19/1.32/1.94 s and `ingest`
+# rows 0.13/0.13/0.13/0.15 s at 125k/500k/2M/8M values. At 2M a chunk
+# holds a 16 MB uint64 decode plus ~5 MB per int64 posting array; larger
+# chunks are slower, and a whole-group decode and encode over 25M
+# postings ran ~3.5x slower than a per-term loop (BENCH.md, "Merge
+# kernel A/B"). The sort is conditional: sorting every chunk took
+# the 200k-turn kernel from 1.2-1.3 s to 2.2-2.9 s in-process.
+BATCH_VALUES = 2_000_000
+
+_INPUT_COLUMNS = ["term", "df", "tf_offset", "dl_offset", "checksum", "blob"]
+
+
+def read_segment_rows(segments_path: str, seg_ids: list[int]) -> pa.Table:
+    """The postings rows of the given input segments, sorted by (term,
+    seg_id). Each `seg_id=N/` directory is read with pyarrow's default
+    ignore-prefixes, so `_`-prefixed temporary files are skipped as Spark
+    skips them."""
+    parts = []
+    for s in sorted(seg_ids):
+        t = ds.dataset(
+            os.path.join(segments_path, f"seg_id={s}"), format="parquet"
+        ).to_table()
+        if not t.num_rows:
+            continue
+        codec = (
+            t.column("codec") if "codec" in t.column_names
+            else pa.array(np.full(t.num_rows, CODEC_VARINT, np.int32))
+        )
+        parts.append(t.select(_INPUT_COLUMNS).append_column("codec", codec))
+    if not parts:
+        return pa.table({})
+    # A stable sort on term keeps the segment order within each term.
+    return pa.concat_tables(parts).sort_by("term")
+
+
+def merge_rows(
+    rows: pa.Table,
+    deleted: np.ndarray | None = None,
+    pending: np.ndarray | None = None,
+    codec: str = "varint",
+    batch_values: int = BATCH_VALUES,
+) -> tuple[pd.DataFrame, int, int]:
+    """Merge term-sorted input postings rows (read_segment_rows) into one
+    segment's postings rows. Docs in `deleted` are expunged; the dl of each
+    expunged doc also in `pending` is credited once. Returns (rows frame,
+    seg_crc, dl purged)."""
+    n = rows.num_rows
+    terms = rows.column("term").to_numpy(zero_copy_only=False)
+    dfs = rows.column("df").to_numpy().astype(np.int64)
+    codecs = rows.column("codec").to_numpy()
+    blob = rows.column("blob").cast(pa.large_binary()).combine_chunks()
+    off = np.frombuffer(blob.buffers()[1], np.int64)[
+        blob.offset:blob.offset + n + 1
+    ]
+    data = (
+        np.frombuffer(blob.buffers()[2], np.uint8) if n
+        else np.zeros(0, np.uint8)
+    )
+    checksums = rows.column("checksum").to_numpy()
+    tf_off = rows.column("tf_offset").to_numpy()
+    dl_off = rows.column("dl_offset").to_numpy()
+
+    new_term = np.ones(n, dtype=bool)
+    new_term[1:] = terms[1:] != terms[:-1]
+    term_rows = np.append(np.flatnonzero(new_term), n)  # first row per term
+    term_of_row = np.cumsum(new_term) - 1
+    term_names = terms[term_rows[:-1]]
+    # Chunks of whole terms, each at most batch_values decoded values (a
+    # larger term is its own chunk).
+    cum = np.concatenate(([0], np.cumsum(3 * dfs)))[term_rows]
+    cuts = [0]
+    while cuts[-1] < len(term_names):
+        i = cuts[-1]
+        j = int(np.searchsorted(cum, cum[i] + batch_values, side="right")) - 1
+        cuts.append(max(j, i + 1))
+
+    frames, seg_crc, purged = [], 0, []
+    for ti, tj in zip(cuts[:-1], cuts[1:]):
+        r0, r1 = int(term_rows[ti]), int(term_rows[tj])
+        cdf = dfs[r0:r1]
+        if (codecs[r0:r1] == CODEC_VARINT).all():
+            docs, tfs, dls = decode_varint_lists(
+                data[off[r0]:off[r1]], off[r0:r1 + 1] - off[r0], cdf,
+                checksums[r0:r1],
+            )
+        else:
+            # A chunk with lists in another codec decodes list by list.
+            pls = [
+                decode_postings(
+                    data[off[r]:off[r + 1]].tobytes(), int(dfs[r]),
+                    int(tf_off[r]), int(dl_off[r]), int(checksums[r]),
+                    codec=int(codecs[r]),
+                )
+                for r in range(r0, r1)
+            ]
+            docs, tfs, dls = (
+                np.concatenate([getattr(pl, f) for pl in pls])
+                for f in ("doc_ids", "tfs", "dls")
+            )
+        tids = np.repeat(term_of_row[r0:r1], cdf)
+
+        if deleted is not None:
+            idx = np.searchsorted(deleted, docs)
+            idx[idx == len(deleted)] = 0
+            dead = deleted[idx] == docs
+            if dead.any():
+                if pending is not None:
+                    pidx = np.searchsorted(pending, docs[dead])
+                    pidx[pidx == len(pending)] = 0
+                    pmask = pending[pidx] == docs[dead]
+                    purged.append((docs[dead][pmask], dls[dead][pmask]))
+                live = ~dead
+                docs, tfs, dls, tids = docs[live], tfs[live], dls[live], tids[live]
+        if not len(docs):
+            continue  # every term of the chunk died with its docs
+
+        # Segment order already gives (term, doc) order when input doc
+        # ranges are ascending (the seg_size layout); aligned-partition
+        # segments may overlap, and only then is the chunk sorted.
+        same = tids[1:] == tids[:-1]
+        if (same & (docs[1:] <= docs[:-1])).any():
+            order = np.lexsort((docs, tids))
+            docs, tfs, dls, tids = docs[order], tfs[order], dls[order], tids[order]
+            if ((tids[1:] == tids[:-1]) & (docs[1:] == docs[:-1])).any():
+                raise ValueError("a docID appears in two input segments")
+        starts = np.flatnonzero(np.append(True, tids[1:] != tids[:-1]))
+        counts = np.diff(np.append(starts, len(docs)))
+        names = term_names[tids[starts]]
+        if codec == "varint":
+            frame, seg_crc = encode_postings_rows(
+                names, starts, counts, docs, tfs, dls, crc=seg_crc
+            )
+        else:
+            encs = [
+                encode_postings(
+                    t, PostingList(docs[s:s + c], tfs[s:s + c], dls[s:s + c]),
+                    codec=codec,
+                )
+                for t, s, c in zip(names, starts, counts)
+            ]
+            for e in encs:
+                seg_crc = zlib.crc32(e.blob, seg_crc) & 0xFFFFFFFF
+            frame = postings_rows_frame(encs)
+        frames.append(frame)
+
+    out = (
+        pd.concat(frames, ignore_index=True) if frames
+        else postings_rows_frame([])
+    )
+    dl_purged = 0
+    if purged:
+        # dl is constant per doc: credit each purged doc once.
+        pdocs = np.concatenate([d for d, _ in purged])
+        pdls = np.concatenate([l for _, l in purged])
+        _, first = np.unique(pdocs, return_index=True)
+        dl_purged = int(pdls[first].sum())
+    return out, seg_crc, dl_purged
 
 
 def merge_segments(
@@ -81,14 +258,6 @@ def merge_segments(
         if name.startswith("seg_id=") and name not in out_ids:
             shutil.rmtree(os.path.join(merged_dir, name), ignore_errors=True)
 
-    mapping = spark.createDataFrame(
-        [(int(s), int(g)) for s, g in group_of.items()],
-        "seg_id INT, merged_seg INT",
-    )
-    postings = spark.read.parquet(index.segments_path).join(
-        F.broadcast(mapping), "seg_id"
-    )
-
     # Expunge-deletes (the forceMerge contract): the merged output drops
     # every deleted doc's postings; stats are adjusted afterwards for the
     # ids not yet purged by a previous merge (idempotent re-merge).
@@ -102,166 +271,41 @@ def merge_segments(
     bc_pending = spark.sparkContext.broadcast(
         _pending if len(_pending) else None
     )
+    segments_path = index.segments_path
+    batch_values = BATCH_VALUES  # read in the driver, so a patch reaches tasks
 
-    # Hybrid decode threshold, MEASURED (BENCH.md round 2): per-term/
-    # per-list processing beats whole-group vectorization at merge shape —
-    # merge lists are LARGE (hot terms: df ~ 1e5+), so one monolithic
-    # decode/lexsort/encode over ~25M postings thrashes DRAM (44s) while
-    # the per-term loop stays cache-resident (12s). Batching only pays for
-    # SMALL lists, where the per-call decode overhead dominates (the round-1
-    # query-kernel lesson — query terms are many and small). So: varint
-    # lists with df <= SMALL_DF decode in bounded batched chunks; everything
-    # else decodes per-list.
-    SMALL_DF = 4096
-    BATCH_VALUES = 2_000_000  # cap per batched decode call (cache-sized)
-
-    def _decode_inputs(pdf: pd.DataFrame) -> list:
-        """Decode every input posting list (hybrid small-batched / large-
-        per-list). Returns PostingLists in pdf row order."""
-        codecs = (
-            pdf["codec"].to_numpy()
-            if "codec" in pdf.columns
-            else np.ones(len(pdf), dtype=np.int64)
-        )
-        dfs = pdf["df"].to_numpy()
-        blobs = pdf["blob"].to_numpy()
-        cks = pdf["checksum"].to_numpy()
-        lists: list = [None] * len(pdf)
-        small = np.flatnonzero((codecs == 1) & (dfs <= SMALL_DF))
-        i = 0
-        while i < len(small):
-            j, acc = i, 0
-            while j < len(small) and (acc == 0 or acc + 3 * int(dfs[small[j]]) <= BATCH_VALUES):
-                acc += 3 * int(dfs[small[j]])
-                j += 1
-            sel = small[i:j]
-            decoded = decode_postings_batch(
-                [blobs[s] for s in sel], dfs[sel], cks[sel]
-            )
-            for s, dec in zip(sel, decoded):
-                lists[s] = dec
-            i = j
-        for s in np.flatnonzero((codecs != 1) | (dfs > SMALL_DF)):
-            r = pdf.iloc[int(s)]
-            lists[int(s)] = decode_postings(
-                r["blob"], int(r["df"]), int(r["tf_offset"]),
-                int(r["dl_offset"]), int(r["checksum"]),
-                codec=int(codecs[s]),
-            )
-        return lists
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_group(merged_seg: int, inputs: list[int]) -> pd.DataFrame | None:
         t0 = time.monotonic()
-        merged_seg = int(pdf["merged_seg"].iloc[0])
-        pdf = pdf.sort_values(["term", "seg_id"], kind="stable").reset_index(
-            drop=True
+        rows = read_segment_rows(segments_path, inputs)
+        if not rows.num_rows:
+            return None
+        out, seg_crc, dl_purged = merge_rows(
+            rows, bc_deleted.value, bc_pending.value, codec, batch_values
         )
-        lists = _decode_inputs(pdf)
-        term_vals = pdf["term"].to_numpy()
-        new_term = np.ones(len(pdf), dtype=bool)
-        new_term[1:] = term_vals[1:] != term_vals[:-1]
-        t_row_starts = np.flatnonzero(new_term)
-        t_row_ends = np.append(t_row_starts[1:], len(pdf))
-
-        out = {
-            "term": [], "df": [], "ctf": [], "max_tf": [], "tf_offset": [],
-            "dl_offset": [], "checksum": [], "blob": [], "block_last_doc": [],
-            "block_max_tf": [], "block_min_dl": [], "codec": [],
-        }
-        seg_crc = 0
-        n_postings = 0
-        deleted = bc_deleted.value
-        pending = bc_pending.value
-        # dl of each PENDING-purge doc seen in this group (dl is constant
-        # per doc; a doc lives in exactly one group) — exact stats credit.
-        pending_dl: dict[int, int] = {}
-        # Per-term concat + sort + encode: cache-resident per term, and the
-        # encoder is byte-identical to the build's (CRC-identity contract;
-        # with no deletes the masking below is skipped entirely).
-        for rs, re_ in zip(t_row_starts, t_row_ends):
-            term = term_vals[rs]
-            segs = lists[rs:re_]
-            if len(segs) == 1:
-                cat_docs, cat_tfs, cat_dls = (
-                    segs[0].doc_ids, segs[0].tfs, segs[0].dls
-                )
-            else:
-                cat_docs = np.concatenate([l.doc_ids for l in segs])
-                cat_tfs = np.concatenate([l.tfs for l in segs])
-                cat_dls = np.concatenate([l.dls for l in segs])
-            if deleted is not None:
-                idx = np.searchsorted(deleted, cat_docs)
-                idx[idx == len(deleted)] = 0
-                dead = deleted[idx] == cat_docs
-                if pending is not None and dead.any():
-                    dd, dld = cat_docs[dead], cat_dls[dead]
-                    pidx = np.searchsorted(pending, dd)
-                    pidx[pidx == len(pending)] = 0
-                    pmask = pending[pidx] == dd
-                    for doc, dl in zip(dd[pmask], dld[pmask]):
-                        pending_dl.setdefault(int(doc), int(dl))
-                if dead.any():
-                    live = ~dead
-                    cat_docs = cat_docs[live]
-                    cat_tfs = cat_tfs[live]
-                    cat_dls = cat_dls[live]
-                if not len(cat_docs):
-                    continue  # the term died with its only docs
-            # Global docID order regardless of segment range layout (doc
-            # ranges need not be disjoint when segments were built
-            # shuffle-free from ingest partitions).
-            ordr = np.argsort(cat_docs, kind="stable")
-            enc = encode_postings(
-                term,
-                PostingList(cat_docs[ordr], cat_tfs[ordr], cat_dls[ordr]),
-                codec=codec,
-            )
-            out["term"].append(enc.term)
-            out["df"].append(enc.df)
-            out["ctf"].append(enc.ctf)
-            out["max_tf"].append(enc.max_tf)
-            out["tf_offset"].append(enc.tf_offset)
-            out["dl_offset"].append(enc.dl_offset)
-            out["checksum"].append(enc.checksum)
-            out["blob"].append(enc.blob)
-            out["block_last_doc"].append(enc.block_last_doc.tolist())
-            out["block_max_tf"].append(enc.block_max_tf.tolist())
-            out["block_min_dl"].append(enc.block_min_dl.tolist())
-            out["codec"].append(enc.codec)
-            seg_crc = zlib.crc32(enc.blob, seg_crc) & 0xFFFFFFFF
-            n_postings += enc.df
-
-        out_dir = os.path.join(merged_dir, f"seg_id={merged_seg}")
-        os.makedirs(out_dir, exist_ok=True)
-        table = pa.Table.from_pydict(
-            {
-                "term": pa.array(out["term"], pa.string()),
-                "df": pa.array(out["df"], pa.int32()),
-                "ctf": pa.array(out["ctf"], pa.int64()),
-                "max_tf": pa.array(out["max_tf"], pa.int32()),
-                "tf_offset": pa.array(out["tf_offset"], pa.int32()),
-                "dl_offset": pa.array(out["dl_offset"], pa.int32()),
-                "checksum": pa.array(out["checksum"], pa.int64()),
-                "blob": pa.array(out["blob"], pa.binary()),
-                "block_last_doc": pa.array(out["block_last_doc"], pa.list_(pa.int64())),
-                "block_max_tf": pa.array(out["block_max_tf"], pa.list_(pa.int32())),
-                "block_min_dl": pa.array(out["block_min_dl"], pa.list_(pa.int32())),
-                "codec": pa.array(out["codec"], pa.int32()),
-            }
-        )
-        tmp = os.path.join(out_dir, "_postings.parquet.tmp")
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, os.path.join(out_dir, "postings.parquet"))
+        write_postings(os.path.join(merged_dir, f"seg_id={merged_seg}"), out)
         ms = int((time.monotonic() - t0) * 1000)
         return pd.DataFrame(
-            [{"seg_id": merged_seg, "n_terms": len(out["term"]),
-              "n_postings": n_postings, "crc": seg_crc, "merge_ms": ms,
-              "dl_purged": int(sum(pending_dl.values()))}]
+            [{"seg_id": merged_seg, "n_terms": len(out),
+              "n_postings": int(out["df"].sum()), "crc": seg_crc,
+              "merge_ms": ms, "dl_purged": dl_purged}]
         )
 
+    def merge_partition(batches):
+        for pdf in batches:
+            for g, inputs in zip(pdf["merged_seg"], pdf["seg_ids"]):
+                out = merge_group(int(g), [int(s) for s in inputs])
+                if out is not None:
+                    yield out
+
+    groups = [
+        (g, [s for s in seg_ids if group_of[s] == g])
+        for g in sorted(set(group_of.values()))
+    ]
+    # A local frame of one row per merged segment: Spark gives each row its
+    # own task (up to defaultParallelism) and nothing is shuffled.
     summaries = (
-        postings.groupBy("merged_seg")
-        .applyInPandas(merge_group, MERGE_SUMMARY_SCHEMA)
+        spark.createDataFrame(groups, "merged_seg INT, seg_ids ARRAY<INT>")
+        .mapInPandas(merge_partition, MERGE_SUMMARY_SCHEMA)
         .collect()
     )
     # --- expunge-deletes bookkeeping: adjust stats for the ids this merge
@@ -287,7 +331,7 @@ def merge_segments(
             stats_path, json.dumps(stats, indent=1, sort_keys=True).encode()
         )
         (
-            spark.read.parquet(merged_dir)
+            spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(merged_dir)
             .select("term", "df", "ctf")
             .groupBy("term")
             .agg(F.sum("df").cast("long").alias("df"),

@@ -21,7 +21,7 @@ import zlib
 import numpy as np
 import pandas as pd
 
-from .codec import SKIP_BLOCK
+from .codec import SKIP_BLOCK, varint_encode_with_bounds
 
 # --- byte-level tokenizer ---------------------------------------------------
 # Semantically identical to functions.tokenizer ([a-z0-9]+ runs over the
@@ -189,37 +189,6 @@ def tokenize_batch_bytes(
     return codes, doc_of_tok, dl_per_doc, terms_sorted
 
 
-def _varint_nbytes(v: np.ndarray) -> np.ndarray:
-    """Bytes each uint64 value needs under LEB128 (vectorized)."""
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp > 0
-        if not nz.any():
-            break
-        nbits[nz] += 1
-        tmp >>= np.uint64(7)
-    return np.maximum(nbits, 1)
-
-
-def _varint_encode_with_bounds(v: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Encode the whole array at once; return (buffer, end-offset per value)."""
-    v = np.asarray(v, dtype=np.uint64)
-    if v.size == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    nbytes = _varint_nbytes(v)
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    for j in range(int(nbytes.max())):
-        mask = nbytes > j
-        idx = starts[mask] + j
-        chunk = ((v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[mask] - 1 > j).astype(np.uint8) * np.uint8(0x80)
-        out[idx] = chunk | cont
-    return out.tobytes(), ends
-
-
 def encode_segment(
     doc_ids: np.ndarray, texts: pd.Series
 ) -> tuple[pd.DataFrame, dict]:
@@ -248,15 +217,8 @@ def encode_segment(
 
     total_toks = int(dl_per_doc.sum())
     if total_toks == 0:
-        empty = pd.DataFrame(
-            columns=[
-                "term", "df", "ctf", "max_tf", "tf_offset", "dl_offset",
-                "checksum", "blob", "block_last_doc", "block_max_tf",
-                "block_min_dl", "codec",
-            ]
-        )
         summary.update({"n_terms": 0, "n_postings": 0, "crc": 0})
-        return empty, summary
+        return postings_rows_frame([]), summary
 
     # One stable radix sort over a combined (term, doc) int64 key drives
     # everything: postings come out term-grouped and docID-sorted. A single
@@ -300,21 +262,22 @@ def encode_postings_rows(
     p_doc: np.ndarray,
     tfs: np.ndarray,
     p_dl: np.ndarray,
+    crc: int = 0,
 ) -> tuple[pd.DataFrame, int]:
     """Vectorized whole-group varint encode of term-grouped, docID-sorted
     posting rows -> the on-disk postings table (one row per term).
 
-    Used by the build path (encode_segment). The merge path
-    (operators/merge.py) deliberately encodes per term via encode_postings
-    — whole-group decode/encode at merge shape was A/B-measured ~3.5x
-    SLOWER (BENCH.md: large concatenated lists thrash DRAM), so merge keeps
-    cache-resident per-term loops. The byte/CRC-identity contract between a
-    merged segment and a single-segment build therefore rests on the two
-    encoders producing identical bytes, which tests/test_merge* enforce
-    (test_merge_then_query_identity: CRC-identical output). Inputs:
-    `uniques[i]` is the term of group i; rows
-    [t_starts[i], t_starts[i]+t_counts[i]) of p_doc/tfs/p_dl are its
-    postings, docID-ascending. Returns (rows_df, seg_crc)."""
+    Used by the build path (encode_segment, one call per segment) and by
+    the merge kernel (operators/merge.py, one call per chunk of whole terms
+    of at most merge.BATCH_VALUES decoded values: whole-group encode over a
+    25M-posting merge ran ~3.5x slower, BENCH.md "Merge kernel A/B"). One
+    encoder on both paths is what makes a merged segment byte- and
+    CRC-identical to a single-segment build (tests/test_merge_kernel.py,
+    test_merge_then_query_identity). Inputs: `uniques[i]` is the term of
+    group i; rows [t_starts[i], t_starts[i]+t_counts[i]) of p_doc/tfs/p_dl
+    are its postings, docID-ascending. The segment CRC chains from `crc`,
+    so chunks encoded in order give the whole segment's CRC. Returns
+    (rows_df, seg_crc)."""
     n_terms = len(t_starts)
 
     # docID deltas with reset at term starts.
@@ -323,9 +286,9 @@ def encode_postings_rows(
     deltas[1:] = p_doc[1:] - p_doc[:-1]
     deltas[t_starts] = p_doc[t_starts]
 
-    doc_buf, doc_ends = _varint_encode_with_bounds(deltas.astype(np.uint64))
-    tf_buf, tf_ends = _varint_encode_with_bounds(tfs.astype(np.uint64))
-    dl_buf, dl_ends = _varint_encode_with_bounds(p_dl.astype(np.uint64))
+    doc_buf, doc_ends = varint_encode_with_bounds(deltas.astype(np.uint64))
+    tf_buf, tf_ends = varint_encode_with_bounds(tfs.astype(np.uint64))
+    dl_buf, dl_ends = varint_encode_with_bounds(p_dl.astype(np.uint64))
 
     t_ends_rows = t_starts + t_counts  # exclusive end row of each term
     def sect_bounds(ends):
@@ -356,7 +319,7 @@ def encode_postings_rows(
 
     mv_doc, mv_tf, mv_dl = memoryview(doc_buf), memoryview(tf_buf), memoryview(dl_buf)
     blobs, checksums = [], np.empty(n_terms, dtype=np.int64)
-    seg_crc = 0
+    seg_crc = crc
     for i in range(n_terms):
         blob = bytes(mv_doc[d_lo[i]:d_hi[i]]) + bytes(mv_tf[f_lo[i]:f_hi[i]]) + bytes(
             mv_dl[l_lo[i]:l_hi[i]]
@@ -385,3 +348,27 @@ def encode_postings_rows(
         }
     )
     return rows, seg_crc
+
+
+def postings_rows_frame(encs: list) -> pd.DataFrame:
+    """codec.EncodedPostings rows -> the frame encode_postings_rows returns
+    (the per-term encoder's output in the build's table shape)."""
+    return pd.DataFrame(
+        {
+            "term": pd.Series([e.term for e in encs], dtype=object),
+            "df": np.array([e.df for e in encs], dtype=np.int32),
+            "ctf": np.array([e.ctf for e in encs], dtype=np.int64),
+            "max_tf": np.array([e.max_tf for e in encs], dtype=np.int32),
+            "tf_offset": np.array([e.tf_offset for e in encs], dtype=np.int32),
+            "dl_offset": np.array([e.dl_offset for e in encs], dtype=np.int32),
+            "checksum": np.array([e.checksum for e in encs], dtype=np.int64),
+            "blob": pd.Series([e.blob for e in encs], dtype=object),
+            "block_last_doc": pd.Series(
+                [e.block_last_doc for e in encs], dtype=object),
+            "block_max_tf": pd.Series(
+                [e.block_max_tf for e in encs], dtype=object),
+            "block_min_dl": pd.Series(
+                [e.block_min_dl for e in encs], dtype=object),
+            "codec": np.array([e.codec for e in encs], dtype=np.int32),
+        }
+    )

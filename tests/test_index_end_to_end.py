@@ -12,12 +12,14 @@ import shutil
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import spark_jobs
 from test_local_serve import assert_served_locally
 
 from opensearch_jvector_plugin_spark.operators import query
 from opensearch_jvector_plugin_spark.operators.build import (
     build_index,
     committed_segments,
+    finalize_index,
 )
 from opensearch_jvector_plugin_spark.operators.merge import merge_segments
 from opensearch_jvector_plugin_spark.operators.query import load_index, search
@@ -56,6 +58,18 @@ def test_build_manifests_and_stats(built, small_corpus_pdf):
     ranges = [(m["doc_lo"], m["doc_hi"]) for _, m in sorted(m8.items())]
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 < lo2
+
+
+def test_finalize_reads_segments_with_fixed_schema(
+    spark, tiny_corpus_pdf, tmp_path
+):
+    """The dictionary job reads the segments with the codec's fixed schema,
+    so it launches no schema-inference job."""
+    d = str(tmp_path / "fin")
+    build_index(spark.createDataFrame(tiny_corpus_pdf), d, seg_size=25)
+    stats, jobs = spark_jobs(spark, lambda: finalize_index(spark, d))
+    assert stats["n_docs"] == len(tiny_corpus_pdf)
+    assert jobs <= 2
 
 
 def test_search_rank_identity_single_and_multi_segment(
