@@ -286,10 +286,7 @@ def build_index(
 
 
 def finalize_index(spark: SparkSession, index_dir: str, storage=None) -> dict:
-    """stats.json + global term dictionary from committed manifests.
-
-    The dict job reads only metadata columns of the segment postings -
-    Parquet column pruning never touches the blobs."""
+    """stats.json + global term dictionary from committed manifests."""
     st = _text_storage(storage)
     manifests = committed_segments(index_dir, storage=st)
     n_docs = sum(m["n_docs"] for m in manifests.values())
@@ -312,21 +309,30 @@ def finalize_index(spark: SparkSession, index_dir: str, storage=None) -> dict:
         json.dumps(stats, indent=1, sort_keys=True).encode(),
     )
 
-    seg_glob = os.path.join(index_dir, "segments")
     if manifests:
-        postings_meta = (
-            spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(seg_glob)
-            .select("term", "df", "ctf")
-        )
-        (
-            postings_meta.groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"),
-                 F.sum("ctf").cast("long").alias("ctf"))
-            # coalesce: bound the output file count WITHOUT the second
-            # full exchange a repartition() pays after the groupBy's
-            # (round 7, guide §2.4; dict content is set-identical).
-            .coalesce(max(1, min(32, len(manifests))))
-            .write.mode("overwrite")
-            .parquet(os.path.join(index_dir, "dict"))
+        write_dict(
+            spark, os.path.join(index_dir, "segments"),
+            os.path.join(index_dir, "dict"), len(manifests),
         )
     return stats
+
+
+def write_dict(
+    spark: SparkSession, postings_path: str, dict_path: str, n_segments: int
+) -> None:
+    """The global term dictionary (term, df, ctf) of the segment postings
+    under `postings_path`, summed per term (one writer for the build and
+    the purging merge)."""
+    (
+        spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(postings_path)
+        .select("term", "df", "ctf")
+        .groupBy("term")
+        .agg(F.sum("df").cast("long").alias("df"),
+             F.sum("ctf").cast("long").alias("ctf"))
+        # coalesce: bound the output file count WITHOUT the second full
+        # exchange a repartition() pays after the groupBy's (round 7,
+        # guide §2.4; dict content is set-identical).
+        .coalesce(max(1, min(32, n_segments)))
+        .write.mode("overwrite")
+        .parquet(dict_path)
+    )

@@ -37,9 +37,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from .build import POSTINGS_SPARK_SCHEMA, committed_segments, write_postings
+from .build import committed_segments, write_dict, write_postings
 from .codec import (
     CODEC_VARINT,
     PostingList,
@@ -330,18 +329,7 @@ def merge_segments(
         st.put_bytes(
             stats_path, json.dumps(stats, indent=1, sort_keys=True).encode()
         )
-        (
-            spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(merged_dir)
-            .select("term", "df", "ctf")
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"),
-                 F.sum("ctf").cast("long").alias("ctf"))
-            # coalesce, not repartition: same dict content, no second
-            # exchange after the groupBy (round 7).
-            .coalesce(max(1, min(32, len(seg_ids))))
-            .write.mode("overwrite")
-            .parquet(index.dict_path)
-        )
+        write_dict(spark, merged_dir, index.dict_path, len(seg_ids))
         mark_purged(index.index_dir, storage=st)
 
     manifest = {

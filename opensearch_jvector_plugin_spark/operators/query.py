@@ -55,7 +55,7 @@ from ..functions.bm25 import bm25_idf_py
 from ..functions.tokenizer import tokenize_text
 from ..plans.state import term_df_map
 from .build import POSTINGS_SPARK_SCHEMA
-from .codec import decode_postings
+from .codec import decode_postings, decode_postings_batch
 from .wand import _tf_norm_np, maxscore_topk, minscore_all, term_upper_bound
 
 RESULT_SCHEMA = "query_id INT, doc_id LONG, score DOUBLE"
@@ -267,8 +267,6 @@ def decode_segment_postings(pdf: pd.DataFrame) -> dict[str, tuple]:
         else np.ones(len(pdf), dtype=np.int64)
     )
     if (codecs == 1).all() and len(pdf):
-        from .codec import decode_postings_batch
-
         lists = decode_postings_batch(
             list(pdf["blob"]), pdf["df"].to_numpy(),
             pdf["checksum"].to_numpy(),
@@ -283,6 +281,33 @@ def decode_segment_postings(pdf: pd.DataFrame) -> dict[str, tuple]:
             )
             decoded[r.term] = (dec.doc_ids, dec.tfs, dec.dls)
     return decoded
+
+
+def write_decoded_postings(spark: SparkSession, index_dir: str, out: str) -> None:
+    """Write the flat (doc_id, dl, term, tf) postings of an index's
+    segments to `out`: `plans.stats.postings_df` of the indexed corpus
+    (tombstones not applied), decoded from the build's varint blobs in one
+    mapInPandas pass over the fixed-schema scan — no tokenize, no shuffle."""
+
+    def decode(batches):
+        for pdf in batches:
+            lists = decode_postings_batch(
+                list(pdf["blob"]), pdf["df"].to_numpy(),
+                pdf["checksum"].to_numpy(),
+            )
+            if lists:
+                yield pd.DataFrame({
+                    "doc_id": np.concatenate([p.doc_ids for p in lists]),
+                    "dl": np.concatenate([p.dls for p in lists]).astype("i4"),
+                    "term": np.repeat(pdf["term"].to_numpy(), pdf["df"]),
+                    "tf": np.concatenate([p.tfs for p in lists]).astype("i4"),
+                })
+
+    spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(
+        os.path.join(index_dir, "segments")
+    ).select("term", "df", "checksum", "blob").mapInPandas(
+        decode, "doc_id LONG, dl INT, term STRING, tf INT"
+    ).write.mode("overwrite").parquet(out)
 
 
 class _Segment:

@@ -137,21 +137,80 @@ def test_large_dict_takes_distributed_scan(
 def test_toks_parallel_keeps_a_scan_with_enough_splits(spark, tmp_path):
     par = spark.sparkContext.defaultParallelism
 
-    def sidecar(n_files: int):
-        d = tmp_path / f"state{n_files}"
+    def sidecar(n_files: int) -> str:
+        path = str(tmp_path / f"state{n_files}" / "toks")
         (
             spark.range(0, 400)
             .selectExpr("id AS doc_id", "array('a', 'b') AS toks", "2 AS dl")
             .repartition(n_files)
-            .write.parquet(str(d / "toks"))
+            .write.parquet(path)
         )
-        return eq._SidecarState(str(d), stats=None)
+        return path
 
-    def plan(st) -> str:
-        df = st.toks(spark, parallel=True)
+    def plan(path) -> str:
+        df = eq._spread_scan(spark, path, parallel=True)
         return df._jdf.queryExecution().executedPlan().toString()
 
     many = sidecar(2 * par)
-    assert many.read(spark, "toks").rdd.getNumPartitions() >= par
+    assert spark.read.parquet(many).rdd.getNumPartitions() >= par
     assert "RoundRobinPartitioning" not in plan(many)
     assert "RoundRobinPartitioning" in plan(sidecar(1))
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_corpus_state_decodes_the_source_relation(spark, sf_dir):
+    """The corpus state is a view of the segment index: its decoded
+    postings sidecar is exactly postings_df of the documents, and its
+    stats are the Spark count / avg(dl) of the tokenized source."""
+    from pyspark.sql import functions as F
+
+    from opensearch_jvector_plugin_spark.functions.tokenizer import (
+        tokenize_col,
+    )
+    from opensearch_jvector_plugin_spark.plans.stats import postings_df
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    st = eq._corpus_state(spark, sf_dir)
+    got = st.read(spark, "postings")
+    want = postings_df(docs)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert got.schema.simpleString() == (
+        "struct<doc_id:bigint,dl:int,term:string,tf:int>"
+    )
+    got_rows, want_rows = got.collect(), want.collect()
+    assert len(got_rows) == len(set(got_rows))
+    assert set(got_rows) == set(want_rows)
+    assert len(got_rows) == len(want_rows)
+
+    row = docs.select(
+        F.count("*").alias("n"),
+        F.avg(F.size(tokenize_col("text")).cast("double")).alias("avgdl"),
+    ).collect()[0]
+    assert st.stats.n_docs == row["n"]
+    assert st.stats.avgdl == row["avgdl"]
+
+
+def test_one_index_build_per_documents_version(spark, tmp_path, monkeypatch):
+    """bm25_topk's state, the indexed top-k and the indexed phrase query
+    share one segment index over a fresh sf_dir."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copyfile(
+        os.path.join(SF_DIRS[0], "documents.parquet"),
+        str(sf / "documents.parquet"),
+    )
+    builds = []
+    orig = eq.build_index
+
+    def spy(*a, **kw):
+        builds.append(a[1])
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(eq, "build_index", spy)
+    seen = []
+    for name in ("bm25_topk", "bm25_topk_indexed", "bm25_phrase_indexed"):
+        eq.QUERIES[name](spark, str(sf)).collect()
+        seen.append(len(builds))
+    # The first query's corpus state is the build; the others reuse it.
+    assert seen == [1, 1, 1]
+    assert eq._corpus_state(spark, str(sf)).idx_dir == builds[0]
