@@ -30,13 +30,22 @@ Lifecycle:
    dual-assignment that buys recall at the cost of replicated storage.
    Commit = atomic manifest rename (same resume discipline as the text
    segments).
-3. **Serve**:
-   - `ivf_search_exact`: probe buckets, exact float64 metric (left-fold
-     Catalyst expression — bit-identical to the DuckDB oracle), top-k.
-   - `ivf_search`: quantized first pass (int8 ADC, reading ONLY the
-     qvec/qscale/qnorm columns — a fraction of the full-precision bytes),
-     over-fetch k * over_query, then exact rerank of the candidates at full
-     precision (the JVectorReader rerankerFor shape).
+3. **Serve**: every mode is one pipeline, the per-segment search of
+   JVectorReader.search (probe, over-query, acceptDocs, rerankerFor):
+   `_plan` (the driver-side query matrix and top-nprobe probes) ->
+   optionally `_bucket_pass` (ONE mapInPandas over the partition-pruned
+   scan of a codec's columns, no exchange, running a per-bucket body) ->
+   `_exact_tail` (full-precision candidates, left-fold Catalyst metric —
+   bit-identical to the DuckDB oracle —, threshold, replica dedup,
+   round-6 rank).
+   - `ivf_search_exact`: plan -> tail over every probed row, top-k.
+   - `ivf_search_radial`: codec="exact" is the same with a threshold and
+     no k; sq/pq first run the `_radial_body` cut, a proven-conservative
+     bound (sq_* / pq_radial_bound), and the tail verifies the survivors.
+   - `ivf_search`: the `_topk_body` pass (sq/pq/bq/mb2/mb4/fp16 scores
+     from the quantized bytes only) over-fetches per query, a global fetch
+     cut picks the candidates, the tail reranks them at full precision.
+     Below `approximate_threshold` vectors it is `ivf_search_exact`.
 
 Numeric parity contract (the round-2 lesson — VERDICT r2 "what's wrong" #1
 and ADVICE r2 low #3): every cosine/l2/ip that decides an ASSIGNMENT or a
@@ -57,6 +66,8 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -797,6 +808,14 @@ _BUCKET_SCHEMA = (
 )
 
 
+def _vec_id_frame(spark: SparkSession, ids) -> DataFrame:
+    """One `vec_id LONG` column of `ids`: the tombstone and allow lists."""
+    return spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.asarray(ids, dtype=np.int64)}),
+        "vec_id LONG",
+    )
+
+
 def _read_sample_sorted(src: DataFrame, n_vecs: int, sample_cap: int):
     """Bounded, deterministic training sample as a vec_id-sorted pandas
     frame — identical input on ANY partitioning and identical to the pandas
@@ -1199,11 +1218,7 @@ def append_vectors(
         # Re-appending a tombstoned id would be silently filtered by the
         # serving scan — reject instead; revive is explicit
         # (undelete_vectors) so the contract stays unambiguous.
-        dead_df = spark.createDataFrame(
-            pd.DataFrame({"vec_id": np.asarray(sorted(dead),
-                                               dtype=np.int64)}),
-            "vec_id LONG",
-        )
+        dead_df = _vec_id_frame(spark, sorted(dead))
         n_dead = src.join(F.broadcast(dead_df), "vec_id", "left_semi").count()
         if n_dead:
             raise ValueError(
@@ -1346,10 +1361,7 @@ def compact_vector_index(
     dead = sorted(manifest.get("deleted", []))
     n_purged = 0
     if dead:
-        dead_df = spark.createDataFrame(
-            pd.DataFrame({"vec_id": np.asarray(dead, dtype=np.int64)}),
-            "vec_id LONG",
-        )
+        dead_df = _vec_id_frame(spark, dead)
         n_purged = (
             df.join(F.broadcast(dead_df), "vec_id", "left_semi")
             .select("vec_id").distinct().count()
@@ -1517,8 +1529,7 @@ class VectorIndexHandle:
 
     def pq_codebooks(self) -> np.ndarray:
         """(m, 256, dim/m) codebooks persisted at build time."""
-        if self.pq_m is None:
-            raise ValueError("index was built without PQ (pq_m=None)")
+        _require_codec(self, "pq")
         if getattr(self, "_books", None) is None:
             bpdf = pd.read_parquet(
                 os.path.join(self.index_dir, "pq_codebooks.parquet")
@@ -1536,11 +1547,7 @@ class VectorIndexHandle:
 
     def bq_thresholds(self) -> np.ndarray:
         """(dim,) per-dimension 1-bit thresholds persisted at build time."""
-        if not self.manifest.get("bq"):
-            raise ValueError(
-                "index was built without 1-bit codes (pre-round-6 build); "
-                "rebuild to serve codec='bq'"
-            )
+        _require_codec(self, "bq")
         if getattr(self, "_bqth", None) is None:
             tpdf = pd.read_parquet(
                 os.path.join(self.index_dir, "bq_thresholds.parquet")
@@ -1554,11 +1561,7 @@ class VectorIndexHandle:
 
     def mb_thresholds(self) -> np.ndarray:
         """(mb_bits, dim) multi-bit thresholds persisted at build time."""
-        if not self.mb_bits:
-            raise ValueError(
-                "index was built without multi-bit codes (mb_bits=None); "
-                "rebuild with mb_bits=2 or 4 to serve codec='mb2'/'mb4'"
-            )
+        _require_codec(self, f"mb{self.mb_bits or 2}")
         if getattr(self, "_mbth", None) is None:
             tpdf = pd.read_parquet(
                 os.path.join(self.index_dir, "mb_thresholds.parquet")
@@ -1604,8 +1607,12 @@ class VectorIndexHandle:
         crashed batches back."""
         bp = self.buckets_path
         pb = self.manifest.get("pending_batch_id")
+        # The fixed schema spares a schema-inference job per plan; an index
+        # written before a codec column existed reads it as nulls, and
+        # serving gates every codec on the manifest (_require_codec).
+        reader = spark.read.schema(_BUCKET_SCHEMA)
         if pb is None:
-            df = spark.read.parquet(bp)
+            df = reader.parquet(bp)
         else:
             prefix = f"batch{int(pb)}-"
             files = []
@@ -1618,7 +1625,7 @@ class VectorIndexHandle:
                         prefix
                     ):
                         files.append(os.path.join(pdir, fname))
-            df = spark.read.option("basePath", bp).parquet(*files)
+            df = reader.option("basePath", bp).parquet(*files)
         dead = self.deleted_ids()
         if len(dead):
             # liveDocs filter: every serving path reads through here, so
@@ -1626,10 +1633,9 @@ class VectorIndexHandle:
             # immediately. Broadcast anti-join — the fat side never
             # shuffles. Compaction purges physically (it reads raw files,
             # not this scan).
-            dead_df = spark.createDataFrame(
-                pd.DataFrame({"vec_id": dead}), "vec_id LONG"
+            df = df.join(
+                F.broadcast(_vec_id_frame(spark, dead)), "vec_id", "left_anti"
             )
-            df = df.join(F.broadcast(dead_df), "vec_id", "left_anti")
         return df
 
 
@@ -1646,20 +1652,113 @@ def load_vector_index(index_dir: str, storage=None) -> VectorIndexHandle:
     return VectorIndexHandle(index_dir, storage=storage)
 
 
+# ------------------------------------------------------------ IVF serving
+# _plan -> optional _bucket_pass -> _exact_tail (module docstring, Serve).
+
+_SEARCH_CODECS = ("sq", "pq", "bq", "mb2", "mb4", "fp16")
+_RADIAL_CODECS = ("sq", "pq", "exact")
+# First-pass columns per codec: the bytes a probe reads instead of the
+# float32 embedding (sq ~dim+16, pq m, bq ceil(dim/8) — 1/32 of float32 —,
+# mb2/mb4 ceil(bits*dim/8), fp16 2*dim per vector).
+_CODE_COLS = {
+    "sq": ["qvec", "qscale", "qnorm"], "pq": ["pqcode"], "bq": ["bqcode"],
+    "mb2": ["mbcode"], "mb4": ["mbcode"], "fp16": ["fp16code"],
+}
+
+
+def _require_codec(index, codec: str, radial: bool = False) -> None:
+    """Refuse a codec the serving path does not know, or whose codes the
+    index was not built with. Radial pq bounds its cut with the stored
+    per-vector reconstruction error, so it also needs `pq_err_col`."""
+    if codec not in (_RADIAL_CODECS if radial else _SEARCH_CODECS):
+        raise ValueError(f"unknown codec {codec!r}")
+    man = index.manifest
+    if codec == "pq" and man.get("pq_m") is None:
+        raise ValueError("index was built without PQ codes (pq_m=None)")
+    if codec == "pq" and radial and not man.get("pq_err_col"):
+        raise ValueError(
+            "index predates the stored PQ reconstruction error "
+            "(pq_err_col); rebuild or use codec='sq'"
+        )
+    if codec == "bq" and not man.get("bq"):
+        raise ValueError(
+            "index was built without 1-bit codes (pre-round-6 build); "
+            "rebuild to serve codec='bq'"
+        )
+    if codec in ("mb2", "mb4") and man.get("mb_bits") != int(codec[2:]):
+        raise ValueError(
+            f"codec {codec!r} needs an index built with "
+            f"mb_bits={codec[2:]}; this index has "
+            f"mb_bits={man.get('mb_bits')}"
+        )
+    if codec == "fp16" and not man.get("fp16"):
+        raise ValueError(
+            "index was built without half-precision copies; rebuild with "
+            "fp16=True to serve codec='fp16'"
+        )
+
+
+class _Queries(NamedTuple):
+    """A query set as the bucket kernel reads it."""
+
+    ids: np.ndarray  # int32 query ids
+    raw: np.ndarray  # (nq, dim) float64 query vectors u
+    unit: np.ndarray  # u / ||u||
+    norm: np.ndarray  # ||u||
+    luts: np.ndarray | None = None  # PQ tables or packed bit codes
+
+    def take(self, sel: np.ndarray) -> "_Queries":
+        return _Queries(*(None if a is None else a[sel] for a in self))
+
+
+class _Plan(NamedTuple):
+    qpdf: pd.DataFrame  # the query frame, in pandas
+    q: _Queries
+    probes: pd.DataFrame  # (query_id, centroid_id) probe pairs
+    probe_sets: dict  # centroid_id -> {query_id probing it}
+    probed_cids: list  # sorted probed centroid_ids
+
+
 def _probes(
-    index: VectorIndexHandle, queries: pd.DataFrame, nprobe: int
+    index: VectorIndexHandle, qids: np.ndarray, qmat: np.ndarray, nprobe: int
 ) -> pd.DataFrame:
     """(query_id, centroid_id) probe pairs: top-nprobe centroids per query
     under the index's metric — exact fold-order float64 values, ties to the
     lowest centroid_id (the SQL row_number contract)."""
-    qmat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in queries["query_vec"]]
-    )
     nprobe = min(nprobe, len(index.centroids))
     order = assign_topn(qmat, index.centroids, index.metric, n=nprobe)
-    qids = np.repeat(queries["query_id"].to_numpy(np.int32), nprobe)
     return pd.DataFrame(
-        {"query_id": qids, "centroid_id": order.ravel().astype(np.int32)}
+        {"query_id": np.repeat(qids, nprobe),
+         "centroid_id": order.ravel().astype(np.int32)}
+    )
+
+
+def _plan(index: VectorIndexHandle, queries, nprobe: int) -> _Plan:
+    """The driver-side query and probe plan of every IVF search. A pandas
+    query set is taken as is: no Spark job just to collect a handful of
+    query vectors."""
+    qpdf = queries if isinstance(queries, pd.DataFrame) else queries.toPandas()
+    qmat = np.asarray(
+        [np.asarray(v, dtype=np.float64) for v in qpdf["query_vec"]]
+    )
+    qids = qpdf["query_id"].to_numpy(np.int32)
+    probes = _probes(index, qids, qmat, nprobe)
+    probe_sets: dict[int, set] = {}
+    for qid, cid in zip(probes["query_id"], probes["centroid_id"]):
+        probe_sets.setdefault(int(cid), set()).add(int(qid))
+    norm = np.linalg.norm(qmat, axis=1)
+    q = _Queries(qids, qmat, qmat / np.maximum(norm, 1e-30)[:, None], norm)
+    return _Plan(qpdf, q, probes, probe_sets, sorted(probe_sets))
+
+
+def _probed_scan(
+    spark: SparkSession, index: VectorIndexHandle, probed_cids: list, cols
+) -> DataFrame:
+    """The serving scan, partition-pruned to the probed buckets."""
+    return (
+        index.bucket_scan(spark)
+        .where(F.col("centroid_id").isin(probed_cids))
+        .select(*cols)
     )
 
 
@@ -1681,6 +1780,335 @@ def _metric_col(metric: str):
     raise ValueError(f"unknown IVF metric {metric!r}")
 
 
+def _query_luts(index: VectorIndexHandle, codec: str, qmat: np.ndarray):
+    """Per-query first-pass tables, built once on the driver and broadcast:
+    the (m, 256) PQ ADC lookup tables, or the queries' packed 1-bit /
+    thermometer codes for the hamming codecs; None for sq and fp16."""
+    if codec == "pq":
+        books = index.pq_codebooks()
+        return np.stack(
+            [pq_lut(qmat[i], books, index.metric) for i in range(len(qmat))]
+        )
+    if codec == "bq":
+        return quantize_binary(qmat, index.bq_thresholds(), index.metric)
+    if codec in ("mb2", "mb4"):
+        return quantize_multibit(qmat, index.mb_thresholds(), index.metric)
+    return None
+
+
+def _sq_dots(pdf: pd.DataFrame, dim: int, qm: np.ndarray):
+    """(int8 codes . qm) for every row of a bucket slice — one GEMM — with
+    the rows' stored scale and norm."""
+    qv = np.frombuffer(
+        b"".join(pdf["qvec"]), dtype=np.int8
+    ).reshape(len(pdf), dim).astype(np.float64)
+    return (
+        qv @ qm.T,
+        pdf["qscale"].to_numpy(np.float64),
+        pdf["qnorm"].to_numpy(np.float64),
+    )
+
+
+def _pq_adc(pdf: pd.DataFrame, luts: np.ndarray) -> np.ndarray:
+    """Classic ADC over the m-byte PQ codes: per query, the sum of its
+    lookup table at each row's m codes."""
+    m = luts.shape[1]
+    codes = np.frombuffer(
+        b"".join(pdf["pqcode"]), dtype=np.uint8
+    ).reshape(len(pdf), m).astype(np.int64)
+    out = np.empty((len(pdf), len(luts)), dtype=np.float64)
+    rows = np.arange(m)
+    for j, lut in enumerate(luts):
+        out[:, j] = lut[rows[None, :], codes].sum(axis=1)
+    return out
+
+
+RADIAL_ADC_SLACK = 1e-7  # float headroom on the bound; only ADDS candidates
+
+
+# Radial bounds. With v = scale*q + e the int8 rounding error satisfies
+# ||e||_2 <= scale*sqrt(d)/2 (scale = maxabs/127 means no clipping — the
+# bound of dedup.embedding_near_dup_pairs_bucketed stage 2). Given the GEMM
+# `dots` of _sq_dots, each function returns per (row, query) a true upper
+# bound on closeness or the term of a lower bound on distance, so cutting
+# on it drops no vector that passes the exact threshold.
+
+
+def sq_error_norm(scale: np.ndarray, dim: int) -> np.ndarray:
+    """The int8 rounding-error norm bound scale*sqrt(d)/2, per row."""
+    return scale * (np.sqrt(dim) / 2.0)
+
+
+def sq_cosine_upper(dots, scale, qnorm, err) -> np.ndarray:
+    """v.u_hat <= s*(q.u_hat) + E and ||v|| >= qnorm - E, so the cosine is
+    at most (s*(q.u_hat) + E) / (qnorm -/+ E) (sign-aware divisor)."""
+    num = dots * scale[:, None] + err[:, None]
+    denom = np.where(
+        num > 0,
+        np.maximum(qnorm - err, 1e-30)[:, None],
+        (qnorm + err)[:, None],
+    )
+    return num / denom
+
+
+def sq_ip_upper(dots, scale, err, unorm) -> np.ndarray:
+    """Cauchy-Schwarz: v.u <= s*(q.u) + E*||u||."""
+    return dots * scale[:, None] + err[:, None] * unorm[None, :]
+
+
+def sq_l2_distance(dots, scale, qnorm, usq) -> np.ndarray:
+    """||s*q - u||, the reconstructed l2 distance; the exact distance is at
+    least this minus E."""
+    return np.sqrt(
+        np.maximum(
+            (qnorm * qnorm)[:, None] - 2.0 * (dots * scale[:, None])
+            + usq[None, :],
+            0.0,
+        )
+    )
+
+
+def pq_radial_bound(metric: str, adc, pqerr, unorm) -> np.ndarray:
+    """adc +/- pqerr, with pqerr the stored per-vector reconstruction-error
+    norm (pq_encode_with_err): an upper bound on the exact cosine (on the
+    ip with pqerr*||u||), or a lower bound on the exact l2 distance (the
+    l2 lut holds the NEGATED approx squared distance). A null pqerr (rows
+    appended to a pre-round-4 index) bounds nothing: the row is kept."""
+    pqe = np.where(np.isfinite(pqerr), pqerr, np.inf)
+    if metric == "cosine":
+        return adc + pqe[:, None]
+    if metric == "innerproduct":
+        return adc + pqe[:, None] * unorm[None, :]
+    with np.errstate(invalid="ignore"):
+        return np.sqrt(np.maximum(-adc, 0.0)) - pqe[:, None]
+
+
+def _radial_body(pdf, q: _Queries, codec, metric, dim, t) -> pd.DataFrame:
+    """The conservative radial cut of one bucket slice: the (query_id,
+    vec_id) pairs whose bound could pass the exact threshold `t`
+    (RADIAL_ADC_SLACK only widens the net); the exact tail verifies them."""
+    slack = RADIAL_ADC_SLACK * (1.0 + abs(t))
+    if codec == "pq":
+        bound = pq_radial_bound(
+            metric, _pq_adc(pdf, q.luts), pdf["pqerr"].to_numpy(np.float64),
+            q.norm,
+        )
+        if metric in ("cosine", "innerproduct"):
+            ok = bound >= t - slack
+        else:
+            ok = bound <= np.sqrt(t) + slack
+    elif metric == "cosine":
+        dots, scale, qnorm = _sq_dots(pdf, dim, q.unit)
+        ok = sq_cosine_upper(
+            dots, scale, qnorm, sq_error_norm(scale, dim)
+        ) >= t - slack
+    elif metric == "innerproduct":
+        dots, scale, _ = _sq_dots(pdf, dim, q.raw)
+        ok = sq_ip_upper(
+            dots, scale, sq_error_norm(scale, dim), q.norm
+        ) >= t - slack
+    else:  # l2 (max_distance on the squared distance)
+        dots, scale, qnorm = _sq_dots(pdf, dim, q.raw)
+        usq = (q.raw * q.raw).sum(axis=1)
+        ok = sq_l2_distance(dots, scale, qnorm, usq) <= (
+            np.sqrt(t) + sq_error_norm(scale, dim)[:, None] + slack
+        )
+    rows, cols = np.nonzero(ok)
+    if not len(rows):
+        return None
+    return pd.DataFrame(
+        {"query_id": q.ids[cols].astype(np.int32),
+         "vec_id": pdf["vec_id"].to_numpy(np.int64)[rows]}
+    )
+
+
+def _topk_body(pdf, q: _Queries, codec, metric, dim, fetch) -> pd.DataFrame:
+    """Approximate scores of one bucket slice (bigger = closer in every
+    space) and each query's top-`fetch` rows of it. The union over slices
+    is a superset of each bucket's top-fetch (a row of a bucket's top-fetch
+    also tops its own slice), so the global fetch cut selects the same
+    candidates as one task per bucket would."""
+    if codec == "pq":
+        sims = _pq_adc(pdf, q.luts)
+    elif codec in ("bq", "mb2", "mb4"):
+        # q.luts holds the queries' packed bit codes: approx = -hamming
+        # (for mb, the L1 distance between quantization levels).
+        codes = np.frombuffer(
+            b"".join(pdf[_CODE_COLS[codec][0]]), dtype=np.uint8
+        ).reshape(len(pdf), q.luts.shape[1])
+        sims = -hamming_packed(codes, q.luts).astype(np.float64)
+    elif codec == "fp16":
+        v = np.frombuffer(
+            b"".join(pdf["fp16code"]), dtype="<f2"
+        ).reshape(len(pdf), dim).astype(np.float64)
+        if metric == "cosine":
+            nv = np.maximum(np.linalg.norm(v, axis=1), 1e-30)
+            sims = (v @ q.unit.T) / nv[:, None]
+        elif metric == "innerproduct":
+            sims = v @ q.raw.T
+        else:  # l2 / hamming: -(||v||^2 - 2 v.q + ||q||^2)
+            qv2 = (q.raw * q.raw).sum(axis=1)
+            sims = -(
+                (v * v).sum(axis=1)[:, None]
+                - 2.0 * (v @ q.raw.T)
+                + qv2[None, :]
+            )
+    else:  # sq: one GEMM per (bucket, Arrow batch)
+        dots, scale, qnorm = _sq_dots(
+            pdf, dim, q.unit if metric == "cosine" else q.raw
+        )
+        qnorm = np.maximum(qnorm, 1e-30)
+        if metric == "cosine":
+            sims = dots * (scale / qnorm)[:, None]
+        elif metric == "innerproduct":
+            sims = dots * scale[:, None]
+        else:  # l2: approx -(||v||^2 - 2 v.q + ||q||^2)
+            qsq = (q.raw * q.raw).sum(axis=1)
+            sims = -(
+                (qnorm * qnorm)[:, None]
+                - 2.0 * (dots * scale[:, None])
+                + qsq[None, :]
+            )
+    vid = pdf["vec_id"].to_numpy(np.int64)
+    nn = min(fetch, len(vid))
+    out_q, out_v, out_s = [], [], []
+    for j, qid in enumerate(q.ids):
+        col = sims[:, j]
+        part = np.argpartition(-col, nn - 1)[:nn]
+        out_q.append(np.full(nn, qid, dtype=np.int32))
+        out_v.append(vid[part])
+        out_s.append(col[part])
+    return pd.DataFrame(
+        {"query_id": np.concatenate(out_q),
+         "vec_id": np.concatenate(out_v),
+         "approx": np.concatenate(out_s)}
+    )
+
+
+def _bucket_pass(
+    spark: SparkSession,
+    index: VectorIndexHandle,
+    plan: _Plan,
+    codec: str,
+    body,
+    schema: str,
+    extra: tuple = (),
+    allowed: np.ndarray | None = None,
+) -> DataFrame:
+    """The quantized first pass: one mapInPandas over the probed scan of
+    the codec's columns (plus `extra`), with ZERO exchange. The reference's
+    per-segment search never re-shards data to search it
+    (JVectorReader.java:108-133); grouping by centroid_id WITHIN each Arrow
+    batch (a batch can straddle a partition-file boundary when the scan
+    packs small files) moves no rows and bounds kernel memory by the batch.
+
+    Per bucket slice it keeps the rows whose vec_id is in the sorted
+    `allowed` ids (acceptDocs PRE-filter, before any cut — the text
+    kernel's broadcast-sorted-array + searchsorted shape), selects the
+    queries that probe the bucket and yields `body(rows, queries, codec,
+    metric, dim)`, a frame of `schema` or None."""
+    q = plan.q._replace(luts=_query_luts(index, codec, plan.q.raw))
+    bc = spark.sparkContext.broadcast((q, plan.probe_sets, allowed))
+    metric, dim = index.metric, plan.q.raw.shape[1]
+
+    def run(batches):
+        q, psets, allow = bc.value
+        for batch in batches:
+            for cid, pdf in batch.groupby("centroid_id", sort=False):
+                wanted = psets.get(int(cid))
+                if not wanted:
+                    continue
+                if allow is not None and len(pdf):
+                    if len(allow) == 0:
+                        continue
+                    vid = pdf["vec_id"].to_numpy(np.int64)
+                    pos = np.minimum(np.searchsorted(allow, vid),
+                                     len(allow) - 1)
+                    pdf = pdf[allow[pos] == vid]
+                if not len(pdf):
+                    continue
+                qsel = np.flatnonzero(np.isin(q.ids, list(wanted)))
+                out = body(pdf, q.take(qsel), codec, metric, dim)
+                if out is not None:
+                    yield out
+
+    cols = ["centroid_id", "vec_id", *_CODE_COLS[codec], *extra]
+    return _probed_scan(spark, index, plan.probed_cids, cols).mapInPandas(
+        run, schema
+    )
+
+
+def _exact_tail(
+    spark: SparkSession,
+    index: VectorIndexHandle,
+    plan: _Plan,
+    pairs: DataFrame | None = None,
+    allowed: DataFrame | None = None,
+    k: int | None = None,
+    threshold: float | None = None,
+) -> DataFrame:
+    """Exact rank of the candidates: (query_id, rank, vec_id, metric).
+
+    Candidates at full precision: with `pairs=None`, every row of each
+    query's probed buckets (the broadcast probe pairs joined to the pruned
+    scan); else the (query_id, vec_id) `pairs` of a first pass,
+    broadcast-pinned onto the pruned scan — the reference's reranker reads
+    only these (JVectorReader.java:115-127), it never re-shards the
+    segment. `allowed` (a vec_id frame) is a semi-join PRE-filter on the
+    candidates, before any cut (the acceptDocs analog of
+    JVectorReader.java:128).
+
+    Each candidate is scored with the left-fold Catalyst expression
+    (bit-identical to the DuckDB oracle). `threshold` cuts on that
+    UNROUNDED value (>= for score-like metrics, <= for distance-like).
+    Replica copies (a vector in two probed buckets; the oracle's cand CTE
+    is DISTINCT (query_id, vec_id)) carry identical embeddings and so
+    identical scores: they are dropped AFTER the score and the threshold,
+    on narrow (query_id, vec_id, metric) rows, never by exchanging
+    embedding-carrying rows. The rank orders round-6 values (desc for
+    cosine/ip, asc for l2), vec_id asc; `k` cuts it."""
+    expr_fn, out_col, ascending = _metric_col(index.metric)
+    if allowed is not None:
+        allowed = allowed.select(F.col("vec_id").cast("long").alias("vec_id"))
+    v = F.col("embedding").alias("v")
+    if pairs is None:
+        cand = _probed_scan(
+            spark, index, plan.probed_cids, ["vec_id", "centroid_id", v]
+        )
+        if allowed is not None:
+            cand = cand.join(allowed, "vec_id", "left_semi")
+        cand = cand.join(
+            F.broadcast(spark.createDataFrame(plan.probes)), "centroid_id"
+        )
+    else:
+        if allowed is not None:
+            pairs = pairs.join(allowed, "vec_id", "left_semi")
+        cand = _probed_scan(
+            spark, index, plan.probed_cids, ["vec_id", v]
+        ).join(F.broadcast(pairs), "vec_id")
+    q = spark.createDataFrame(plan.qpdf[["query_id", "query_vec"]]).select(
+        F.col("query_id").cast("int").alias("query_id"),
+        F.col("query_vec").alias("qv"),
+    )
+    scored = (
+        cand.join(F.broadcast(q), "query_id")
+        .withColumn(out_col, expr_fn(F.col("v"), F.col("qv")))
+        .select("query_id", "vec_id", out_col)
+    )
+    if threshold is not None:
+        m = F.col(out_col)
+        scored = scored.where(m <= threshold if ascending else m >= threshold)
+    if index.n_replicas > 1:
+        scored = scored.dropDuplicates(["query_id", "vec_id"])
+    m6 = F.round(F.col(out_col), 6)
+    order = m6.asc() if ascending else m6.desc()
+    w = W.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w).cast("int"))
+    if k is not None:
+        ranked = ranked.where(F.col("rank") <= k)
+    return ranked.select("query_id", "rank", "vec_id", m6.alias(out_col))
+
+
 def ivf_search_exact(
     spark: SparkSession,
     index: VectorIndexHandle,
@@ -1699,204 +2127,8 @@ def ivf_search_exact(
     filter is applied to candidates BEFORE the top-k cut, so a filtered
     query still returns k results when k allowed matches exist in the
     probed buckets."""
-    expr_fn, out_col, ascending = _metric_col(index.metric)
-
-    # Accept a driver-side pandas query set directly (no Spark job just to
-    # collect a handful of query vectors — round 7 fixed-cost trim).
-    qpdf = queries if isinstance(queries, pd.DataFrame) else queries.toPandas()
-    probes = _probes(index, qpdf, nprobe)
-    probed_cids = sorted(set(int(c) for c in probes["centroid_id"]))
-    probes_df = spark.createDataFrame(probes)
-    q = spark.createDataFrame(
-        qpdf[["query_id", "query_vec"]]
-    ).select(
-        F.col("query_id").cast("int").alias("query_id"),
-        F.col("query_vec").alias("qv"),
-    )
-    bucket = (
-        index.bucket_scan(spark)
-        .where(F.col("centroid_id").isin(probed_cids))
-        .select("vec_id", "centroid_id", F.col("embedding").alias("v"))
-    )
-    if allowed is not None:
-        bucket = bucket.join(
-            allowed.select(F.col("vec_id").cast("long").alias("vec_id")),
-            "vec_id", "left_semi",
-        )
-    cand = bucket.join(F.broadcast(probes_df), "centroid_id")
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .withColumn(out_col, expr_fn(F.col("v"), F.col("qv")))
-        .select("query_id", "vec_id", out_col)
-    )
-    if index.n_replicas > 1:
-        # A replicated vector can sit in two probed buckets for the same
-        # query; the oracle's cand CTE is DISTINCT (query_id, vec_id).
-        # Dedup AFTER scoring, on the projection-narrow rows — replica
-        # copies carry identical embeddings so every copy scores the
-        # identical double; deduping the fat (embedding-carrying) rows
-        # first would hash-exchange the vectors for nothing.
-        scored = scored.dropDuplicates(["query_id", "vec_id"])
-    m6 = F.round(F.col(out_col), 6)
-    order = m6.asc() if ascending else m6.desc()
-    w = W.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", m6.alias(out_col))
-    )
-
-
-RADIAL_ADC_SLACK = 1e-7  # float headroom on the bound; only ADDS candidates
-
-
-def _radial_adc_survivors(
-    spark: SparkSession,
-    index: VectorIndexHandle,
-    qpdf: pd.DataFrame,
-    probes: pd.DataFrame,
-    probed_cids: list,
-    min_score: float | None,
-    max_distance: float | None,
-    codec: str = "sq",
-) -> DataFrame:
-    """Conservative ADC threshold cut for radial search: (query_id, vec_id)
-    pairs whose int8-reconstructed metric COULD pass the exact threshold.
-
-    With v = scale*q + e the int8 rounding error satisfies
-    ||e||_2 <= scale*sqrt(d)/2 =: E (scale = maxabs/127 means no clipping —
-    the same bound proven for the bucketed near-dup,
-    dedup.embedding_near_dup_pairs_bucketed stage 2). Per space, a true
-    UPPER bound on closeness (lower bound on distance):
-
-      cosine:  v.u_hat <= s*(q.u_hat) + E and ||v|| >= qnorm - E, so
-               ub = (s*(q.u_hat) + E) / (qnorm -/+ E) (sign-aware divisor);
-      ip:      ub = s*(q.u) + E*||u||           (Cauchy-Schwarz);
-      l2:      ||v-u|| >= ||s*q - u|| - E, so the exact distance can only
-               pass when sqrt(approx_l2sq) <= sqrt(max_distance) + E.
-
-    Pairs failing the bound (plus RADIAL_ADC_SLACK, which only widens the
-    net) are provably outside the radius; survivors are exact-verified by
-    the caller. Runs as mapInPandas over the partition-pruned scan of the
-    quantized columns only — no exchange, batch-bounded memory (the same
-    shape as _adc_first_pass).
-
-    codec="pq": same two-pass shape over the m-byte PQ codes plus the
-    STORED per-vector reconstruction-error norm (pqerr, written at build —
-    pq_encode_with_err): the ADC lookup-table value is off from the exact
-    metric by at most pqerr (cosine; * ||u|| for ip; additive on the l2
-    distance), so `adc +/- pqerr` is the conservative cut. A null pqerr
-    (rows appended to a pre-round-4 index) cannot be bounded and is KEPT
-    — conservative, never wrong."""
-    metric = index.metric
-    qmat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in qpdf["query_vec"]]
-    )
-    qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1), 1e-30)[:, None]
-    unorm = np.linalg.norm(qmat, axis=1)
-    qids = qpdf["query_id"].to_numpy(np.int32)
-    dim = qmat.shape[1]
-    probe_sets: dict[int, set] = {}
-    for r in probes.itertuples(index=False):
-        probe_sets.setdefault(int(r.centroid_id), set()).add(int(r.query_id))
-    thresh = float(min_score) if min_score is not None else float(max_distance)
-    luts = None
-    if codec == "pq":
-        books = index.pq_codebooks()
-        luts = np.stack(
-            [pq_lut(qmat[i], books, metric) for i in range(len(qmat))]
-        )
-    bc = spark.sparkContext.broadcast(
-        (qids, qn, qmat, unorm, probe_sets, dim, metric, thresh, codec, luts)
-    )
-
-    def cut(batches):
-        all_qids, qnv, qraw, un, psets, d, met, t, cdc, lut_all = bc.value
-        slack = RADIAL_ADC_SLACK * (1.0 + abs(t))
-        for batch in batches:
-            for cid, pdf in batch.groupby("centroid_id", sort=False):
-                wanted = psets.get(int(cid))
-                if not wanted or not len(pdf):
-                    continue
-                qsel = np.flatnonzero(np.isin(all_qids, list(wanted)))
-                vid = pdf["vec_id"].to_numpy(np.int64)
-                if cdc == "pq":
-                    m = lut_all.shape[1]
-                    codes = np.frombuffer(
-                        b"".join(pdf["pqcode"]), dtype=np.uint8
-                    ).reshape(len(pdf), m).astype(np.int64)
-                    pqe = pdf["pqerr"].to_numpy(np.float64)
-                    pqe = np.where(np.isfinite(pqe), pqe, np.inf)
-                    adc = np.empty((len(pdf), len(qsel)), dtype=np.float64)
-                    rws = np.arange(m)
-                    for j, qi in enumerate(qsel):
-                        adc[:, j] = lut_all[qi][rws[None, :], codes].sum(
-                            axis=1
-                        )
-                    if met == "cosine":
-                        ok = adc + pqe[:, None] >= t - slack
-                    elif met == "innerproduct":
-                        ok = (
-                            adc + pqe[:, None] * un[qsel][None, :]
-                            >= t - slack
-                        )
-                    else:  # l2: lut is NEGATED approx squared distance
-                        with np.errstate(invalid="ignore"):
-                            lower = np.sqrt(np.maximum(-adc, 0.0)) - pqe[
-                                :, None
-                            ]
-                        ok = lower <= np.sqrt(t) + slack
-                else:
-                    qv = np.frombuffer(
-                        b"".join(pdf["qvec"]), dtype=np.int8
-                    ).reshape(len(pdf), d).astype(np.float64)
-                    scale = pdf["qscale"].to_numpy(np.float64)
-                    qnorm = pdf["qnorm"].to_numpy(np.float64)
-                    E = scale * (np.sqrt(d) / 2.0)
-                    if met == "cosine":
-                        num = (qv @ qnv[qsel].T) * scale[:, None] + E[:, None]
-                        denom = np.where(
-                            num > 0,
-                            np.maximum(qnorm - E, 1e-30)[:, None],
-                            (qnorm + E)[:, None],
-                        )
-                        ok = (num / denom) >= t - slack
-                    elif met == "innerproduct":
-                        ub = (qv @ qraw[qsel].T) * scale[:, None] + (
-                            E[:, None] * un[qsel][None, :]
-                        )
-                        ok = ub >= t - slack
-                    else:  # l2 (max_distance on squared distance)
-                        dots = (qv @ qraw[qsel].T) * scale[:, None]
-                        usq = (qraw[qsel] * qraw[qsel]).sum(axis=1)
-                        approx = np.maximum(
-                            (qnorm * qnorm)[:, None]
-                            - 2.0 * dots
-                            + usq[None, :],
-                            0.0,
-                        )
-                        ok = (
-                            np.sqrt(approx) <= np.sqrt(t) + E[:, None] + slack
-                        )
-                rows, cols = np.nonzero(ok)
-                if not len(rows):
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": all_qids[qsel[cols]].astype(np.int32),
-                     "vec_id": vid[rows]}
-                )
-
-    first_cols = (
-        ["centroid_id", "vec_id", "pqcode", "pqerr"]
-        if codec == "pq"
-        else ["centroid_id", "vec_id", "qvec", "qscale", "qnorm"]
-    )
-    return (
-        index.bucket_scan(spark)
-        .where(F.col("centroid_id").isin(probed_cids))
-        .select(*first_cols)
-        .mapInPandas(cut, "query_id INT, vec_id LONG")
-    )
+    plan = _plan(index, queries, nprobe)
+    return _exact_tail(spark, index, plan, allowed=allowed, k=k)
 
 
 def ivf_search_radial(
@@ -1924,31 +2156,21 @@ def ivf_search_radial(
 
     codec="sq" (default): the radial-with-rescore shape of the reference
     (RNNQuery routed through the same index machinery,
-    KNNQueryBuilder.java:552-565) — an int8-ADC first pass over ONLY the
+    KNNQueryBuilder.java:552-565) — an int8 first pass over ONLY the
     quantized columns applies a PROVEN-conservative threshold cut (the
-    same |e|_2 <= scale*sqrt(d)/2 error bound as the bucketed near-dup,
-    dedup.embedding_near_dup_pairs_bucketed stage 2: zero false
-    negatives by construction), then ONLY the survivors join back to full
-    precision for the exact fold-order threshold + rank. Results are
-    bit-identical to codec="exact" (the oracle twin); the exact metric is
-    evaluated on survivors instead of every probed row.
+    sq_* bounds: zero false negatives by construction), then ONLY the
+    survivors join back to full precision for the exact fold-order
+    threshold + rank. Results are bit-identical to codec="exact" (the
+    oracle twin); the exact metric is evaluated on survivors instead of
+    every probed row.
     codec="pq": the same two-pass shape over the m-byte PQ codes, using
     the per-vector reconstruction-error norm stored at build
-    (pq_encode_with_err) as the conservative radius — the smallest-bytes
-    radial first pass. Requires an index built with pq_m (round 4+, which
-    records pq_err_col in the manifest).
+    (pq_encode_with_err, pq_radial_bound) as the conservative radius — the
+    smallest-bytes radial first pass. Requires an index built with pq_m
+    (round 4+, which records pq_err_col in the manifest).
     codec="exact": single-pass full-precision scoring."""
-    if codec not in ("sq", "pq", "exact"):
-        raise ValueError(f"unknown codec {codec!r}")
-    if codec == "pq":
-        if index.pq_m is None:
-            raise ValueError("index was built without PQ codes (pq_m=None)")
-        if not index.manifest.get("pq_err_col"):
-            raise ValueError(
-                "index predates the stored PQ reconstruction error "
-                "(pq_err_col); rebuild or use codec='sq'"
-            )
-    expr_fn, out_col, ascending = _metric_col(index.metric)
+    _require_codec(index, codec, radial=True)
+    _, _, ascending = _metric_col(index.metric)
     n_set = sum(x is not None for x in (min_score, max_distance))
     if n_set != 1:
         raise ValueError(
@@ -1962,221 +2184,17 @@ def ivf_search_radial(
         raise ValueError(
             f"metric {index.metric!r} is score-like; use min_score"
         )
-
-    qpdf = queries if isinstance(queries, pd.DataFrame) else queries.toPandas()
-    probes = _probes(index, qpdf, nprobe)
-    probed_cids = sorted(set(int(c) for c in probes["centroid_id"]))
-    q = spark.createDataFrame(qpdf[["query_id", "query_vec"]]).select(
-        F.col("query_id").cast("int").alias("query_id"),
-        F.col("query_vec").alias("qv"),
-    )
-    if codec in ("sq", "pq"):
-        surv = _radial_adc_survivors(
-            spark, index, qpdf, probes, probed_cids, min_score, max_distance,
-            codec=codec,
+    threshold = float(max_distance if ascending else min_score)
+    plan = _plan(index, queries, nprobe)
+    pairs = None
+    if codec != "exact":
+        pairs = _bucket_pass(
+            spark, index, plan, codec, partial(_radial_body, t=threshold),
+            "query_id INT, vec_id LONG",
+            extra=("pqerr",) if codec == "pq" else (),
         )
-        if allowed is not None:
-            surv = surv.join(
-                allowed.select(F.col("vec_id").cast("long").alias("vec_id")),
-                "vec_id", "left_semi",
-            )
-        full = (
-            index.bucket_scan(spark)
-            .where(F.col("centroid_id").isin(probed_cids))
-            .select("vec_id", F.col("embedding").alias("v"))
-        )
-        # Join the survivor set FIRST (broadcast-pinned: survivors are the
-        # output-sized set — every row is exact-verified and potentially
-        # emitted). The reference's reranker reads only the survivors
-        # (JVectorReader.java:115-127), it never re-shards the segment.
-        # Replica dedup happens AFTER the exact score + threshold cut, on
-        # narrow survivor rows (see below).
-        scored = (
-            full.join(F.broadcast(surv), "vec_id")
-            .join(F.broadcast(q), "query_id")
-            .withColumn(out_col, expr_fn(F.col("v"), F.col("qv")))
-            .select("query_id", "vec_id", out_col)
-        )
-    else:
-        probes_df = spark.createDataFrame(probes)
-        bucket = (
-            index.bucket_scan(spark)
-            .where(F.col("centroid_id").isin(probed_cids))
-            .select("vec_id", "centroid_id", F.col("embedding").alias("v"))
-        )
-        if allowed is not None:
-            bucket = bucket.join(
-                allowed.select(F.col("vec_id").cast("long").alias("vec_id")),
-                "vec_id", "left_semi",
-            )
-        cand = bucket.join(F.broadcast(probes_df), "centroid_id")
-        scored = (
-            cand.join(F.broadcast(q), "query_id")
-            .withColumn(out_col, expr_fn(F.col("v"), F.col("qv")))
-            .select("query_id", "vec_id", out_col)
-        )
-    # The threshold cut uses the UNROUNDED fold-exact value (bit-identical
-    # to the oracle); only the emitted column and rank round to 6dp. On the
-    # sq path the ADC cut was conservative, so applying the exact threshold
-    # to the survivors yields the identical result set.
-    if ascending:
-        scored = scored.where(F.col(out_col) <= float(max_distance))
-    else:
-        scored = scored.where(F.col(out_col) >= float(min_score))
-    if index.n_replicas > 1:
-        # A replicated vector sits in >1 probed bucket; copies carry
-        # identical embeddings so every copy passes/fails the exact
-        # threshold together with the identical score. Dedup on the
-        # THRESHOLD SURVIVORS — the narrowest possible relation (3 columns,
-        # output-sized) — instead of exchanging embedding-carrying rows.
-        scored = scored.dropDuplicates(["query_id", "vec_id"])
-    m6 = F.round(F.col(out_col), 6)
-    order = m6.asc() if ascending else m6.desc()
-    w = W.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .select("query_id", "rank", "vec_id", m6.alias(out_col))
-    )
-
-
-def _adc_first_pass(
-    spark: SparkSession,
-    index: VectorIndexHandle,
-    probed_cids: list,
-    codec: str,
-    bc,
-) -> DataFrame:
-    """Quantized first pass with ZERO exchange: mapInPandas directly over
-    the partition-pruned bucket scan, grouping by centroid_id WITHIN each
-    Arrow batch (a batch can straddle a partition-file boundary when the
-    scan packs small files). The reference's per-segment search never
-    re-shards data to search it (JVectorReader.java:108-133); the previous
-    groupBy(centroid_id).applyInPandas shape hash-exchanged every quantized
-    byte and materialized a whole bucket per task — this shape moves no
-    rows and its kernel memory is bounded by the Arrow batch size.
-
-    Per (batch-slice, bucket, query) it emits the top-`fetch` candidates.
-    The union over batch slices is a superset of the per-bucket top-fetch
-    (any row in a bucket's true top-fetch also tops its own slice), so the
-    downstream global fetch cut selects exactly the same candidate set as
-    the one-task-per-bucket shape did. Returns (query_id, vec_id, approx).
-    """
-    if codec == "pq":
-        first_cols = ["centroid_id", "vec_id", "pqcode"]
-    elif codec == "bq":
-        # 1 bit/dim: the first pass reads ceil(dim/8) bytes per vector —
-        # 1/32 of the float32 scan, the x32 read-volume win.
-        first_cols = ["centroid_id", "vec_id", "bqcode"]
-    elif codec in ("mb2", "mb4"):
-        # 2/4 bits/dim thermometer codes (x16/x8): same packed-hamming
-        # kernel as bq, finer level resolution.
-        first_cols = ["centroid_id", "vec_id", "mbcode"]
-    elif codec == "fp16":
-        # half-precision copies (x2): the first pass reads 2*dim bytes.
-        first_cols = ["centroid_id", "vec_id", "fp16code"]
-    else:
-        first_cols = ["centroid_id", "vec_id", "qvec", "qscale", "qnorm"]
-
-    def adc(batches):
-        all_qids, qnv, qraw, psets, d, nf, met, cdc, lut_all, allow = bc.value
-        for batch in batches:
-            for cid, pdf in batch.groupby("centroid_id", sort=False):
-                wanted = psets.get(int(cid))
-                if not wanted:
-                    continue
-                if allow is not None and len(pdf):
-                    if len(allow) == 0:
-                        continue
-                    vid0 = pdf["vec_id"].to_numpy(np.int64)
-                    pos = np.minimum(np.searchsorted(allow, vid0),
-                                     len(allow) - 1)
-                    pdf = pdf[allow[pos] == vid0]
-                if not len(pdf):
-                    continue
-                qsel = np.flatnonzero(np.isin(all_qids, list(wanted)))
-                vid = pdf["vec_id"].to_numpy(np.int64)
-                if cdc == "pq":
-                    m = lut_all.shape[1]
-                    codes = np.frombuffer(
-                        b"".join(pdf["pqcode"]), dtype=np.uint8
-                    ).reshape(len(pdf), m).astype(np.int64)
-                    sims = np.empty((len(pdf), len(qsel)), dtype=np.float64)
-                    rows = np.arange(m)
-                    for j, qi in enumerate(qsel):
-                        sims[:, j] = lut_all[qi][rows[None, :], codes].sum(
-                            axis=1
-                        )
-                elif cdc in ("bq", "mb2", "mb4"):
-                    # lut_all carries the queries' packed bit codes:
-                    # approx = -hamming (bigger = closer in every space).
-                    code_col = "bqcode" if cdc == "bq" else "mbcode"
-                    nb = lut_all.shape[1]
-                    codes = np.frombuffer(
-                        b"".join(pdf[code_col]), dtype=np.uint8
-                    ).reshape(len(pdf), nb)
-                    sims = -hamming_packed(codes, lut_all[qsel]).astype(
-                        np.float64
-                    )
-                elif cdc == "fp16":
-                    # half-precision copies: near-exact scoring from
-                    # 2*dim bytes/vector (the x2 read-volume trade).
-                    v = np.frombuffer(
-                        b"".join(pdf["fp16code"]), dtype="<f2"
-                    ).reshape(len(pdf), d).astype(np.float64)
-                    if met == "cosine":
-                        nv = np.maximum(np.linalg.norm(v, axis=1), 1e-30)
-                        sims = (v @ qnv[qsel].T) / nv[:, None]
-                    elif met == "innerproduct":
-                        sims = v @ qraw[qsel].T
-                    else:  # l2 / hamming: -(||v||^2 - 2 v.q + ||q||^2)
-                        qv2 = (qraw[qsel] * qraw[qsel]).sum(axis=1)
-                        sims = -(
-                            (v * v).sum(axis=1)[:, None]
-                            - 2.0 * (v @ qraw[qsel].T)
-                            + qv2[None, :]
-                        )
-                else:
-                    qv = np.frombuffer(
-                        b"".join(pdf["qvec"]), dtype=np.int8
-                    ).reshape(len(pdf), d).astype(np.float64)
-                    scale = pdf["qscale"].to_numpy(np.float64)
-                    qnorm = np.maximum(
-                        pdf["qnorm"].to_numpy(np.float64), 1e-30
-                    )
-                    if met == "cosine":
-                        # approx cosine = (scale * (int8 . qhat)) / qnorm —
-                        # one GEMM per (bucket, Arrow batch).
-                        sims = (qv @ qnv[qsel].T) * (scale / qnorm)[:, None]
-                    elif met == "innerproduct":
-                        sims = (qv @ qraw[qsel].T) * scale[:, None]
-                    else:  # l2: approx -(||v||^2 - 2 v.q + ||q||^2),
-                        # negated so bigger = closer like the other spaces.
-                        dots = (qv @ qraw[qsel].T) * scale[:, None]
-                        qsq = (qraw[qsel] * qraw[qsel]).sum(axis=1)
-                        sims = -(
-                            (qnorm * qnorm)[:, None]
-                            - 2.0 * dots
-                            + qsq[None, :]
-                        )
-                out_q, out_v, out_s = [], [], []
-                for j, qi in enumerate(qsel):
-                    col = sims[:, j]
-                    nn = min(nf, len(col))
-                    part = np.argpartition(-col, nn - 1)[:nn]
-                    out_q.append(np.full(nn, all_qids[qi], dtype=np.int32))
-                    out_v.append(vid[part])
-                    out_s.append(col[part])
-                yield pd.DataFrame(
-                    {"query_id": np.concatenate(out_q),
-                     "vec_id": np.concatenate(out_v),
-                     "approx": np.concatenate(out_s)}
-                )
-
-    return (
-        index.bucket_scan(spark)
-        .where(F.col("centroid_id").isin(probed_cids))
-        .select(*first_cols)
-        .mapInPandas(adc, "query_id INT, vec_id LONG, approx DOUBLE")
+    return _exact_tail(
+        spark, index, plan, pairs, allowed=allowed, threshold=threshold
     )
 
 
@@ -2233,28 +2251,8 @@ def ivf_search(
     codec="fp16" (the x2 level): near-exact first pass over stored
     half-precision copies (2*dim bytes/vector); requires fp16=True at
     build."""
-    if codec not in ("sq", "pq", "bq", "mb2", "mb4", "fp16"):
-        raise ValueError(f"unknown codec {codec!r}")
-    if codec == "pq" and index.pq_m is None:
-        raise ValueError("index was built without PQ codes (pq_m=None)")
-    if codec == "bq" and not index.manifest.get("bq"):
-        raise ValueError(
-            "index was built without 1-bit codes (pre-round-6 build); "
-            "rebuild to serve codec='bq'"
-        )
-    if codec in ("mb2", "mb4"):
-        want_bits = int(codec[2:])
-        if index.mb_bits != want_bits:
-            raise ValueError(
-                f"codec {codec!r} needs an index built with "
-                f"mb_bits={want_bits}; this index has "
-                f"mb_bits={index.mb_bits}"
-            )
-    if codec == "fp16" and not index.manifest.get("fp16"):
-        raise ValueError(
-            "index was built without half-precision copies; rebuild with "
-            "fp16=True to serve codec='fp16'"
-        )
+    _require_codec(index, codec)
+    plan = _plan(index, queries, nprobe)
     n_vecs = int(index.manifest.get("n_vecs", 0))
     if approximate_threshold is not None and n_vecs < int(
         approximate_threshold
@@ -2263,64 +2261,24 @@ def ivf_search(
         # semantics, single full-precision pass. Results are identical to
         # the two-pass path whenever the candidate pool covers the probed
         # top-k; below the threshold exact is also the CHEAPER plan.
-        qdf = spark.createDataFrame(
-            queries[["query_id", "query_vec"]]
-        )
         allowed = None
         if allowed_ids is not None:
-            allowed = spark.createDataFrame(
-                pd.DataFrame(
-                    {"vec_id": np.asarray(allowed_ids, dtype=np.int64)}
-                ),
-                "vec_id LONG",
-            )
-        return ivf_search_exact(
-            spark, index, qdf, k=k, nprobe=nprobe, allowed=allowed
-        )
-    metric = index.metric
-    probes = _probes(index, queries, nprobe)
-    probed_cids = sorted(set(int(c) for c in probes["centroid_id"]))
-    probe_sets: dict[int, set] = {}
-    for r in probes.itertuples(index=False):
-        probe_sets.setdefault(int(r.centroid_id), set()).add(int(r.query_id))
-
-    qmat = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in queries["query_vec"]]
-    )
-    qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1), 1e-30)[:, None]
-    qids = queries["query_id"].to_numpy(np.int32)
-    dim = qmat.shape[1]
+            allowed = _vec_id_frame(spark, allowed_ids)
+        return _exact_tail(spark, index, plan, allowed=allowed, k=k)
     fetch = (
         int(k) * int(over_query)
         if over_query is not None
-        else first_pass_k(k, dim)
+        else first_pass_k(k, plan.q.raw.shape[1])
     )
-
-    # Per-query ADC lookup tables for the PQ path, built once on the driver
-    # (m x 256 doubles per query — tiny) and broadcast.
-    luts = None
-    if codec == "pq":
-        books = index.pq_codebooks()
-        luts = np.stack([pq_lut(qmat[i], books, metric) for i in
-                         range(len(qmat))])
-    elif codec == "bq":
-        # The queries' packed 1-bit codes ride the lut slot (nq, ceil(d/8)).
-        luts = quantize_binary(qmat, index.bq_thresholds(), metric)
-    elif codec in ("mb2", "mb4"):
-        # The queries' packed thermometer codes (nq, ceil(bits*d/8)).
-        luts = quantize_multibit(qmat, index.mb_thresholds(), metric)
-
     allowed_sorted = (
         np.sort(np.asarray(allowed_ids, dtype=np.int64))
         if allowed_ids is not None
         else None
     )
-    bc = spark.sparkContext.broadcast(
-        (qids, qn, qmat, probe_sets, dim, fetch, metric, codec, luts,
-         allowed_sorted)
+    first = _bucket_pass(
+        spark, index, plan, codec, partial(_topk_body, fetch=fetch),
+        "query_id INT, vec_id LONG, approx DOUBLE", allowed=allowed_sorted,
     )
-
-    first = _adc_first_pass(spark, index, probed_cids, codec, bc)
     if index.n_replicas > 1:
         # A boundary vector sits in two probed buckets; dedup (query_id,
         # vec_id) BEFORE the fetch cut so replica copies (identical approx
@@ -2333,41 +2291,6 @@ def ivf_search(
         .where(F.col("r") <= fetch)
         .select("query_id", "vec_id")
     )
-
-    # Exact rerank: second partition-pruned scan reading full precision for
-    # the surviving candidates only. The candidate set is broadcast-pinned
-    # (<= n_queries * k * over_query rows of (int32, int64) — ~120 KB at
-    # the K_MAX clamp with 1k queries), so the fat full-precision scan
-    # never shuffles; replica duplicates are dropped AFTER the join, on
-    # the candidate-sized result, never on the whole probed scan (the
-    # reference's reranker reads only the survivors,
-    # JVectorReader.java:115-127).
-    expr_fn, out_col, ascending = _metric_col(metric)
-
-    full = (
-        index.bucket_scan(spark)
-        .where(F.col("centroid_id").isin(probed_cids))
-        .select("vec_id", F.col("embedding").alias("v"))
-    )
-    q = spark.createDataFrame(
-        queries[["query_id", "query_vec"]]
-    ).select(
-        F.col("query_id").cast("int").alias("query_id"),
-        F.col("query_vec").alias("qv"),
-    )
-    scored = full.join(F.broadcast(cand), "vec_id")
-    if index.n_replicas > 1:
-        # Replica copies carry identical embeddings; any dedup survivor
-        # scores identically.
-        scored = scored.dropDuplicates(["query_id", "vec_id"])
-    scored = scored.join(F.broadcast(q), "query_id").withColumn(
-        out_col, expr_fn(F.col("v"), F.col("qv"))
-    )
-    m6 = F.round(F.col(out_col), 6)
-    order = m6.asc() if ascending else m6.desc()
-    w = W.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", m6.alias(out_col))
-    )
+    # The candidate set is broadcast-pinned (<= n_queries * fetch rows of
+    # (int32, int64)), so the fat full-precision scan never shuffles.
+    return _exact_tail(spark, index, plan, cand, k=k)

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
 
 import duckdb
 import numpy as np
@@ -214,3 +216,26 @@ def test_one_index_build_per_documents_version(spark, tmp_path, monkeypatch):
     # The first query's corpus state is the build; the others reuse it.
     assert seen == [1, 1, 1]
     assert eq._corpus_state(spark, str(sf)).idx_dir == builds[0]
+
+
+def test_state_dirs_are_removed_at_exit(tmp_path):
+    """Every derived-state directory sits under one per-process root,
+    and the exit hook removes the root with everything under it."""
+    code = (
+        "import os\n"
+        "from opensearch_jvector_plugin_spark import entry_queries as eq\n"
+        "a, b = eq._state_dir('ojs_idx_'), eq._state_dir('ojs_state_')\n"
+        "open(os.path.join(a, 'part.parquet'), 'w').write('x')\n"
+        "assert os.path.dirname(a) == os.path.dirname(b) == eq._STATE_ROOT\n"
+        "print(eq._STATE_ROOT, a, b)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True, text=True, check=True,
+    )
+    root, a, b = out.stdout.split()
+    assert os.path.dirname(root) == str(tmp_path)
+    for d in (root, a, b):
+        assert not os.path.exists(d), d

@@ -12,10 +12,12 @@ import glob
 import json
 import os
 import shutil
+from functools import partial
 
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from opensearch_jvector_plugin_spark.operators.vector_index import (
@@ -387,19 +389,17 @@ def test_adc_first_pass_has_no_exchange(spark, real_vidx):
     apply the kernel with NO exchange in between (VERDICT r3 'what's
     wrong' #2): mapInPandas over the scan, not groupBy.applyInPandas."""
     from opensearch_jvector_plugin_spark.operators.vector_index import (
-        _adc_first_pass,
+        _bucket_pass,
+        _plan,
+        _topk_body,
     )
 
     idx = load_vector_index(real_vidx)
-    qp = queries_df(spark).toPandas()
-    qmat = np.asarray([np.asarray(v, float) for v in qp["query_vec"]])
-    qn = qmat / np.linalg.norm(qmat, axis=1)[:, None]
-    qids = qp["query_id"].to_numpy(np.int32)
-    bc = spark.sparkContext.broadcast(
-        (qids, qn, qmat, {0: {0}, 1: {1}}, qmat.shape[1], 50, "cosine",
-         "sq", None, None)
+    first = _bucket_pass(
+        spark, idx, _plan(idx, queries_df(spark), 2), "sq",
+        partial(_topk_body, fetch=50),
+        "query_id INT, vec_id LONG, approx DOUBLE",
     )
-    first = _adc_first_pass(spark, idx, [0, 1], "sq", bc)
     plan = first._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "centroid_id" in plan  # partition filter reached the scan
@@ -566,20 +566,21 @@ def test_radial_rerank_exchange_keys_on_survivors(spark, real_vidx):
 
 
 def test_radial_survivor_pass_has_no_exchange(spark, real_vidx):
-    """The radial ADC cut must share _adc_first_pass's plan shape: kernel
-    applied directly over the partition-pruned scan, no Exchange."""
+    """The radial ADC cut must share the top-k first pass's plan shape:
+    kernel applied directly over the partition-pruned scan, no Exchange."""
     from opensearch_jvector_plugin_spark.operators.vector_index import (
-        _probes,
-        _radial_adc_survivors,
+        _bucket_pass,
+        _plan,
+        _radial_body,
     )
 
     idx = load_vector_index(real_vidx)
-    qp = queries_df(spark).toPandas()
-    probes = _probes(idx, qp, 2)
-    cids = sorted(set(int(c) for c in probes["centroid_id"]))
+    probe_plan = _plan(idx, queries_df(spark).toPandas(), 2)
     for codec in ("sq", "pq"):
-        surv = _radial_adc_survivors(
-            spark, idx, qp, probes, cids, 0.2, None, codec=codec
+        surv = _bucket_pass(
+            spark, idx, probe_plan, codec, partial(_radial_body, t=0.2),
+            "query_id INT, vec_id LONG",
+            extra=("pqerr",) if codec == "pq" else (),
         )
         plan = surv._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, codec
@@ -605,6 +606,36 @@ def test_first_pass_k_dimension_table():
     assert first_pass_k(100, 1000) == 100  # 1x, floor already met
     assert first_pass_k(10, 2048) == 100   # floor
     assert first_pass_k(5000, 64) == 10000  # ceiling clamp
+
+
+def test_exact_plan_launches_no_job(spark, real_vidx):
+    """The bucket scan reads with the fixed bucket schema: building an
+    exact-search plan over pandas queries infers nothing, so it launches
+    no Spark job."""
+    idx = load_vector_index(real_vidx)
+    q = queries_df(spark).toPandas()
+    res, jobs = spark_jobs(
+        spark, lambda: ivf_search_exact(spark, idx, q, k=10, nprobe=4)
+    )
+    assert jobs == 0
+    assert "centroid_id" in res._jdf.queryExecution().executedPlan().toString()
+
+
+def test_below_threshold_route_is_the_exact_search(spark, real_vidx):
+    """ivf_search's exact-below-threshold route passes the pandas queries
+    straight through: the same frame as ivf_search_exact, for the same
+    number of Spark jobs (no createDataFrame -> toPandas round trip)."""
+    idx = load_vector_index(real_vidx)  # 500 vectors << 15000
+    q = queries_df(spark).toPandas()
+    routed, routed_jobs = spark_jobs(
+        spark, lambda: ivf_search(spark, idx, q, k=10, nprobe=4).toPandas()
+    )
+    exact, exact_jobs = spark_jobs(
+        spark,
+        lambda: ivf_search_exact(spark, idx, q, k=10, nprobe=4).toPandas(),
+    )
+    assert routed_jobs == exact_jobs
+    pd.testing.assert_frame_equal(routed, exact)
 
 
 def test_exact_below_threshold_routing(spark, real_vidx):
