@@ -14,10 +14,8 @@ Determinism conventions shared by both sides:
 
 from __future__ import annotations
 
-import atexit
 import os
 import re
-import shutil
 import tempfile
 
 import pyarrow.dataset as ds
@@ -36,7 +34,7 @@ from .operators.query import (
     load_index, lookup_term_dfs, search, write_decoded_postings,
 )
 from .operators.score import score_all
-from .plans.state import memo
+from .plans.state import memo, state_dir
 from .plans.stats import CorpusStats, term_stats
 
 # ---------------------------------------------------------------- fixtures ---
@@ -68,19 +66,6 @@ def _docs_path(sf_dir: str) -> str:
 
 def _emb_path(sf_dir: str) -> str:
     return os.path.join(sf_dir, "embeddings.parquet")
-
-
-_STATE_ROOT: str | None = None
-
-
-def _state_dir(prefix: str) -> str:
-    """A new directory for derived state (indexes, sidecars), under one
-    per-process root that is made on first use and removed at exit."""
-    global _STATE_ROOT
-    if _STATE_ROOT is None:
-        _STATE_ROOT = tempfile.mkdtemp(prefix="ojs_proc_")
-        atexit.register(shutil.rmtree, _STATE_ROOT, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_STATE_ROOT)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,7 +112,7 @@ class _SidecarState:
         self.idx_dir = idx_dir
         self.dict_path = idx.dict_path
         self.stats = CorpusStats(n_docs=idx.n_docs, avgdl=idx.avgdl)
-        self.dir = _state_dir("ojs_state_")
+        self.dir = state_dir("ojs_state_")
         write_decoded_postings(spark, idx_dir, os.path.join(self.dir, "postings"))
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
@@ -165,7 +150,7 @@ def _toks(spark: SparkSession, sf_dir: str, parallel: bool = False) -> DataFrame
     from .functions.tokenizer import tokenize_col
 
     def build() -> str:
-        path = os.path.join(_state_dir("ojs_toks_"), "toks")
+        path = os.path.join(state_dir("ojs_toks_"), "toks")
         (
             _docs(spark, sf_dir).select(
                 F.col("doc_id").cast("long").alias("doc_id"),
@@ -478,7 +463,7 @@ def _index_for(
     index must stay delete-free for every other query)."""
 
     def build() -> str:
-        idx_dir = _state_dir("ojs_idx_")
+        idx_dir = state_dir("ojs_idx_")
         # The row count comes from the parquet footers: no count job.
         n = ds.dataset(_docs_path(sf_dir)).count_rows()
         build_index(_docs(spark, sf_dir), idx_dir, seg_size=max(64, n // 8))
@@ -1380,7 +1365,7 @@ def _vector_index_for(
     )
 
     def build() -> str:
-        d = _state_dir("ojs_vidx_")
+        d = state_dir("ojs_vidx_")
         m = build_vector_index(_emb(spark, sf_dir), d, n_centroids=None,
                                metric=metric, n_replicas=reps, pq_m=pq_m)
         assert m["n_centroids"] == k, (m["n_centroids"], k)
@@ -1458,7 +1443,7 @@ def _bin_emb_path(sf_dir: str) -> str:
             (np.asarray(v, dtype=np.float64) > 0.0).astype(np.float64)
             for v in t["embedding"]
         ]
-        d = _state_dir("ojs_binemb_")
+        d = state_dir("ojs_binemb_")
         p = os.path.join(d, "bin_embeddings.parquet")
         t.to_parquet(p, index=False)
         return p
@@ -1479,7 +1464,7 @@ def _vector_index_hamming_for(spark: SparkSession, sf_dir: str) -> str:
     )
 
     def build() -> str:
-        d = _state_dir("ojs_vidx_")
+        d = state_dir("ojs_vidx_")
         m = build_vector_index(
             spark.read.parquet(bin_path), d, n_centroids=None,
             metric="hamming", n_replicas=1, pq_m=None,
@@ -1777,7 +1762,7 @@ def _transcript_state(spark: SparkSession) -> _SidecarState:
         from .plans.docids import assign_doc_ids
         from .sources.transcripts import synthesize_transcripts
 
-        idx_dir = _state_dir("ojs_tidx_")
+        idx_dir = state_dir("ojs_tidx_")
         corpus = assign_doc_ids(
             synthesize_transcripts(
                 spark, _TRANSCRIPT_N_CONVS, _TRANSCRIPT_TURNS

@@ -16,8 +16,11 @@ JVectorWriter.java:177-196,333-350), Spark-first:
                                                   whose manifest exists is
                                                   DONE and skipped on resume)
       -> stats.json (N, total_dl, avgdl)         (the "trained state")
-      -> dict/ parquet (term -> global df, ctf)  (column-pruned scan of the
-                                                  segment metadata, no blobs)
+      -> dict/ parquet (term -> global df, ctf)  (column-pruned read of the
+                                                  segment metadata, no blobs:
+                                                  summed in the driver under
+                                                  DICT_DRIVER_MAX_BYTES, else
+                                                  a Spark aggregate)
 
 Scale notes (100 TB / 10^12 turns):
 - seg_size bounds per-task memory: a segment is one task and one in-memory
@@ -34,17 +37,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import FORMAT_VERSION
 from ..functions.tokenizer import TOKENIZER_VERSION
+from ..plans import state
 from .codec import CODEC_VERSION
 from .segment import encode_segment
 
@@ -129,6 +136,90 @@ def committed_segments(index_dir: str, storage=None) -> dict[int, dict]:
     return out
 
 
+def _empty_summary() -> pd.DataFrame:
+    return pd.DataFrame(
+        columns=["seg_id", "n_docs", "sum_dl", "doc_lo", "doc_hi",
+                 "n_terms", "n_postings", "crc", "build_ms", "path"]
+    )
+
+
+def write_segment(
+    index_dir: str, seg_id: int, doc_ids: np.ndarray, texts: pd.Series
+) -> dict:
+    """Encode one segment and write its postings file; returns its summary
+    row (SUMMARY_SCHEMA). The one segment writer of the build executors
+    and the driver append."""
+    t0 = time.monotonic()
+    rows, summary = encode_segment(doc_ids, texts)
+    out_dir = _seg_dir(index_dir, seg_id)
+    write_postings(out_dir, rows)
+    return {
+        "seg_id": seg_id,
+        "n_docs": summary["n_docs"],
+        "sum_dl": summary["sum_dl"],
+        "doc_lo": summary["doc_lo"],
+        "doc_hi": summary["doc_hi"],
+        "n_terms": summary["n_terms"],
+        "n_postings": summary["n_postings"],
+        "crc": summary["crc"],
+        "build_ms": int((time.monotonic() - t0) * 1000),
+        "path": out_dir,
+    }
+
+
+def commit_segments(
+    spark: SparkSession,
+    index_dir: str,
+    summaries,
+    storage,
+    segments_skipped: int = 0,
+    align_partitions: bool = False,
+    input_fingerprint: str = "",
+) -> dict:
+    """Commit written segments: one manifest per summary row (the commit
+    marker: a segment whose manifest exists is DONE and skipped on
+    resume), then stats.json + dict and the build metrics record. Returns
+    the index stats."""
+    for row in summaries:
+        m = {
+            "format_version": FORMAT_VERSION,
+            "tokenizer_version": TOKENIZER_VERSION,
+            "codec_version": CODEC_VERSION,
+            "segment_id": int(row["seg_id"]),
+            "n_docs": int(row["n_docs"]),
+            "sum_dl": int(row["sum_dl"]),
+            "doc_lo": int(row["doc_lo"]),
+            "doc_hi": int(row["doc_hi"]),
+            "n_terms": int(row["n_terms"]),
+            "n_postings": int(row["n_postings"]),
+            "crc": int(row["crc"]),
+            "build_ms": int(row["build_ms"]),
+            "input_fingerprint": input_fingerprint,
+        }
+        storage.put_bytes(
+            _manifest_path(index_dir, int(row["seg_id"])),
+            json.dumps(m, indent=1, sort_keys=True).encode(),
+        )
+
+    stats = finalize_index(spark, index_dir, storage=storage)
+    from ..plans.metrics import append_metrics
+
+    append_metrics(
+        index_dir,
+        {
+            "job": "build",
+            "segments_built": len(summaries),
+            "segments_skipped": segments_skipped,
+            "n_docs": stats["n_docs"],
+            "build_ms_total": stats["build_ms_total"],
+            "align_partitions": align_partitions,
+            "input_fingerprint": input_fingerprint,
+        },
+        storage=storage,
+    )
+    return stats
+
+
 def build_index(
     corpus: DataFrame,
     index_dir: str,
@@ -183,35 +274,6 @@ def build_index(
         if skip_ids:
             work = work.where(~F.col("seg_id").isin(skip_ids))
 
-    def _empty_summary():
-        return pd.DataFrame(
-            columns=["seg_id", "n_docs", "sum_dl", "doc_lo", "doc_hi",
-                     "n_terms", "n_postings", "crc", "build_ms", "path"]
-        )
-
-    def write_segment(seg_id, doc_ids, texts):
-        t0 = time.monotonic()
-        rows, summary = encode_segment(doc_ids, texts)
-        out_dir = _seg_dir(index_dir, seg_id)
-        write_postings(out_dir, rows)
-        ms = int((time.monotonic() - t0) * 1000)
-        return pd.DataFrame(
-            [
-                {
-                    "seg_id": seg_id,
-                    "n_docs": summary["n_docs"],
-                    "sum_dl": summary["sum_dl"],
-                    "doc_lo": summary["doc_lo"],
-                    "doc_hi": summary["doc_hi"],
-                    "n_terms": summary["n_terms"],
-                    "n_postings": summary["n_postings"],
-                    "crc": summary["crc"],
-                    "build_ms": ms,
-                    "path": out_dir,
-                }
-            ]
-        )
-
     if align_partitions:
         skip_set = set(skip_ids)
 
@@ -227,7 +289,9 @@ def build_index(
                 yield _empty_summary()
                 return
             pdf = pd.concat(parts, ignore_index=True)
-            yield write_segment(pid, pdf["doc_id"].to_numpy(), pdf["text"])
+            yield pd.DataFrame([write_segment(
+                index_dir, pid, pdf["doc_id"].to_numpy(), pdf["text"]
+            )])
 
         summaries = work.mapInPandas(
             build_partition, SUMMARY_SCHEMA
@@ -238,51 +302,19 @@ def build_index(
             if len(pdf) == 0:
                 return _empty_summary()
             seg_id = int(pdf["seg_id"].iloc[0])
-            return write_segment(seg_id, pdf["doc_id"].to_numpy(), pdf["text"])
+            return pd.DataFrame([write_segment(
+                index_dir, seg_id, pdf["doc_id"].to_numpy(), pdf["text"]
+            )])
 
         summaries = (
             work.groupBy("seg_id").applyInPandas(build_one, SUMMARY_SCHEMA).collect()
         )
 
-    # Commit markers, one per completed segment (atomic rename).
-    for row in summaries:
-        m = {
-            "format_version": FORMAT_VERSION,
-            "tokenizer_version": TOKENIZER_VERSION,
-            "codec_version": CODEC_VERSION,
-            "segment_id": int(row["seg_id"]),
-            "n_docs": int(row["n_docs"]),
-            "sum_dl": int(row["sum_dl"]),
-            "doc_lo": int(row["doc_lo"]),
-            "doc_hi": int(row["doc_hi"]),
-            "n_terms": int(row["n_terms"]),
-            "n_postings": int(row["n_postings"]),
-            "crc": int(row["crc"]),
-            "build_ms": int(row["build_ms"]),
-            "input_fingerprint": input_fingerprint,
-        }
-        st.put_bytes(
-            _manifest_path(index_dir, int(row["seg_id"])),
-            json.dumps(m, indent=1, sort_keys=True).encode(),
-        )
-
-    stats = finalize_index(spark, index_dir, storage=st)
-    from ..plans.metrics import append_metrics
-
-    append_metrics(
-        index_dir,
-        {
-            "job": "build",
-            "segments_built": len(summaries),
-            "segments_skipped": len(skip_ids),
-            "n_docs": stats["n_docs"],
-            "build_ms_total": stats["build_ms_total"],
-            "align_partitions": align_partitions,
-            "input_fingerprint": input_fingerprint,
-        },
-        storage=st,
+    return commit_segments(
+        spark, index_dir, summaries, st,
+        segments_skipped=len(skip_ids), align_partitions=align_partitions,
+        input_fingerprint=input_fingerprint,
     )
-    return stats
 
 
 def finalize_index(spark: SparkSession, index_dir: str, storage=None) -> dict:
@@ -317,12 +349,31 @@ def finalize_index(spark: SparkSession, index_dir: str, storage=None) -> dict:
     return stats
 
 
+# The dictionary's input columns of the postings files, as the driver
+# executor reads them.
+_DICT_INPUT_SCHEMA = pa.schema(
+    [("term", pa.string()), ("df", pa.int32()), ("ctf", pa.int64())]
+)
+
+
 def write_dict(
     spark: SparkSession, postings_path: str, dict_path: str, n_segments: int
 ) -> None:
     """The global term dictionary (term, df, ctf) of the segment postings
     under `postings_path`, summed per term (one writer for the build and
-    the purging merge)."""
+    the purging merge).
+
+    Two executors: when the footers put the postings' term/df/ctf column
+    chunks at no more than `state.DICT_DRIVER_MAX_BYTES` (the bound under
+    which the dict is also read driver-side), the driver sums them with
+    pyarrow; a bigger dictionary is a Spark aggregate."""
+    postings = ds.dataset(
+        postings_path, format="parquet", partitioning="hive",
+        schema=_DICT_INPUT_SCHEMA,
+    )
+    if _dict_input_bytes(postings) <= state.DICT_DRIVER_MAX_BYTES:
+        _write_dict_local(postings, dict_path)
+        return
     (
         spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(postings_path)
         .select("term", "df", "ctf")
@@ -336,3 +387,50 @@ def write_dict(
         .write.mode("overwrite")
         .parquet(dict_path)
     )
+
+
+def _dict_input_bytes(postings) -> int:
+    """Uncompressed bytes of the term/df/ctf column chunks, from the
+    footers (no data read)."""
+    total = 0
+    for frag in postings.get_fragments():
+        md = frag.metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                if col.path_in_schema in _DICT_INPUT_SCHEMA.names:
+                    total += col.total_uncompressed_size
+    return total
+
+
+def _write_dict_local(postings, dict_path: str) -> None:
+    """The driver executor of write_dict: one parquet file under a fresh
+    name (state.source_key fingerprints by name, size and mtime, so a
+    same-size rewrite must not reuse a name). It is written as a
+    `_`-prefixed temp file, which every reader skips; the old files are
+    removed and the temp renamed into place."""
+    agg = postings.to_table().group_by("term").aggregate(
+        [("df", "sum"), ("ctf", "sum")]
+    )
+    # Integer sums are int64, the Spark aggregate's bigint.
+    table = pa.table(
+        {"term": agg["term"], "df": agg["df_sum"], "ctf": agg["ctf_sum"]}
+    ).sort_by("term")
+    os.makedirs(dict_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = f"_{name}.tmp"
+    # Terms are unique here, so a dictionary page for them would only add
+    # an index array (the file is about a fifth larger with it).
+    pq.write_table(
+        table, os.path.join(dict_path, tmp), compression="snappy",
+        use_dictionary=["df", "ctf"],
+    )
+    for n in os.listdir(dict_path):
+        if n != tmp:
+            p = os.path.join(dict_path, n)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
+    os.replace(os.path.join(dict_path, tmp), os.path.join(dict_path, name))

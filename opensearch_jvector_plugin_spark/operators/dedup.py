@@ -21,14 +21,13 @@ Scale shapes:
 
 from __future__ import annotations
 
-import tempfile
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokenize_col
+from ..plans.state import state_dir
 
 HASH_PRIME = 2_147_483_647  # 2^31 - 1: keeps a*h+b inside int64
 NUM_HASHES = 16
@@ -488,7 +487,10 @@ def embedding_near_dup_pairs(
     if n == 0:
         return spark.createDataFrame([], "doc_a LONG, doc_b LONG, cosine DOUBLE")
     n_blocks = max(1, (n + block_rows - 1) // block_rows)
-    store = work_dir or tempfile.mkdtemp(prefix="ojs_neardup_")
+    # work_dir=None: a per-process state directory, removed at exit (the
+    # returned DataFrame reads the store lazily, so it lives as long as
+    # the process that can read the result).
+    store = work_dir or state_dir("ojs_neardup_")
 
     def normalize(batches):
         for pdf in batches:

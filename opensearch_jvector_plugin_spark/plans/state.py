@@ -7,6 +7,9 @@ of the files they were derived from — `(name, size, mtime_ns)`, the way
 Delta Lake names table state by its log version — so a rewritten source
 rebuilds and replaces its entry instead of being served stale.
 
+Derived-state directories come from `state_dir`: one per-process root,
+removed at exit, so the state of a process never outlives it.
+
 `term_df_map` is the one driver-side read of a (term, df) parquet into a
 dict. Dictionaries larger than `DICT_DRIVER_MAX_BYTES` on disk are not
 read; callers then take a distributed term-pruned scan
@@ -15,7 +18,10 @@ read; callers then take a distributed term-pruned scan
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from typing import Callable
 
 # A dictionary below this total on-disk size is read driver-side with
@@ -28,6 +34,19 @@ DICT_DRIVER_MAX_BYTES = int(
 
 # (kind, key) -> (fingerprint of the sources, value)
 _MEMO: dict[tuple, tuple[tuple, object]] = {}
+
+_STATE_ROOT: str | None = None
+
+
+def state_dir(prefix: str) -> str:
+    """A new directory for derived state (indexes, sidecars, block
+    stores), under one per-process root that is made on first use and
+    removed at exit."""
+    global _STATE_ROOT
+    if _STATE_ROOT is None:
+        _STATE_ROOT = tempfile.mkdtemp(prefix="ojs_proc_")
+        atexit.register(shutil.rmtree, _STATE_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_STATE_ROOT)
 
 
 def source_key(path: str) -> tuple:

@@ -18,6 +18,18 @@ assigned docIDs from the next free segment boundary, so segment doc ranges
 stay disjoint and ascending in seg_id order (the invariant merge and the
 per-segment kernels rely on).
 
+Two executors, chosen by one bounded fetch of at most seg_size + 1 rows:
+
+  - a batch of at most seg_size rows is ONE new segment, the flush analog:
+    the driver sorts the fetched rows, numbers them from the segment
+    boundary and writes them through the build's segment and manifest
+    writers (`build.write_segment`, `build.commit_segments`) — 0 Spark
+    jobs for a local batch, and the driver holds what the build's one
+    encode task for that segment would hold (seg_size is the per-task
+    memory bound);
+  - a bigger batch (a catch-up replay) assigns docIDs with the offsets
+    method and encodes its segments in parallel through `build_index`.
+
 Exactly-once (round 4 — the same epoch-journal discipline as the vector
 index's append): segment-manifest resume alone is NOT idempotent across a
 partial crash, because a retry that recomputes base_seg from the
@@ -47,14 +59,19 @@ import json
 import os
 import shutil
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.build import (
     _manifest_path,
+    _text_storage,
     build_index,
+    commit_segments,
     committed_segments,
     finalize_index,
+    write_segment,
 )
 
 
@@ -63,8 +80,6 @@ def _stream_log_path(index_dir: str) -> str:
 
 
 def _read_stream_log(index_dir: str, storage=None) -> dict:
-    from ..operators.build import _text_storage
-
     st = _text_storage(storage)
     p = _stream_log_path(index_dir)
     if st.exists(p):
@@ -76,8 +91,6 @@ def _write_stream_log(index_dir: str, log: dict, storage=None) -> None:
     """Epoch-journal commit marker — one atomic whole-object PUT through
     the IndexStorage client (object-store-portable, like every other
     commit marker in the engine)."""
-    from ..operators.build import _text_storage
-
     st = _text_storage(storage)
     st.mkdirs(index_dir)
     st.put_bytes(
@@ -141,7 +154,14 @@ def append_batch(
                 log["pending"] = None
                 _write_stream_log(index_dir, log)
 
-    if batch.rdd.isEmpty():
+    # One bounded fetch decides the executor: a batch of at most seg_size
+    # rows lands wholly in segment base_seg and is appended in the driver.
+    rows = (
+        batch.select("conv_id", "turn_idx", text_col)
+        .limit(seg_size + 1)
+        .collect()
+    )
+    if not rows:
         stats = finalize_index(spark, index_dir)
         if log is not None:
             log["committed"][key] = {"n_segments": 0}
@@ -161,12 +181,51 @@ def append_batch(
             _write_stream_log(index_dir, log)
     base_doc = base_seg * seg_size
 
-    # Scalable docID assignment (plans/docids offsets method) rebased to the
-    # next free segment boundary. A catch-up replay after downtime can make
-    # one micro-batch arbitrarily large, so the single-partition global
-    # window is not acceptable here; the offsets method keeps every stage
-    # multi-partition and is deterministic because (conv_id, turn_idx) is
-    # unique.
+    if len(rows) <= seg_size:
+        stats = _append_in_driver(spark, rows, index_dir, base_seg, base_doc)
+    else:
+        stats = _append_distributed(
+            batch, index_dir, seg_size, text_col, base_doc
+        )
+    if log is not None:
+        log["committed"][key] = {"base_seg": int(base_seg)}
+        log["pending"] = None
+        _write_stream_log(index_dir, log)
+    return stats
+
+
+def _append_in_driver(
+    spark: SparkSession, rows: list, index_dir: str, base_seg: int,
+    base_doc: int,
+) -> dict:
+    """One segment from the collected rows: the docID rule of
+    assign_doc_ids (ascending (conv_id, turn_idx), nulls first; pandas
+    compares str by code point, which is Spark's UTF-8 byte order), then
+    the build's segment and manifest writers. The driver holds what the
+    build's one encode task for this segment would hold."""
+    st = _text_storage(None)
+    if st.exists(_manifest_path(index_dir, base_seg)):
+        # Resumed epoch whose segment is already committed.
+        return finalize_index(spark, index_dir)
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
+    pdf = pdf.sort_values(
+        ["conv_id", "turn_idx"], kind="stable", na_position="first"
+    )
+    doc_ids = base_doc + np.arange(len(pdf), dtype=np.int64)
+    summary = write_segment(index_dir, base_seg, doc_ids, pdf["text"])
+    return commit_segments(spark, index_dir, [summary], st)
+
+
+def _append_distributed(
+    batch: DataFrame, index_dir: str, seg_size: int, text_col: str,
+    base_doc: int,
+) -> dict:
+    # Above seg_size rows: scalable docID assignment (plans/docids offsets
+    # method) rebased to the next free segment boundary. A catch-up replay
+    # after downtime can make one micro-batch arbitrarily large, so the
+    # single-partition global window is not acceptable here; the offsets
+    # method keeps every stage multi-partition and is deterministic because
+    # (conv_id, turn_idx) is unique.
     from ..plans.docids import assign_doc_ids
 
     assigned = assign_doc_ids(batch, ["conv_id", "turn_idx"])
@@ -174,7 +233,7 @@ def append_batch(
         "doc_id", (F.col("doc_id") + F.lit(base_doc)).cast("long")
     )
     try:
-        stats = build_index(
+        return build_index(
             with_ids, index_dir, seg_size=seg_size, text_col=text_col,
             resume=True,
         )
@@ -182,11 +241,6 @@ def append_batch(
         persisted = getattr(assigned, "_ojs_persisted", None)
         if persisted is not None:
             persisted.unpersist()
-    if log is not None:
-        log["committed"][key] = {"base_seg": int(base_seg)}
-        log["pending"] = None
-        _write_stream_log(index_dir, log)
-    return stats
 
 
 def start_index_stream(

@@ -129,6 +129,19 @@ def test_purging_merge_equals_build_of_live_docs(
     assert dict_of(d).equals(dict_of(want))
 
 
+def test_purging_merge_launches_one_job(spark, small_corpus_pdf, tmp_path):
+    """The merge is one mapInPandas job; the purge's dict rebuild of a
+    driver-sized dictionary is summed in the driver."""
+    d = str(tmp_path / "purge")
+    build_index(spark.createDataFrame(small_corpus_pdf), d, seg_size=250)
+    delete_docs(d, list(range(0, 2000, 50)))
+    manifest, jobs = spark_jobs(
+        spark, lambda: merge_segments(spark, load_index(d))
+    )
+    assert manifest["n_docs_purged"] == 40
+    assert jobs == 1
+
+
 def test_stray_temp_file_in_input_is_ignored(spark, corpus, one, tmp_path):
     d = str(tmp_path / "stray")
     build_index(corpus, d, seg_size=250)

@@ -223,11 +223,11 @@ def test_state_dirs_are_removed_at_exit(tmp_path):
     and the exit hook removes the root with everything under it."""
     code = (
         "import os\n"
-        "from opensearch_jvector_plugin_spark import entry_queries as eq\n"
-        "a, b = eq._state_dir('ojs_idx_'), eq._state_dir('ojs_state_')\n"
+        "from opensearch_jvector_plugin_spark.plans import state\n"
+        "a, b = state.state_dir('ojs_idx_'), state.state_dir('ojs_state_')\n"
         "open(os.path.join(a, 'part.parquet'), 'w').write('x')\n"
-        "assert os.path.dirname(a) == os.path.dirname(b) == eq._STATE_ROOT\n"
-        "print(eq._STATE_ROOT, a, b)\n"
+        "assert os.path.dirname(a) == os.path.dirname(b) == state._STATE_ROOT\n"
+        "print(state._STATE_ROOT, a, b)\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code],
@@ -239,3 +239,36 @@ def test_state_dirs_are_removed_at_exit(tmp_path):
     assert os.path.dirname(root) == str(tmp_path)
     for d in (root, a, b):
         assert not os.path.exists(d), d
+
+
+def test_neardup_block_store_is_removed_at_exit(tmp_path):
+    """embedding_near_dup_pairs with no work_dir keeps its block store
+    under the per-process state root, so the process leaves none behind."""
+    code = (
+        "import os\n"
+        "from opensearch_jvector_plugin_spark.operators.dedup import "
+        "embedding_near_dup_pairs\n"
+        "from opensearch_jvector_plugin_spark.plans import state\n"
+        "from opensearch_jvector_plugin_spark.session import get_spark\n"
+        "spark = get_spark(cores=1, app_name='ojs-neardup-exit')\n"
+        "emb = spark.createDataFrame([(1, [1.0, 0.0]), (2, [2.0, 0.0]), "
+        "(3, [0.0, 1.0])], 'vec_id LONG, embedding ARRAY<DOUBLE>')\n"
+        "pairs = embedding_near_dup_pairs(emb, threshold=0.99).collect()\n"
+        "assert [(r.doc_a, r.doc_b) for r in pairs] == [(1, 2)], pairs\n"
+        "assert [n for n in os.listdir(state._STATE_ROOT)\n"
+        "        if n.startswith('ojs_neardup_')]\n"
+        "print(state._STATE_ROOT)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=dict(os.environ, TMPDIR=str(tmp_path), SPARK_DRIVER_MEM="1g"),
+        capture_output=True, text=True,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    root = out.stdout.split()[-1]
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
+    left = [n for _dir, subdirs, _files in os.walk(tmp_path)
+            for n in subdirs if n.startswith("ojs_")]
+    assert left == []

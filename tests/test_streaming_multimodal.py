@@ -32,20 +32,27 @@ from opensearch_jvector_plugin_spark.streaming.incremental import (
 from tests.test_bruteforce_rank_identity import assert_rank_identical
 
 
-def test_streaming_append_matches_batch_build(spark, small_corpus_pdf, tmp_path):
+# (seg_size, segments per 1,000-row batch): 250 takes the distributed
+# append, 1,000 (the whole batch in one segment) the driver append.
+APPEND_EXECUTORS = pytest.mark.parametrize(
+    "seg_size, per_batch", [(250, 4), (1000, 1)], ids=["spark", "driver"]
+)
+
+
+@APPEND_EXECUTORS
+def test_streaming_append_matches_batch_build(spark, small_corpus_pdf, tmp_path,
+                                              seg_size, per_batch):
     """Two micro-batches arriving in conv order == one batch build:
     same segments discipline, rank-identical query results."""
     pdf = small_corpus_pdf
-    seg_size = 250
-
     stream_idx = str(tmp_path / "stream_idx")
     b1 = spark.createDataFrame(pdf.iloc[:1000].drop(columns=["doc_id"]))
     b2 = spark.createDataFrame(pdf.iloc[1000:].drop(columns=["doc_id"]))
     append_batch(b1, stream_idx, seg_size=seg_size)
     stats1 = committed_segments(stream_idx)
-    assert len(stats1) == 4
+    assert len(stats1) == per_batch
     append_batch(b2, stream_idx, seg_size=seg_size)
-    assert len(committed_segments(stream_idx)) == 8
+    assert len(committed_segments(stream_idx)) == 2 * per_batch
 
     queries = reference_queries(2000)
     want = oracle_topk(build_oracle_index(pdf), queries)
@@ -332,7 +339,9 @@ def test_stale_merge_detected_after_append(spark, small_corpus_pdf, tmp_path):
     assert_rank_identical(got2, want)
 
 
-def test_streaming_epoch_exactly_once(spark, small_corpus_pdf, tmp_path):
+@APPEND_EXECUTORS
+def test_streaming_epoch_exactly_once(spark, small_corpus_pdf, tmp_path,
+                                     seg_size, per_batch):
     """Round 4: the epoch journal makes append_batch exactly-once under
     every foreachBatch re-delivery scenario — full re-delivery is a no-op,
     and a partial-crash retry COMPLETES the crashed attempt at the same
@@ -350,15 +359,15 @@ def test_streaming_epoch_exactly_once(spark, small_corpus_pdf, tmp_path):
     d = str(tmp_path / "sidx")
     b1 = spark.createDataFrame(pdf.iloc[:1000].drop(columns=["doc_id"]))
     b2 = spark.createDataFrame(pdf.iloc[1000:].drop(columns=["doc_id"]))
-    append_batch(b1, d, seg_size=250, batch_id=0)
-    append_batch(b2, d, seg_size=250, batch_id=1)
+    append_batch(b1, d, seg_size=seg_size, batch_id=0)
+    append_batch(b2, d, seg_size=seg_size, batch_id=1)
     assert load_index(d).n_docs == 2000
 
     # Full re-delivery of both epochs: no-ops.
-    append_batch(b1, d, seg_size=250, batch_id=0)
-    append_batch(b2, d, seg_size=250, batch_id=1)
+    append_batch(b1, d, seg_size=seg_size, batch_id=0)
+    append_batch(b2, d, seg_size=seg_size, batch_id=1)
     idx = load_index(d)
-    assert idx.n_docs == 2000 and idx.n_segments == 8
+    assert idx.n_docs == 2000 and idx.n_segments == 2 * per_batch
 
     # Partial-crash retry: forge the mid-append state — batch 1's LAST
     # segment uncommitted, its epoch still pending in the journal.
@@ -376,12 +385,55 @@ def test_streaming_epoch_exactly_once(spark, small_corpus_pdf, tmp_path):
     log["pending"] = {"batch_id": 1, "base_seg": base}
     _write_stream_log(d, log)
 
-    append_batch(b2, d, seg_size=250, batch_id=1)  # the retried epoch
+    append_batch(b2, d, seg_size=seg_size, batch_id=1)  # the retried epoch
     idx = load_index(d)
-    assert idx.n_docs == 2000 and idx.n_segments == 8
+    assert idx.n_docs == 2000 and idx.n_segments == 2 * per_batch
     queries = reference_queries(2000)
     want = oracle_topk(build_oracle_index(pdf), queries)
     assert_rank_identical(search(spark, idx, queries).toPandas(), want)
+
+
+def test_streaming_driver_append_crash_before_manifest(
+    spark, small_corpus_pdf, tmp_path, monkeypatch
+):
+    """A driver append that crashes after its postings are written and
+    before its manifest is: the retry of the same epoch rewrites the
+    segment at the journaled base and gives the index of a clean run."""
+    from opensearch_jvector_plugin_spark.streaming import incremental
+
+    pdf = small_corpus_pdf
+    b1 = spark.createDataFrame(pdf.iloc[:1000].drop(columns=["doc_id"]))
+    b2 = spark.createDataFrame(pdf.iloc[1000:].drop(columns=["doc_id"]))
+    clean, d = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for idx_dir in (clean, d):
+        append_batch(b1, idx_dir, seg_size=1000, batch_id=0)
+    append_batch(b2, clean, seg_size=1000, batch_id=1)
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash before the manifest")
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "commit_segments", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            append_batch(b2, d, seg_size=1000, batch_id=1)
+    seg = os.path.join("segments", "seg_id=1", "postings.parquet")
+    assert os.path.exists(os.path.join(d, seg))
+    assert sorted(committed_segments(d)) == [0]
+    assert incremental._read_stream_log(d)["pending"] == {
+        "batch_id": 1, "base_seg": 1
+    }
+
+    append_batch(b2, d, seg_size=1000, batch_id=1)  # the retried epoch
+    idx = load_index(d)
+    assert idx.n_docs == 2000 and idx.n_segments == 2
+    with open(os.path.join(d, seg), "rb") as a, \
+            open(os.path.join(clean, seg), "rb") as b:
+        assert a.read() == b.read()
+    queries = reference_queries(2000)
+    assert_rank_identical(
+        search(spark, idx, queries).toPandas(),
+        search(spark, load_index(clean), queries).toPandas(),
+    )
 
 
 def test_streaming_stale_pending_rolled_back(spark, small_corpus_pdf,
