@@ -18,6 +18,8 @@ import os
 import re
 import tempfile
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -28,13 +30,14 @@ from .functions.tokenizer import tokenize_text
 from .operators import dedup as dd
 from .operators import similarity as sim
 from .operators import textstats as ts
-from .operators.build import build_index
+from .operators import build as index_build
+from .operators.build import build_index, build_index_local
 from .operators.phrase import msm_scores, phrase_scores, search_phrase
 from .operators.query import (
     load_index, lookup_term_dfs, search, write_decoded_postings,
 )
 from .operators.score import score_all
-from .plans.state import memo, state_dir
+from .plans.state import memo, read_parquet, state_dir, write_parquet_dir
 from .plans.stats import CorpusStats, term_stats
 
 # ---------------------------------------------------------------- fixtures ---
@@ -68,12 +71,26 @@ def _emb_path(sf_dir: str) -> str:
     return os.path.join(sf_dir, "embeddings.parquet")
 
 
+def _doc_rows(sf_dir: str) -> int:
+    """Row count of sf_dir's documents, from the parquet footers (no
+    job)."""
+    return ds.dataset(_docs_path(sf_dir)).count_rows()
+
+
+def _doc_texts(sf_dir: str):
+    """(doc_id, text) of sf_dir's documents as a pandas frame, read with
+    pyarrow: the input of the driver-side state builds."""
+    return ds.dataset(_docs_path(sf_dir)).to_table(
+        columns=["doc_id", "text"]
+    ).to_pandas()
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(_docs_path(sf_dir))
+    return read_parquet(spark, _docs_path(sf_dir))
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(_emb_path(sf_dir))
+    return read_parquet(spark, _emb_path(sf_dir))
 
 
 def _queries_df(spark: SparkSession) -> DataFrame:
@@ -116,11 +133,11 @@ class _SidecarState:
         write_decoded_postings(spark, idx_dir, os.path.join(self.dir, "postings"))
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.dir, name))
+        return read_parquet(spark, os.path.join(self.dir, name))
 
     def term_df(self, spark: SparkSession) -> DataFrame:
         """(term, df) over the whole corpus, from the index dict."""
-        return spark.read.parquet(self.dict_path).select("term", "df")
+        return read_parquet(spark, self.dict_path).select("term", "df")
 
     def term_dfs(self, spark: SparkSession, terms: list[str]) -> dict:
         """term -> df for `terms` (the shared cost-switched dict reader)."""
@@ -146,11 +163,25 @@ def _corpus_state(spark: SparkSession, sf_dir: str) -> _SidecarState:
 def _toks(spark: SparkSession, sf_dir: str, parallel: bool = False) -> DataFrame:
     """The tokenized corpus (doc_id, toks, dl) of sf_dir's documents,
     written once per version of the file: the one corpus derivation still
-    tokenized from the source (positional, highlight and dedup queries)."""
-    from .functions.tokenizer import tokenize_col
+    tokenized from the source (positional, highlight and dedup queries).
+    A driver-sized corpus (`_doc_rows`, from the footers) is read with
+    pyarrow and tokenized in the driver; a bigger one is a Spark write."""
 
     def build() -> str:
         path = os.path.join(state_dir("ojs_toks_"), "toks")
+        if _doc_rows(sf_dir) <= index_build.DRIVER_BUILD_MAX_ROWS:
+            from .functions.tokenizer import tokenize_series
+
+            docs = _doc_texts(sf_dir)
+            toks = tokenize_series(docs["text"])
+            write_parquet_dir(pa.table({
+                "doc_id": pa.array(docs["doc_id"], pa.int64()),
+                "toks": pa.array(toks, pa.list_(pa.string())),
+                "dl": pa.array(toks.str.len(), pa.int32()),
+            }), path)
+            return path
+        from .functions.tokenizer import tokenize_col
+
         (
             _docs(spark, sf_dir).select(
                 F.col("doc_id").cast("long").alias("doc_id"),
@@ -174,7 +205,7 @@ def _spread_scan(spark: SparkSession, path: str, parallel: bool) -> DataFrame:
     positional projections (O(L * window) per row) onto a single core; the
     repartition is a tiny shuffle of doc-count-bounded rows. A scan that
     already has the splits keeps them (no shuffle)."""
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     par = spark.sparkContext.defaultParallelism
     if parallel and df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
@@ -458,15 +489,23 @@ def q_bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _index_for(
     spark: SparkSession, sf_dir: str, deleted: tuple[int, ...] = ()
 ) -> str:
-    """A segment index over documents, built once per version of the file;
-    `deleted` docIDs are tombstoned in a build of their own (the delete-free
-    index must stay delete-free for every other query)."""
+    """A segment index over documents, built once per version of the file
+    (in the driver when the footers count at most DRIVER_BUILD_MAX_ROWS
+    rows); `deleted` docIDs are tombstoned in a build of their own (the
+    delete-free index must stay delete-free for every other query)."""
 
     def build() -> str:
         idx_dir = state_dir("ojs_idx_")
-        # The row count comes from the parquet footers: no count job.
-        n = ds.dataset(_docs_path(sf_dir)).count_rows()
-        build_index(_docs(spark, sf_dir), idx_dir, seg_size=max(64, n // 8))
+        n = _doc_rows(sf_dir)
+        seg_size = max(64, n // 8)
+        if n <= index_build.DRIVER_BUILD_MAX_ROWS:
+            docs = _doc_texts(sf_dir)
+            build_index_local(
+                idx_dir, docs["doc_id"].to_numpy(np.int64), docs["text"],
+                seg_size, spark=spark,
+            )
+        else:
+            build_index(_docs(spark, sf_dir), idx_dir, seg_size=seg_size)
         if deleted:
             from .operators.deletes import delete_docs
 
@@ -1466,7 +1505,7 @@ def _vector_index_hamming_for(spark: SparkSession, sf_dir: str) -> str:
     def build() -> str:
         d = state_dir("ojs_vidx_")
         m = build_vector_index(
-            spark.read.parquet(bin_path), d, n_centroids=None,
+            read_parquet(spark, bin_path), d, n_centroids=None,
             metric="hamming", n_replicas=1, pq_m=None,
         )
         assert m["n_centroids"] == k, (m["n_centroids"], k)
@@ -1745,6 +1784,8 @@ def q_script_score_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TRANSCRIPT_N_CONVS = 150
 _TRANSCRIPT_TURNS = 10
+_TRANSCRIPT_SEG_SIZE = 300
+_TRANSCRIPT_ATTRS = ["doc_id", "conv_id", "turn_idx", "role", "tool", "ts"]
 
 
 def _transcript_state(spark: SparkSession) -> _SidecarState:
@@ -1756,41 +1797,54 @@ def _transcript_state(spark: SparkSession) -> _SidecarState:
     docIDs + re-tokenizing the corpus per call (measured: 0.8s of
     synthesize+assign jobs plus up to two tokenize passes per agg query at
     sf0.1)."""
-
-    def build() -> _SidecarState:
-        from .operators.dismax import field_postings_df
-        from .plans.docids import assign_doc_ids
-        from .sources.transcripts import synthesize_transcripts
-
-        idx_dir = state_dir("ojs_tidx_")
-        corpus = assign_doc_ids(
-            synthesize_transcripts(
-                spark, _TRANSCRIPT_N_CONVS, _TRANSCRIPT_TURNS
-            ),
-            ["conv_id", "turn_idx"],
-        )
-        build_index(corpus, idx_dir, seg_size=300)
-        st = _SidecarState(spark, idx_dir)
-        (
-            corpus.select(
-                "doc_id", "conv_id", "turn_idx", "role", "tool", "ts"
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(st.dir, "attrs"))
-        )
-        field_postings_df(
-            corpus, [n for n, _b in MULTI_MATCH_FIELDS]
-        ).write.mode("overwrite").parquet(
-            os.path.join(st.dir, "field_postings")
-        )
-        persisted = getattr(corpus, "_ojs_persisted", None)
-        if persisted is not None:
-            persisted.unpersist()
-        return st
-
     return memo(
-        "transcript", (_TRANSCRIPT_N_CONVS, _TRANSCRIPT_TURNS), [], build
+        "transcript", (_TRANSCRIPT_N_CONVS, _TRANSCRIPT_TURNS), [],
+        lambda: _build_transcript_state(spark),
     )
+
+
+def _build_transcript_state(spark: SparkSession) -> _SidecarState:
+    """One build of the transcript state, in the driver: the corpus is a
+    fixed 1,500 turns, far under build.DRIVER_BUILD_MAX_ROWS. The pandas
+    twin of the synthesis, docIDs in `sort_for_doc_ids` order (the order
+    of `assign_doc_ids`), the driver build entry, and the `attrs` and
+    `field_postings` sidecars written with pyarrow. `ts` is naive in the
+    session time zone (as Spark reads a pandas timestamp) and is stored
+    UTC-adjusted."""
+    from .operators.dismax import field_postings_pdf
+    from .plans.docids import sort_for_doc_ids
+    from .sources.transcripts import synthesize_transcripts_pdf
+
+    n = _TRANSCRIPT_N_CONVS * _TRANSCRIPT_TURNS
+    pdf = sort_for_doc_ids(synthesize_transcripts_pdf(
+        np.arange(n), _TRANSCRIPT_N_CONVS, _TRANSCRIPT_TURNS
+    ))
+    pdf["doc_id"] = np.arange(n, dtype=np.int64)
+    idx_dir = state_dir("ojs_tidx_")
+    build_index_local(
+        idx_dir, pdf["doc_id"].to_numpy(), pdf["text"], _TRANSCRIPT_SEG_SIZE,
+        spark=spark,
+    )
+    st = _SidecarState(spark, idx_dir)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    attrs = pdf[_TRANSCRIPT_ATTRS].assign(
+        ts=pdf["ts"].dt.tz_localize(tz).dt.tz_convert("UTC")
+    )
+    write_parquet_dir(pa.Table.from_pandas(
+        attrs, preserve_index=False, schema=pa.schema([
+            ("doc_id", pa.int64()), ("conv_id", pa.string()),
+            ("turn_idx", pa.int32()), ("role", pa.string()),
+            ("tool", pa.string()), ("ts", pa.timestamp("us", tz="UTC")),
+        ]),
+    ), os.path.join(st.dir, "attrs"))
+    write_parquet_dir(pa.Table.from_pandas(
+        field_postings_pdf(pdf, [n for n, _b in MULTI_MATCH_FIELDS]),
+        preserve_index=False, schema=pa.schema([
+            ("doc_id", pa.int64()), ("field", pa.string()),
+            ("dl", pa.int32()), ("term", pa.string()), ("tf", pa.int32()),
+        ]),
+    ), os.path.join(st.dir, "field_postings"))
+    return st
 
 
 def _transcript_parquet() -> str:
@@ -1822,14 +1876,17 @@ def _transcript_parquet() -> str:
 def q_transcript_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule input shape end-to-end: deterministic transcript
     corpus (conv_id, turn_idx, role, text, tool, ts) -> docID assignment
-    (scalable offsets method) -> segment index -> MaxScore top-k on the
-    reference query set.
+    -> segment index -> MaxScore top-k on the reference query set. The
+    1,500-turn corpus is synthesized, ordered and indexed in the driver
+    (`_build_transcript_state`).
 
     Oracle: SQL_TRANSCRIPT_BM25 runs the same BM25 CTE pipeline over the
     persisted pandas-twin corpus (_transcript_parquet), with doc_id =
-    row_number over (conv_id, turn_idx) - 1 — hash-matching it also proves
-    the per-row text-equality invariant between the distributed synthesis +
-    docID assignment and the driver-side twin."""
+    row_number over (conv_id, turn_idx) - 1. It checks the driver order and
+    the index against SQL; it no longer covers the Spark synthesis and
+    offsets docID assignment, whose equality with the twin and the window
+    rests on test_spark_generation_matches_driver_generation and
+    test_offsets_matches_window_and_is_dense."""
     from .sources.transcripts import reference_queries
 
     idx = load_index(_transcript_state(spark).idx_dir)
@@ -2223,7 +2280,7 @@ def q_transcript_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
     w = W.partitionBy("l_returnflag").orderBy(
         F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")
     )
@@ -2236,7 +2293,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -2256,7 +2313,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     The one global sum runs in DECIMAL so Spark's partial-aggregate order
     and DuckDB's serial order produce the IDENTICAL value (double
     summation order differs across engines; decimal addition is exact)."""
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = read_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
     dec = "decimal(18,6)"
     rev = F.col("l_extendedprice").cast(dec) * F.col("l_discount").cast(dec)
     return (
@@ -2285,17 +2342,17 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines); ties break (revenue desc, orderkey asc)."""
     cutoff = TPCH_Q3_CUTOFF
     cust = (
-        spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        read_parquet(spark, os.path.join(sf_dir, "customer.parquet"))
         .where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
     orders = (
-        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        read_parquet(spark, os.path.join(sf_dir, "orders.parquet"))
         .where(F.col("o_orderdate") < F.lit(cutoff))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "o_orderdate")
     )
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).where(
+    li = read_parquet(spark, os.path.join(sf_dir, "lineitem.parquet")).where(
         F.col("l_shipdate") > F.lit(cutoff)
     )
     dec = "decimal(18,6)"
@@ -2323,7 +2380,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     sess = (

@@ -5,6 +5,8 @@ writeField -> writeGraph -> meta offsets -> finish() sentinel + footers,
 JVectorWriter.java:177-196,333-350), Spark-first:
 
     corpus (doc_id assigned)
+      -> a corpus of at most DRIVER_BUILD_MAX_ROWS rows is cut and encoded
+         in the driver (build_index_local: the same writers, no Spark job)
       -> segment layout: either seg_id = doc_id // seg_size with ONE
          shuffle (deterministic doc ranges, fine-grained resume), or
          align_partitions=True: each ingest partition IS a segment —
@@ -37,9 +39,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -63,6 +63,18 @@ POSTINGS_SPARK_SCHEMA = (
     "block_last_doc ARRAY<LONG>, block_max_tf ARRAY<INT>, "
     "block_min_dl ARRAY<INT>, codec INT"
 )
+
+# A corpus of at most this many rows is built in the driver
+# (`build_index_local`) by the registry's one-time state builds, which
+# read its count from parquet footers or manifests: the one bound of
+# "state built in the driver" (`_index_for`, `_toks` and
+# `query.write_decoded_postings`). Measured crossover
+# (scripts/build_crossover.py: 4 cores, warm, transcript turns, median of
+# 3; BENCH.md): the 8-segment index build is close at 10k turns (driver
+# 0.73 s, Spark 0.87 s) and Spark wins from 50k (1.87 s against 1.25 s),
+# while the tokenized corpus still ran faster in the driver at 50k
+# (1.45 s against 2.14 s).
+DRIVER_BUILD_MAX_ROWS = 10_000
 
 SUMMARY_SCHEMA = (
     "seg_id INT, n_docs LONG, sum_dl LONG, doc_lo LONG, doc_hi LONG, "
@@ -175,11 +187,13 @@ def commit_segments(
     segments_skipped: int = 0,
     align_partitions: bool = False,
     input_fingerprint: str = "",
+    executor: str = "spark",
 ) -> dict:
     """Commit written segments: one manifest per summary row (the commit
     marker: a segment whose manifest exists is DONE and skipped on
-    resume), then stats.json + dict and the build metrics record. Returns
-    the index stats."""
+    resume), then stats.json + dict and the build metrics record, which
+    names the executor that encoded the segments ("driver" or "spark").
+    Returns the index stats."""
     for row in summaries:
         m = {
             "format_version": FORMAT_VERSION,
@@ -214,10 +228,49 @@ def commit_segments(
             "build_ms_total": stats["build_ms_total"],
             "align_partitions": align_partitions,
             "input_fingerprint": input_fingerprint,
+            "executor": executor,
         },
         storage=storage,
     )
     return stats
+
+
+def build_index_local(
+    index_dir: str,
+    doc_ids: np.ndarray,
+    texts: pd.Series,
+    seg_size: int,
+    base_seg: int = 0,
+    *,
+    spark: SparkSession,
+) -> dict:
+    """The driver executor of the build: `doc_ids` are offset by the
+    segment boundary `base_seg * seg_size`, the rows are cut into
+    `doc_id // seg_size` segments, each is written by `write_segment`, and
+    one `commit_segments` commits them all. Committed segments are skipped
+    (manifest resume, as in `build_index`). No Spark job runs unless the
+    dictionary exceeds the driver bound of `write_dict`. The driver holds
+    the whole corpus, so callers keep it under DRIVER_BUILD_MAX_ROWS (a
+    one-segment append: under seg_size)."""
+    st = _text_storage(None)
+    st.mkdirs(os.path.join(index_dir, "manifests"))
+    st.mkdirs(os.path.join(index_dir, "segments"))
+    done = committed_segments(index_dir, storage=st)
+    doc_ids = np.asarray(doc_ids, dtype=np.int64) + base_seg * seg_size
+    texts = pd.Series(texts).reset_index(drop=True)
+    seg_ids = doc_ids // seg_size
+    summaries = []
+    for sid in np.unique(seg_ids):
+        if int(sid) in done:
+            continue
+        mask = seg_ids == sid
+        summaries.append(write_segment(
+            index_dir, int(sid), doc_ids[mask], texts[mask]
+        ))
+    return commit_segments(
+        spark, index_dir, summaries, st,
+        segments_skipped=len(done), executor="driver",
+    )
 
 
 def build_index(
@@ -405,11 +458,8 @@ def _dict_input_bytes(postings) -> int:
 
 
 def _write_dict_local(postings, dict_path: str) -> None:
-    """The driver executor of write_dict: one parquet file under a fresh
-    name (state.source_key fingerprints by name, size and mtime, so a
-    same-size rewrite must not reuse a name). It is written as a
-    `_`-prefixed temp file, which every reader skips; the old files are
-    removed and the temp renamed into place."""
+    """The driver executor of write_dict: the per-term sums, sorted by
+    term, as the one file of `dict_path` (`state.write_parquet_dir`)."""
     agg = postings.to_table().group_by("term").aggregate(
         [("df", "sum"), ("ctf", "sum")]
     )
@@ -417,20 +467,6 @@ def _write_dict_local(postings, dict_path: str) -> None:
     table = pa.table(
         {"term": agg["term"], "df": agg["df_sum"], "ctf": agg["ctf_sum"]}
     ).sort_by("term")
-    os.makedirs(dict_path, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = f"_{name}.tmp"
     # Terms are unique here, so a dictionary page for them would only add
     # an index array (the file is about a fifth larger with it).
-    pq.write_table(
-        table, os.path.join(dict_path, tmp), compression="snappy",
-        use_dictionary=["df", "ctf"],
-    )
-    for n in os.listdir(dict_path):
-        if n != tmp:
-            p = os.path.join(dict_path, n)
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-            else:
-                os.remove(p)
-    os.replace(os.path.join(dict_path, tmp), os.path.join(dict_path, name))
+    state.write_parquet_dir(table, dict_path, use_dictionary=["df", "ctf"])

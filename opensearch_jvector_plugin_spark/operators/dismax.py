@@ -29,11 +29,12 @@ aggregation itself — the same discipline as score_all/msm_scores.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import bm25_idf, bm25_tf_norm
-from ..functions.tokenizer import tokenize_col
+from ..functions.tokenizer import tokenize_col, tokenize_series
 from .score import query_terms_df
 
 
@@ -78,6 +79,28 @@ def field_postings_df(
     return toks.groupBy("doc_id", "field", "dl", "term").agg(
         F.count("*").cast("int").alias("tf")
     )
+
+
+def field_postings_pdf(pdf: pd.DataFrame, fields: list[str]) -> pd.DataFrame:
+    """The pandas twin of `field_postings_df` over a driver-held corpus:
+    the same (doc_id, field, dl, term, tf) rows, tokenized with
+    `tokenize_series`."""
+    parts = []
+    for name in fields:
+        toks = tokenize_series(pdf[name])
+        dl = toks.str.len()
+        keep = (dl > 0).to_numpy()
+        rows = pd.DataFrame({
+            "doc_id": pdf["doc_id"].to_numpy("int64")[keep],
+            "dl": dl.to_numpy("int32")[keep],
+            "term": toks.to_numpy()[keep],
+        }).explode("term")
+        tf = rows.groupby(["doc_id", "dl", "term"], sort=False).size()
+        parts.append(
+            tf.rename("tf").astype("int32").reset_index()
+            .assign(field=name)[["doc_id", "field", "dl", "term", "tf"]]
+        )
+    return pd.concat(parts, ignore_index=True)
 
 
 def multi_match_scores(

@@ -46,6 +46,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -283,31 +284,67 @@ def decode_segment_postings(pdf: pd.DataFrame) -> dict[str, tuple]:
     return decoded
 
 
+# The columns of a decoded postings sidecar (plans.stats.postings_df).
+DECODED_POSTINGS_SCHEMA = "doc_id LONG, dl INT, term STRING, tf INT"
+_DECODED_POSTINGS_ARROW = pa.schema([
+    ("doc_id", pa.int64()), ("dl", pa.int32()), ("term", pa.string()),
+    ("tf", pa.int32()),
+])
+
+
+def _decode_rows(pdf: pd.DataFrame) -> pd.DataFrame:
+    """(doc_id, dl, term, tf) of postings rows (term, df, checksum, blob):
+    one flat varint decode of their blobs."""
+    dfs = pdf["df"].to_numpy()
+    lists = decode_postings_batch(
+        list(pdf["blob"]), dfs, pdf["checksum"].to_numpy()
+    )
+    return pd.DataFrame({
+        "doc_id": np.concatenate([p.doc_ids for p in lists]),
+        "dl": np.concatenate([p.dls for p in lists]).astype("i4"),
+        "term": np.repeat(pdf["term"].to_numpy(), dfs),
+        "tf": np.concatenate([p.tfs for p in lists]).astype("i4"),
+    })
+
+
 def write_decoded_postings(spark: SparkSession, index_dir: str, out: str) -> None:
     """Write the flat (doc_id, dl, term, tf) postings of an index's
     segments to `out`: `plans.stats.postings_df` of the indexed corpus
-    (tombstones not applied), decoded from the build's varint blobs in one
-    mapInPandas pass over the fixed-schema scan — no tokenize, no shuffle."""
+    (tombstones not applied), decoded from the build's varint blobs — no
+    tokenize, no shuffle.
+
+    Two executors, chosen by the bound of the driver state builds: when
+    the manifests count at most `build.DRIVER_BUILD_MAX_ROWS` documents,
+    the driver decodes a pyarrow read and writes one parquet file;
+    otherwise one mapInPandas pass over the fixed-schema scan."""
+    from ..plans.state import write_parquet_dir
+    from . import build
+
+    n_docs = sum(
+        m["n_docs"] for m in build.committed_segments(index_dir).values()
+    )
+    segments = os.path.join(index_dir, "segments")
+    cols = ["term", "df", "checksum", "blob"]
+    if n_docs <= build.DRIVER_BUILD_MAX_ROWS:
+        table = ds.dataset(
+            segments, format="parquet", partitioning="hive"
+        ).to_table(columns=cols)
+        write_parquet_dir(pa.Table.from_pandas(
+            _decode_rows(table.to_pandas()),
+            schema=_DECODED_POSTINGS_ARROW, preserve_index=False,
+        ) if table.num_rows else _DECODED_POSTINGS_ARROW.empty_table(), out)
+        return
 
     def decode(batches):
         for pdf in batches:
-            lists = decode_postings_batch(
-                list(pdf["blob"]), pdf["df"].to_numpy(),
-                pdf["checksum"].to_numpy(),
-            )
-            if lists:
-                yield pd.DataFrame({
-                    "doc_id": np.concatenate([p.doc_ids for p in lists]),
-                    "dl": np.concatenate([p.dls for p in lists]).astype("i4"),
-                    "term": np.repeat(pdf["term"].to_numpy(), pdf["df"]),
-                    "tf": np.concatenate([p.tfs for p in lists]).astype("i4"),
-                })
+            if len(pdf):
+                yield _decode_rows(pdf)
 
-    spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(
-        os.path.join(index_dir, "segments")
-    ).select("term", "df", "checksum", "blob").mapInPandas(
-        decode, "doc_id LONG, dl INT, term STRING, tf INT"
-    ).write.mode("overwrite").parquet(out)
+    spark.read.schema(POSTINGS_SPARK_SCHEMA).parquet(segments).select(
+        *cols
+    ).mapInPandas(decode, DECODED_POSTINGS_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(out)
 
 
 class _Segment:

@@ -16,10 +16,15 @@ Two implementations:
   partition offset — no single-partition stage anywhere. Order, and hence
   the assigned ids, is deterministic because the sort keys are unique; the
   sampled range boundaries only decide WHERE a row sits, never its rank.
+
+A driver-held corpus takes the same order from `sort_for_doc_ids` (the
+driver append and the registry's driver-built transcript state): row i of
+its result gets docID i.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -70,3 +75,12 @@ def assign_doc_ids(
     # materialized `out`. Expose the handle so callers can unpersist then.
     out._ojs_persisted = ordered
     return out
+
+
+def sort_for_doc_ids(pdf: pd.DataFrame) -> pd.DataFrame:
+    """`pdf` in assign_doc_ids order: (conv_id, turn_idx) ascending, nulls
+    first (Spark's ascending order); pandas compares str by code point,
+    which is Spark's UTF-8 byte order. Row i is docID i."""
+    return pdf.sort_values(
+        ["conv_id", "turn_idx"], kind="stable", na_position="first"
+    ).reset_index(drop=True)

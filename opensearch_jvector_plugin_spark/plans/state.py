@@ -10,6 +10,10 @@ rebuilds and replaces its entry instead of being served stale.
 Derived-state directories come from `state_dir`: one per-process root,
 removed at exit, so the state of a process never outlives it.
 
+`read_parquet` is the registry's parquet read: Spark's inferred schema
+is memoized per source version, so only the first read of a file infers
+it (one Spark job each time otherwise).
+
 `term_df_map` is the one driver-side read of a (term, df) parquet into a
 dict. Dictionaries larger than `DICT_DRIVER_MAX_BYTES` on disk are not
 read; callers then take a distributed term-pruned scan
@@ -22,6 +26,7 @@ import atexit
 import os
 import shutil
 import tempfile
+import uuid
 from typing import Callable
 
 # A dictionary below this total on-disk size is read driver-side with
@@ -73,6 +78,58 @@ def memo(kind: str, key, sources: list[str], build: Callable[[], object]):
     value = build()
     _MEMO[(kind, key)] = (fp, value)
     return value
+
+
+def read_parquet(spark, path: str):
+    """spark.read.parquet(path) with the schema Spark inferred for this
+    version of the source memoized: a later read of an unchanged source
+    launches no schema-inference job, and a rewritten one is re-inferred.
+    A path without top-level `*.parquet` files (a hive-partitioned
+    directory) or that is missing has no fingerprint and is read as is."""
+    try:
+        key = source_key(path)
+    except OSError:
+        key = ()
+    if not key:
+        return spark.read.parquet(path)
+    schema = memo(
+        "parquet_schema", path, [path],
+        lambda: spark.read.parquet(path).schema,
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
+def write_parquet_dir(table, path: str, **write_kwargs) -> None:
+    """Write a pyarrow table as the one file of the parquet directory
+    `path` (every driver-written sidecar and dictionary), replacing what
+    the directory held. The file gets a fresh `part-<uuid>.parquet` name
+    (`source_key` fingerprints by name, size and mtime, so a same-size
+    rewrite must not reuse a name). It is written as a `_`-prefixed temp
+    file, which every reader skips; the directory's other entries are
+    removed and the temp renamed into place. `write_kwargs` go to
+    `pq.write_table`. The table's Spark schema is memoized as the read
+    schema of this version of `path`, so no read of it infers one."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = f"_{name}.tmp"
+    pq.write_table(
+        table, os.path.join(path, tmp), compression="snappy", **write_kwargs
+    )
+    for n in os.listdir(path):
+        if n != tmp:
+            p = os.path.join(path, n)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
+    os.replace(os.path.join(path, tmp), os.path.join(path, name))
+    memo(
+        "parquet_schema", path, [path],
+        lambda: from_arrow_schema(table.schema),
+    )
 
 
 def term_df_map(path: str) -> dict[str, int] | None:

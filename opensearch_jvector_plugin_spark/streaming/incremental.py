@@ -22,8 +22,8 @@ Two executors, chosen by one bounded fetch of at most seg_size + 1 rows:
 
   - a batch of at most seg_size rows is ONE new segment, the flush analog:
     the driver sorts the fetched rows, numbers them from the segment
-    boundary and writes them through the build's segment and manifest
-    writers (`build.write_segment`, `build.commit_segments`) — 0 Spark
+    boundary and writes them through the driver build entry
+    (`build.build_index_local`, one segment) — 0 Spark
     jobs for a local batch, and the driver holds what the build's one
     encode task for that segment would hold (seg_size is the per-task
     memory bound);
@@ -68,10 +68,9 @@ from ..operators.build import (
     _manifest_path,
     _text_storage,
     build_index,
-    commit_segments,
+    build_index_local,
     committed_segments,
     finalize_index,
-    write_segment,
 )
 
 
@@ -182,7 +181,7 @@ def append_batch(
     base_doc = base_seg * seg_size
 
     if len(rows) <= seg_size:
-        stats = _append_in_driver(spark, rows, index_dir, base_seg, base_doc)
+        stats = _append_in_driver(spark, rows, index_dir, seg_size, base_seg)
     else:
         stats = _append_distributed(
             batch, index_dir, seg_size, text_col, base_doc
@@ -195,25 +194,23 @@ def append_batch(
 
 
 def _append_in_driver(
-    spark: SparkSession, rows: list, index_dir: str, base_seg: int,
-    base_doc: int,
+    spark: SparkSession, rows: list, index_dir: str, seg_size: int,
+    base_seg: int,
 ) -> dict:
-    """One segment from the collected rows: the docID rule of
-    assign_doc_ids (ascending (conv_id, turn_idx), nulls first; pandas
-    compares str by code point, which is Spark's UTF-8 byte order), then
-    the build's segment and manifest writers. The driver holds what the
-    build's one encode task for this segment would hold."""
-    st = _text_storage(None)
-    if st.exists(_manifest_path(index_dir, base_seg)):
-        # Resumed epoch whose segment is already committed.
-        return finalize_index(spark, index_dir)
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
-    pdf = pdf.sort_values(
-        ["conv_id", "turn_idx"], kind="stable", na_position="first"
+    """One segment from the collected rows: the docID order of
+    assign_doc_ids (`docids.sort_for_doc_ids`), then a one-segment call of
+    the driver build entry, which skips a segment already committed by a
+    resumed epoch. The driver holds what the build's one encode task for
+    this segment would hold."""
+    from ..plans.docids import sort_for_doc_ids
+
+    pdf = sort_for_doc_ids(
+        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
     )
-    doc_ids = base_doc + np.arange(len(pdf), dtype=np.int64)
-    summary = write_segment(index_dir, base_seg, doc_ids, pdf["text"])
-    return commit_segments(spark, index_dir, [summary], st)
+    return build_index_local(
+        index_dir, np.arange(len(pdf), dtype=np.int64), pdf["text"],
+        seg_size, base_seg=base_seg, spark=spark,
+    )
 
 
 def _append_distributed(

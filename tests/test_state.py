@@ -202,13 +202,19 @@ def test_one_index_build_per_documents_version(spark, tmp_path, monkeypatch):
         str(sf / "documents.parquet"),
     )
     builds = []
-    orig = eq.build_index
 
-    def spy(*a, **kw):
-        builds.append(a[1])
-        return orig(*a, **kw)
+    def spy(entry, dir_arg):
+        orig = getattr(eq, entry)
 
-    monkeypatch.setattr(eq, "build_index", spy)
+        def spied(*a, **kw):
+            builds.append(a[dir_arg])
+            return orig(*a, **kw)
+
+        monkeypatch.setattr(eq, entry, spied)
+
+    # Either build executor: the Spark build or the driver build entry.
+    spy("build_index", 1)
+    spy("build_index_local", 0)
     seen = []
     for name in ("bm25_topk", "bm25_topk_indexed", "bm25_phrase_indexed"):
         eq.QUERIES[name](spark, str(sf)).collect()

@@ -399,6 +399,7 @@ def test_streaming_driver_append_crash_before_manifest(
     """A driver append that crashes after its postings are written and
     before its manifest is: the retry of the same epoch rewrites the
     segment at the journaled base and gives the index of a clean run."""
+    from opensearch_jvector_plugin_spark.operators import build
     from opensearch_jvector_plugin_spark.streaming import incremental
 
     pdf = small_corpus_pdf
@@ -413,7 +414,8 @@ def test_streaming_driver_append_crash_before_manifest(
         raise RuntimeError("crash before the manifest")
 
     with monkeypatch.context() as m:
-        m.setattr(incremental, "commit_segments", crash)
+        # The driver append commits through the driver build entry.
+        m.setattr(build, "commit_segments", crash)
         with pytest.raises(RuntimeError, match="crash"):
             append_batch(b2, d, seg_size=1000, batch_id=1)
     seg = os.path.join("segments", "seg_id=1", "postings.parquet")
