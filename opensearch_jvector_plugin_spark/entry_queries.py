@@ -160,12 +160,13 @@ def _corpus_state(spark: SparkSession, sf_dir: str) -> _SidecarState:
     )
 
 
-def _toks(spark: SparkSession, sf_dir: str, parallel: bool = False) -> DataFrame:
-    """The tokenized corpus (doc_id, toks, dl) of sf_dir's documents,
-    written once per version of the file: the one corpus derivation still
-    tokenized from the source (positional, highlight and dedup queries).
-    A driver-sized corpus (`_doc_rows`, from the footers) is read with
-    pyarrow and tokenized in the driver; a bigger one is a Spark write."""
+def _toks_path(spark: SparkSession, sf_dir: str) -> str:
+    """Directory of the tokenized corpus (doc_id, toks, dl) of sf_dir's
+    documents, written once per version of the file: the one corpus
+    derivation still tokenized from the source (positional, highlight and
+    dedup queries). A driver-sized corpus (`_doc_rows`, from the footers)
+    is read with pyarrow and tokenized in the driver; a bigger one is a
+    Spark write."""
 
     def build() -> str:
         path = os.path.join(state_dir("ojs_toks_"), "toks")
@@ -193,9 +194,12 @@ def _toks(spark: SparkSession, sf_dir: str, parallel: bool = False) -> DataFrame
         )
         return path
 
-    return _spread_scan(
-        spark, memo("toks", sf_dir, [_docs_path(sf_dir)], build), parallel
-    )
+    return memo("toks", sf_dir, [_docs_path(sf_dir)], build)
+
+
+def _toks(spark: SparkSession, sf_dir: str, parallel: bool = False) -> DataFrame:
+    """The scan of `_toks_path` (see `_spread_scan` for `parallel`)."""
+    return _spread_scan(spark, _toks_path(spark, sf_dir), parallel)
 
 
 def _spread_scan(spark: SparkSession, path: str, parallel: bool) -> DataFrame:
@@ -1207,17 +1211,16 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_lsh_pairs(
-        None, n=NGRAM_N, threshold=JACCARD_T,
-        base=_toks(spark, sf_dir),
+        spark, _toks_path(spark, sf_dir), n=NGRAM_N, threshold=JACCARD_T
     )
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.simhash(None, base=_toks(spark, sf_dir))
+    return dd.simhash(spark, _toks_path(spark, sf_dir))
 
 
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.simhash_pairs(None, max_hamming=3, base=_toks(spark, sf_dir))
+    return dd.simhash_pairs(spark, _toks_path(spark, sf_dir), max_hamming=3)
 
 
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:

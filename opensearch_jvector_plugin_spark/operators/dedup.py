@@ -2,32 +2,40 @@
 
 All portable-by-construction: every hash is derived from md5 hex (identical
 in Spark, DuckDB, and Python), every arithmetic step stays within int64, so
-each operator has an exact ANSI-SQL oracle. Everything is built-in DataFrame
-ops — JVM-side, codegen'd, no Python in the hot path.
+each operator has an exact ANSI-SQL oracle.
 
 Scale shapes:
 - exact:    one groupBy(content_hash) — map-side combined, AQE handles skew.
 - n-gram Jaccard: shingle-inverted-index self-join; exact but O(sum df^2)
   in the worst case — the scale path is MinHash/LSH below.
-- MinHash+LSH: signatures via one explode + groupBy(min x NUM_HASHES);
-  band buckets via one self-join on (band_idx, band_key) — only docs
-  sharing a band collide, and exact Jaccard verification runs only on the
-  candidate pairs.
-- SimHash: 60-bit weighted fingerprint, 4 x 15-bit band join => guaranteed
-  recall for hamming distance <= 3.
+- MinHash+LSH and SimHash: one numpy band kernel over the tokenized
+  corpus. Signatures once per doc; band buckets are runs of one sort,
+  their pairs enumerated vectorized; a pair comes out only from the first
+  band where it collides and is verified in the same pass (exact Jaccard
+  on the shingle strings, or the hamming cut). At most
+  `build.DRIVER_BUILD_MAX_ROWS` docs run in the driver (no Spark job),
+  more on Spark with one exchange on (band_idx, band_key). A hot bucket of
+  m docs is still one piece of m^2/2 pairs. SimHash: 60-bit weighted
+  fingerprint, 4 x 15-bit bands => recall 1.0 for hamming distance <= 3.
 - embedding near-dup: brute-force pair scan (oracle) — ANN/LSH variants in
   similarity.py are the scale path.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.tokenizer import tokenize_col
-from ..plans.state import state_dir
+from ..plans.state import read_parquet, state_dir
+from . import build
 
 HASH_PRIME = 2_147_483_647  # 2^31 - 1: keeps a*h+b inside int64
 NUM_HASHES = 16
@@ -42,23 +50,10 @@ def minhash_coeffs(num_hashes: int = NUM_HASHES) -> list[tuple[int, int]]:
     ]
 
 
-def term_hash_col(c: Column) -> Column:
-    """Portable 60-bit token hash: first 15 hex chars of md5 -> int64,
-    reduced mod 2^31-1 so downstream affine hashes stay in int64."""
-    return (
-        F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
-        % F.lit(HASH_PRIME)
-    )
-
-
 def shingles_col(tokens: Column, n: int) -> Column:
     """Token n-gram shingles joined with '_' (empty array when < n tokens).
-
-    Round 7 (guide §1.2 per-task work): positions index the array with
-    0-based get() — O(1) per gram element — instead of slice(), which
-    allocates an n-element subarray per position (measured at sf0.1: the
-    slice form materialized the shingle relation in 25.5s, the get form in
-    ~1s; same strings by construction)."""
+    Positions index with get(), O(1) per element, not slice(), which
+    allocates a subarray per position (25.5s vs ~1s at sf0.1, round 7)."""
 
     def gram(i: Column) -> Column:
         return F.concat_ws(
@@ -104,13 +99,10 @@ def exact_dedup(
 def _toks_base(
     df: DataFrame, text_col: str, id_col: str, base: DataFrame | None
 ) -> DataFrame:
-    """(doc_id, toks): the pre-tokenized corpus. When `base` (a term-vectors
-    sidecar) is given it is used as-is; otherwise tokenization happens here.
-    CRITICAL perf note (round 7, measured): composing tokenize_col directly
-    under the higher-order shingle lambda re-evaluates the tokenizer PER
-    ARRAY ELEMENT (no subexpression elimination inside lambda bodies) —
-    10.5s vs 0.6s at sf0.1 for the shingle-set projection — so every
-    shingle consumer goes through this single-evaluation base."""
+    """(doc_id, toks): `base` (a term-vectors sidecar) as-is, else
+    tokenized here, once: tokenize_col under the shingle lambda would run
+    per array element (no subexpression elimination in lambda bodies;
+    10.5s vs 0.6s at sf0.1, round 7)."""
     if base is not None:
         return base.select("doc_id", "toks")
     return df.select(
@@ -175,242 +167,249 @@ def ngram_jaccard_pairs(
     return out
 
 
-# ----------------------------------------------------------- MinHash + LSH ---
-
-
-def minhash_signatures(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id",
-    num_hashes: int = NUM_HASHES,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, mh_0 .. mh_{H-1}) — min over shingles of affine hashes of
-    the portable 60-bit shingle hash. Docs with < n tokens get no row.
-    `shingles`: optional precomputed doc_shingles() frame (callers that
-    also need the shingles for verification pass a persisted one so the
-    tokenize+explode+distinct subtree runs once)."""
-    sh = (
-        shingles
-        if shingles is not None
-        else doc_shingles(df, n, text_col, id_col)
-    ).withColumn("h", term_hash_col(F.col("shingle")))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(HASH_PRIME))
-        .cast("long")
-        .alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = NUM_HASHES,
-    band_rows: int = BAND_ROWS,
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash banding candidates verified with exact Jaccard.
-
-    (doc_a, doc_b, jaccard >= threshold). Deterministic: fixed coefficients,
-    fixed banding — the SQL oracle replicates the full pipeline, so results
-    match exactly even though LSH recall < 1 vs ground truth.
-
-    Plan shape (round 7 — guide §2.3/§2.4, replacing the round-3 lazy
-    exploded-frame design): ONE corpus scan builds the per-doc distinct
-    shingle ARRAY and its 60-bit hash array (no explode, no distinct
-    shuffle), persisted as a doc-sized frame of arrays. Signatures are
-    array_min folds over the hash array — pure projections, zero shuffles.
-    Banding posexplodes 4 tiny key columns; the band self-join (the LSH
-    collision step) is the ONLY corpus-wide shuffle left, and it carries
-    (doc_id, band_idx, band_key) rows. Verification joins the candidate
-    pairs back to the persisted shingle arrays (candidate side broadcast,
-    corpus side never shuffles) and computes exact Jaccard with
-    array_intersect — same integers, same round-6 doubles as the exploded
-    intersection-join it replaces (oracle replay pins equality). Measured
-    at sf0.1/local[32]: 8.2s -> see OPTIMIZATION_r07.md.
-    """
-    sets = (
-        _toks_base(df, text_col, id_col, base)
-        .select(
-            "doc_id",
-            F.array_distinct(shingles_col(F.col("toks"), n)).alias("sh"),
-        )
-        .where(F.size("sh") > 0)
-        .withColumn("hs", F.transform("sh", lambda s: term_hash_col(s)))
-        .persist()
-    )
-    def _affine(a: int, b: int):
-        # Factory keeps the HOF lambda unary (PySpark reads arity).
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(HASH_PRIME)
-
-    sig_cols = [
-        F.array_min(F.transform("hs", _affine(a, b)))
-        .cast("long")
-        .alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    sig = sets.select("doc_id", *sig_cols)
-    n_bands = num_hashes // band_rows
-    key_arr = F.array(
-        *[
-            F.concat_ws(
-                "_",
-                *[
-                    F.col(f"mh_{bidx * band_rows + r}").cast("string")
-                    for r in range(band_rows)
-                ],
-            )
-            for bidx in range(n_bands)
-        ]
-    )
-    banded = sig.select(
-        "doc_id", F.posexplode(key_arr).alias("band_idx", "band_key")
-    )
-
-    a_side = banded.alias("a")
-    b_side = banded.alias("b")
-    cand = (
-        a_side.join(
-            b_side,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    # Exact-Jaccard verification restricted to the CANDIDATE pairs only —
-    # never the full pair space (that is the whole point of the banding).
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    out = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias(
-                "inter"
-            ),
-            F.size("sh_a").cast("long").alias("size_a"),
-            F.size("sh_b").cast("long").alias("size_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    out._ojs_persisted = sets
-    return out
-
-
-# ----------------------------------------------------------------- SimHash ---
+# ------------------------------------------------- near-dup band kernel ---
 
 SIMHASH_BITS = 60
 SIMHASH_BANDS = 4  # 4 x 15 bits: recall 1.0 for hamming distance <= 3
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, simhash): 60-bit tf-weighted SimHash from portable term
-    hashes. Bit b is set iff sum over terms of tf * sign(bit b of h) > 0."""
-    tf = (
-        _toks_base(df, text_col, id_col, base)
-        .select("doc_id", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("long").alias("tf"))
-        .withColumn("h", term_hash_col(F.col("term")))
+def _md5_mod(strings: list[str]) -> np.ndarray:
+    """The oracles' portable hash: int(md5(s)[:15], 16) % HASH_PRIME."""
+    return np.fromiter(
+        (int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % HASH_PRIME
+         for s in strings),
+        np.int64, len(strings),
     )
-    bit_sums = tf.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1,
-                    F.col("tf"),
-                ).otherwise(-F.col("tf"))
-            ).alias(f"s_{b}")
-            for b in range(SIMHASH_BITS)
-        ]
+
+
+def _distinct(values: pa.Array, rows: np.ndarray):
+    """(rows, codes, counts, run starts, dictionary) of distinct (row, value)."""
+    enc = pc.dictionary_encode(values)
+    v = max(len(enc.dictionary), 1)
+    key, cnt = np.unique(rows * v + enc.indices.to_numpy(), return_counts=True)
+    starts = np.flatnonzero(np.diff(key // v, prepend=-1))
+    return key // v, key % v, cnt, starts, enc.dictionary
+
+
+def _band_rows(doc_id, cols: dict, keys: np.ndarray) -> pa.Table:
+    """One row per (doc, band) with the doc's `cols`; band_key is the
+    band's first key, the exchange key (equal band keys share it)."""
+    n_bands = keys.shape[1]
+    take = np.repeat(np.arange(len(doc_id)), n_bands)
+    band = np.tile(np.arange(n_bands, dtype=np.int32), len(doc_id))
+    return pa.table({
+        "doc_id": pa.array(doc_id[take], pa.int64()),
+        "band_idx": band,
+        "band_key": pa.array(keys[take, band, 0], pa.int64()),
+        **{k: c.take(take) for k, c in cols.items()},
+    })
+
+
+def _minhash_rows(toks: pa.Table, n: int, coeffs, band_rows: int):
+    """MinHash band rows of a batch of (doc_id, toks): for each doc with a
+    token n-gram, sig (per (a, b) in coeffs, the min over its distinct
+    shingles' hashes h of (a*h + b) mod HASH_PRIME) and sh (the shingles:
+    n tokens joined with '_', as concat_ws builds them)."""
+    col = toks["toks"].combine_chunks()
+    flat, par = pc.list_flatten(col), pc.list_parent_indices(col).to_numpy()
+    m = max(len(flat) - n + 1, 0)
+    same_doc = par[:m] == par[n - 1:n - 1 + m]
+    grams = pc.binary_join_element_wise(
+        *[flat[j:j + m] for j in range(n)], "_"
+    ).filter(pa.array(same_doc))
+    rows, codes, _cnt, starts, vocab = _distinct(grams, par[:m][same_doc])
+    h = _md5_mod(vocab.to_pylist())[codes]
+    sig = np.stack([np.minimum.reduceat((a * h + b) % HASH_PRIME, starts)
+                    for a, b in coeffs], axis=1)
+    sh = pa.ListArray.from_arrays(
+        pa.array(np.append(starts, len(codes)), pa.int32()), vocab.take(codes)
     )
-    fp = None
+    return _band_rows(
+        toks["doc_id"].to_numpy()[rows[starts]],
+        {"sig": pa.array(list(sig), pa.list_(pa.int64())), "sh": sh},
+        _minhash_keys(sig, band_rows),
+    )
+
+
+def _minhash_keys(sig: np.ndarray, band_rows: int) -> np.ndarray:
+    n_bands = sig.shape[1] // band_rows
+    return sig[:, :n_bands * band_rows].reshape(len(sig), n_bands, band_rows)
+
+
+def _simhash_fp(toks: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_id, simhash) of the docs of a batch with a token: bit b is set
+    iff the sum over the doc's distinct terms of tf, signed by bit b of
+    the term's hash, is > 0."""
+    col = toks["toks"].combine_chunks()
+    rows, codes, tf, starts, vocab = _distinct(
+        pc.list_flatten(col), pc.list_parent_indices(col).to_numpy()
+    )
+    h = _md5_mod(vocab.to_pylist())[codes]
+    fp = np.zeros(len(starts), np.int64)
     for b in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"s_{b}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ) * F.lit(1 << b).cast("long")
-        fp = bit if fp is None else fp + bit
-    return bit_sums.select("doc_id", fp.alias("simhash"))
+        s = np.add.reduceat(np.where((h >> b) & 1 == 1, tf, -tf), starts)
+        fp |= (s > 0).astype(np.int64) << b
+    return toks["doc_id"].to_numpy()[rows[starts]], fp
 
 
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming, found via
-    15-bit band collision (exhaustive for max_hamming <= 3).
+def _simhash_keys(fp: np.ndarray) -> np.ndarray:
+    """(docs, SIMHASH_BANDS, 1): the 15-bit band keys of each fingerprint."""
+    shift = 15 * np.arange(SIMHASH_BANDS)
+    return ((fp[:, None] >> shift) & ((1 << 15) - 1))[:, :, None]
 
-    Plan shape (phase-profiled, scripts/profile_simhash.py round 6):
-    - `fp` is PERSISTED before banding: the 4-band union self-joined
-      against itself references the fingerprint subtree 8 times — without
-      the persist that is 8 corpus-scan+aggregate passes (trivial at sf0.1,
-      ruinous at 100 TB).
-    - The hamming cut runs BEFORE the pair dedup, explicitly: on a
-      template-heavy corpus the band join degenerates toward all-pairs
-      (measured: C(5000,2) = 12.5M candidates at sf0.1, every doc colliding
-      in >= 1 band), and deduping 12.5M four-column rows costs ~3x the
-      whole filtered op. Catalyst happens to push a grouping-key filter
-      below the distinct anyway; ordering the plan that way in code makes
-      the property structural, not optimizer-dependent."""
-    fp = simhash(df, text_col, id_col, base).persist()
-    # Round 7: one posexplode pass over the persisted fingerprints instead
-    # of a 4-way union (4 references to the cached frame, 4x the plan);
-    # identical (doc_id, band_idx, band_key, simhash) rows.
-    bands = fp.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), i * 15)
-                    .bitwiseAND(F.lit((1 << 15) - 1))
-                    for i in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
+
+def _bucket_pairs(rows: pa.Table, keys, verify, keep, value_type,
+                  counter=None, max_pairs: int = 1 << 16) -> pa.Table:
+    """(doc_a, doc_b, value = verify(i, j)) of the band rows' pairs that
+    share a bucket (band, keys in that band) and no earlier band, where
+    keep(value). keys (rows, bands, w) holds all band keys of each row's
+    doc, so that check is local and a pair comes out once. Buckets are runs
+    of one sort; the pairs of all buckets of one size are enumerated by
+    np.triu_indices, ~max_pairs at a time (a big bucket by blocks of its
+    rows, so memory stays bounded; time is still quadratic in its size).
+    `counter.add` gets the number of pairs verified."""
+    doc, band = rows["doc_id"].to_numpy(), rows["band_idx"].to_numpy()
+    r, n_bands, _w = keys.shape
+    own = keys[np.arange(r), band]
+    order = np.lexsort((doc, *own.T[::-1], band))
+    sb, so = band[order], own[order]
+    head = np.r_[True, (sb[1:] != sb[:-1]) | (so[1:] != so[:-1]).any(1)]
+    starts = np.flatnonzero(head[:r])
+    sizes = np.diff(np.append(starts, r))
+    out = [([], [], [])]
+    for m in np.unique(sizes[sizes > 1]):
+        groups, block = starts[sizes == m], max(1, max_pairs // m)
+        for x0 in range(0, m - 1, block):  # pairs (x, y > x), x from x0
+            p, q = np.triu_indices(min(block, m - 1 - x0), x0 + 1, m)
+            step = max(1, max_pairs // len(p))
+            for s in (groups[g:g + step, None]
+                      for g in range(0, len(groups), step)):
+                i, j = order[(s + x0 + p).ravel()], order[(s + q).ravel()]
+                earlier = (keys[i] == keys[j]).all(2) & (
+                    np.arange(n_bands) < band[i][:, None])
+                new = ~earlier.any(1) & (doc[i] < doc[j])
+                i, j = i[new], j[new]
+                if counter is not None:
+                    counter.add(len(i))
+                value = verify(i, j)
+                ok = keep(value)
+                out.append((doc[i][ok], doc[j][ok], value[ok]))
+    a, b, value = (np.concatenate(c) for c in zip(*out))
+    return pa.table({"doc_a": pa.array(a, pa.int64()),
+                     "doc_b": pa.array(b, pa.int64()),
+                     "value": pa.array(value, value_type)})
+
+
+def _jaccard(sets: pa.ListArray, i: np.ndarray, j: np.ndarray):
+    """|A & B| / |A | B| of the distinct-string lists A = sets[i], B =
+    sets[j]: a repeated (pair, string code) key is a shared string."""
+    u, inv = np.unique(np.r_[i, j], return_inverse=True)
+    sub = sets.take(u)
+    lens = pc.list_value_length(sub).to_numpy().astype(np.int64)
+    enc = pc.dictionary_encode(pc.list_flatten(sub))
+    v = max(len(enc.dictionary), 1)
+    ln = lens[inv]  # pair k's lists: sub rows inv[k] and inv[k + len(i)]
+    first = np.cumsum(lens) - lens
+    idx = np.repeat(first[inv] - np.cumsum(ln) + ln, ln) + np.arange(ln.sum())
+    pid = np.repeat(np.r_[np.arange(len(i)), np.arange(len(i))], ln)
+    key = np.sort(pid * v + enc.indices.to_numpy()[idx])
+    inter = np.bincount(key[1:][key[1:] == key[:-1]] // v, minlength=len(i))
+    return inter / (ln[:len(i)] + ln[len(i):] - inter)
+
+
+def _per_partition(fn, batches):
+    batches = list(batches)
+    if batches:
+        yield from fn(pa.Table.from_batches(batches)).to_batches()
+
+
+def _run_kernel(spark, toks_dir: str, per_doc, doc_schema: str,
+                per_bucket=None, out_schema: str | None = None) -> DataFrame:
+    """per_doc ((doc_id, toks) -> doc_schema rows), then per_bucket (band
+    rows -> out_schema rows) if given: in the driver for at most
+    `build.DRIVER_BUILD_MAX_ROWS` docs (parquet footers, no job), else on
+    Spark with one exchange on (band_idx, band_key) between the two."""
+    corpus = ds.dataset(toks_dir)
+    if corpus.count_rows() <= build.DRIVER_BUILD_MAX_ROWS:
+        t = per_doc(corpus.to_table(columns=["doc_id", "toks"]))
+        t = t if per_bucket is None else per_bucket(t)
+        return spark.createDataFrame(t.to_pandas(), out_schema or doc_schema)
+    df = read_parquet(spark, toks_dir).select("doc_id", "toks").mapInArrow(
+        lambda it: _per_partition(per_doc, it), doc_schema
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    out = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).cast("int").alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    if per_bucket is None:
+        return df
+    return df.repartition("band_idx", "band_key").mapInArrow(
+        lambda it: _per_partition(per_bucket, it), out_schema
     )
-    out._ojs_persisted = fp
-    return out
+
+
+def minhash_lsh_pairs(spark, toks_dir: str, n: int = 3,
+                      threshold: float = 0.8, num_hashes: int = NUM_HASHES,
+                      band_rows: int = BAND_ROWS, counter=None) -> DataFrame:
+    """(doc_a < doc_b, jaccard >= threshold, Spark-rounded to 6 places):
+    MinHash band candidates of the tokenized corpus at `toks_dir` (doc_id,
+    toks), verified with exact Jaccard on the shingle strings (their
+    hashes collide). Fixed coefficients and banding: the SQL oracle
+    replays it exactly. `counter`: optional `.add(int)` sink (a plain
+    counter or a Spark accumulator) of the candidate pairs verified."""
+    coeffs = minhash_coeffs(num_hashes)
+
+    def pairs(rows):
+        sig = pc.list_flatten(rows["sig"]).to_numpy().reshape(-1, num_hashes)
+        sets = rows["sh"].combine_chunks()
+        return _bucket_pairs(
+            rows, _minhash_keys(sig, band_rows),
+            lambda i, j: _jaccard(sets, i, j), lambda v: v >= threshold,
+            pa.float64(), counter,
+        )
+
+    out = _run_kernel(
+        spark, toks_dir, lambda t: _minhash_rows(t, n, coeffs, band_rows),
+        "doc_id LONG, band_idx INT, band_key LONG, sig ARRAY<LONG>,"
+        " sh ARRAY<STRING>",
+        pairs, "doc_a LONG, doc_b LONG, value DOUBLE",
+    )
+    return out.select("doc_a", "doc_b", F.round("value", 6).alias("jaccard"))
+
+
+def simhash(spark, toks_dir: str) -> DataFrame:
+    """(doc_id, simhash): 60-bit tf-weighted SimHash of each doc of the
+    tokenized corpus at `toks_dir` with at least one token."""
+    return _run_kernel(
+        spark, toks_dir,
+        lambda t: pa.table(dict(zip(("doc_id", "simhash"), _simhash_fp(t)))),
+        "doc_id LONG, simhash LONG",
+    )
+
+
+def simhash_pairs(spark, toks_dir: str, max_hamming: int = 3,
+                  counter=None) -> DataFrame:
+    """(doc_a < doc_b, hamming <= max_hamming) via 15-bit band collision
+    (exhaustive for max_hamming <= 3). Term hashes are < 2^31, so nearly
+    every pair shares the top band; each is verified once. `counter` as
+    in minhash_lsh_pairs."""
+
+    def rows(t):
+        doc_id, fp = _simhash_fp(t)
+        return _band_rows(doc_id, {"simhash": pa.array(fp)},
+                          _simhash_keys(fp))
+
+    def pairs(rows):
+        fp = rows["simhash"].to_numpy()
+        return _bucket_pairs(
+            rows, _simhash_keys(fp),
+            lambda i, j: np.unpackbits((fp[i] ^ fp[j]).view(np.uint8))
+            .reshape(-1, 64).sum(1, dtype=np.int32),
+            lambda v: v <= max_hamming, pa.int32(), counter,
+        )
+
+    out = _run_kernel(
+        spark, toks_dir, rows,
+        "doc_id LONG, band_idx INT, band_key LONG, simhash LONG",
+        pairs, "doc_a LONG, doc_b LONG, value INT",
+    )
+    return out.withColumnRenamed("value", "hamming")
 
 
 # ------------------------------------------------- embedding cosine near-dup ---

@@ -10,9 +10,9 @@ rebuilds and replaces its entry instead of being served stale.
 Derived-state directories come from `state_dir`: one per-process root,
 removed at exit, so the state of a process never outlives it.
 
-`read_parquet` is the registry's parquet read: Spark's inferred schema
-is memoized per source version, so only the first read of a file infers
-it (one Spark job each time otherwise).
+`read_parquet` is the registry's parquet read: the schema of each source
+version is read once from its parquet footers and memoized, so no read
+launches a schema-inference job (one Spark job each time otherwise).
 
 `term_df_map` is the one driver-side read of a (term, df) parquet into a
 dict. Dictionaries larger than `DICT_DRIVER_MAX_BYTES` on disk are not
@@ -80,12 +80,65 @@ def memo(kind: str, key, sources: list[str], build: Callable[[], object]):
     return value
 
 
+def footer_schema(spark, path: str):
+    """The Spark schema of the parquet file or directory `path`, from its
+    footers (no job), as Spark's own inference reads it: the Spark schema
+    a Spark writer stored in the footer, else Spark's Arrow type mapping
+    (timestamps without a UTC adjustment are TIMESTAMP_NTZ when the
+    session's `spark.sql.parquet.inferTimestampNTZ.enabled` says so); every
+    field nullable. None when the files' schemas differ (Spark would merge
+    or pick one) or a column is INT96 in a non-Spark file."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    files = (
+        [os.path.join(path, n) for n, _s, _m in source_key(path)]
+        if os.path.isdir(path) else [path]
+    )
+    first, *rest = (pq.read_metadata(f) for f in files)
+    arrow = first.schema.to_arrow_schema()
+    if any(not m.schema.to_arrow_schema().equals(arrow, check_metadata=True)
+           for m in rest):
+        return None
+    stored = (first.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    if stored is not None:
+        return _nullable(StructType.fromJson(json.loads(stored)))
+    if any(c.physical_type == "INT96" for c in first.schema):
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    return _nullable(from_arrow_schema(arrow, ntz == "true"))
+
+
+def _nullable(t):
+    """`t` with every field, element and value nullable (Spark reads every
+    parquet column as nullable)."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
 def read_parquet(spark, path: str):
-    """spark.read.parquet(path) with the schema Spark inferred for this
-    version of the source memoized: a later read of an unchanged source
-    launches no schema-inference job, and a rewritten one is re-inferred.
-    A path without top-level `*.parquet` files (a hive-partitioned
-    directory) or that is missing has no fingerprint and is read as is."""
+    """spark.read.parquet(path) with the schema of this version of the
+    source memoized: the first read takes it from the parquet footers
+    (`footer_schema`, no job; Spark infers it only for files whose
+    schemas differ), a later read of an unchanged source reuses it, and a
+    rewritten one is read again. A path without top-level `*.parquet`
+    files (a hive-partitioned directory) or that is missing has no
+    fingerprint and is read as is."""
     try:
         key = source_key(path)
     except OSError:
@@ -94,7 +147,7 @@ def read_parquet(spark, path: str):
         return spark.read.parquet(path)
     schema = memo(
         "parquet_schema", path, [path],
-        lambda: spark.read.parquet(path).schema,
+        lambda: footer_schema(spark, path) or spark.read.parquet(path).schema,
     )
     return spark.read.schema(schema).parquet(path)
 
@@ -107,10 +160,8 @@ def write_parquet_dir(table, path: str, **write_kwargs) -> None:
     rewrite must not reuse a name). It is written as a `_`-prefixed temp
     file, which every reader skips; the directory's other entries are
     removed and the temp renamed into place. `write_kwargs` go to
-    `pq.write_table`. The table's Spark schema is memoized as the read
-    schema of this version of `path`, so no read of it infers one."""
+    `pq.write_table`."""
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     os.makedirs(path, exist_ok=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
@@ -126,10 +177,6 @@ def write_parquet_dir(table, path: str, **write_kwargs) -> None:
             else:
                 os.remove(p)
     os.replace(os.path.join(path, tmp), os.path.join(path, name))
-    memo(
-        "parquet_schema", path, [path],
-        lambda: from_arrow_schema(table.schema),
-    )
 
 
 def term_df_map(path: str) -> dict[str, int] | None:

@@ -8,7 +8,10 @@ to 0), over a documents.parquet of N synthesized transcript turns:
   - `index`: `entry_queries._index_for` (segment index of 8 segments);
   - `toks`: `entry_queries._toks` (tokenized corpus);
   - `postings`: `query.write_decoded_postings` of that index (the flat
-    postings sidecar of a corpus state).
+    postings sidecar of a corpus state);
+  - `minhash` / `simhash_pairs`: the near-dup band kernel
+    (`dedup.minhash_lsh_pairs` n=2 threshold 0.3, `dedup.simhash_pairs`
+    max_hamming 3) over the tokenized corpus, collected with `collect()`.
 
 Prints one JSON line per (size, build) with the median of 3 warm runs per
 executor, in seconds.
@@ -39,6 +42,7 @@ def main() -> None:
 
     from opensearch_jvector_plugin_spark import entry_queries as eq
     from opensearch_jvector_plugin_spark.operators import build, query
+    from opensearch_jvector_plugin_spark.operators import dedup as dd
     from opensearch_jvector_plugin_spark.session import get_spark
     from opensearch_jvector_plugin_spark.sources.transcripts import (
         synthesize_transcripts_pdf,
@@ -66,12 +70,19 @@ def main() -> None:
             pdf.insert(0, "doc_id", np.arange(n, dtype=np.int64))
             pdf[["doc_id", "text"]].to_parquet(docs, index=False)
             idx = eq._index_for(spark, fresh_sf(docs))
+            toks = eq._toks_path(spark, fresh_sf(docs))
             builds = {
                 "index": lambda: eq._index_for(spark, fresh_sf(docs)),
                 "toks": lambda: eq._toks(spark, fresh_sf(docs)),
                 "postings": lambda: query.write_decoded_postings(
                     spark, idx, tempfile.mkdtemp(dir=work)
                 ),
+                "minhash": lambda: dd.minhash_lsh_pairs(
+                    spark, toks, n=2, threshold=0.3
+                ).collect(),
+                "simhash_pairs": lambda: dd.simhash_pairs(
+                    spark, toks, max_hamming=3
+                ).collect(),
             }
             for name, run in builds.items():
                 times = {}

@@ -90,23 +90,6 @@ def main() -> None:
           lambda: eq.q_transcript_collapse(spark, sf_dir).count())
         spark.catalog.clearCache()
 
-    if sel("minhash"):
-        print("== dedup_minhash")
-        t("q_dedup_minhash end-to-end",
-          lambda: eq.q_dedup_minhash(spark, sf_dir).count())
-        from opensearch_jvector_plugin_spark.operators.dedup import (
-            doc_shingles,
-            minhash_signatures,
-        )
-        docs = eq._docs(spark, sf_dir)
-        t("doc_shingles materialize",
-          lambda: doc_shingles(docs, n=2).write.format("noop")
-          .mode("overwrite").save())
-        t("minhash_signatures materialize",
-          lambda: minhash_signatures(docs, n=2).write.format("noop")
-          .mode("overwrite").save())
-        spark.catalog.clearCache()
-
     if sel("ivf"):
         print("== ann_ivf_trained_l2 (build vs serve)")
         t("q_ann_ivf_trained_l2 1st (build+train+serve)",

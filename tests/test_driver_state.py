@@ -242,7 +242,7 @@ def test_read_parquet_infers_once_per_source_version(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"a": [1, 2]}), path)
     first, jobs = spark_jobs(spark, lambda: state.read_parquet(spark, path))
-    assert jobs == 1
+    assert jobs == 0  # the footer schema: no inference job
     again, jobs = spark_jobs(spark, lambda: state.read_parquet(spark, path))
     assert jobs == 0 and again.schema == first.schema
     assert [r.a for r in again.collect()] == [1, 2]
@@ -266,3 +266,35 @@ def test_write_parquet_dir_replaces_the_directory(spark, tmp_path):
     # A same-content rewrite gets a fresh name, so a new fingerprint.
     state.write_parquet_dir(pa.table({"b": ["x", "y"]}), path)
     assert os.listdir(path) != [only] and len(os.listdir(path)) == 1
+
+
+def test_footer_schema_is_sparks_and_first_read_launches_no_job(
+    spark, tmp_path, monkeypatch
+):
+    """`state.footer_schema` equals Spark's inferred schema for the harness
+    tables, the test-data tables and the registry sidecars (driver- and
+    Spark-written), so a first `read_parquet` launches no job."""
+    import glob
+
+    from perfbench.data import harness_tables
+
+    sf = SF_DIRS[0]
+    corpus, transcripts = eq._corpus_state(spark, sf), eq._transcript_state(
+        spark
+    )
+    paths = [
+        *harness_tables(7, str(tmp_path / "harness")).values(),
+        *(p for d in SF_DIRS for p in sorted(glob.glob(f"{d}/*.parquet"))),
+        eq._toks_path(spark, sf),
+        os.path.join(corpus.dir, "postings"),
+        corpus.dict_path,
+        os.path.join(transcripts.dir, "attrs"),
+        os.path.join(transcripts.dir, "field_postings"),
+    ]
+    _spark_bounds(monkeypatch)
+    paths.append(eq._toks_path(spark, _sf_copy(tmp_path, "spark_toks")))
+    for p in paths:
+        assert state.footer_schema(spark, p) == spark.read.parquet(p).schema, p
+        state._MEMO.pop(("parquet_schema", p), None)
+        _df, jobs = spark_jobs(spark, lambda: state.read_parquet(spark, p))
+        assert jobs == 0, p

@@ -24,7 +24,7 @@ def corpus(spark, tiny_corpus_pdf):
 
 
 @pytest.fixture(scope="module")
-def toks_base(spark, corpus, tmp_path_factory):
+def toks_dir(spark, corpus, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("toks"))
     (
         corpus.select(
@@ -35,7 +35,12 @@ def toks_base(spark, corpus, tmp_path_factory):
         .write.mode("overwrite")
         .parquet(d)
     )
-    return spark.read.parquet(d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def toks_base(spark, toks_dir):
+    return spark.read.parquet(toks_dir)
 
 
 @pytest.fixture(scope="module")
@@ -218,11 +223,22 @@ def test_positional_base_and_gate_match_direct_scan(spark, corpus, toks_base):
     )
 
 
-def test_minhash_base_matches_direct(spark, corpus, toks_base):
+def test_minhash_base_matches_direct(spark, corpus, toks_dir):
+    """Every MinHash pair over the pre-tokenized corpus is an exact n-gram
+    Jaccard pair of the direct corpus scan, with the same jaccard (the
+    banding may only drop pairs, never change one)."""
     from opensearch_jvector_plugin_spark.operators.dedup import (
         minhash_lsh_pairs,
+        ngram_jaccard_pairs,
     )
 
-    direct = minhash_lsh_pairs(corpus, n=2, threshold=0.2)
-    based = minhash_lsh_pairs(None, n=2, threshold=0.2, base=toks_base)
-    pd.testing.assert_frame_equal(_norm(direct), _norm(based))
+    # This corpus has MinHash pairs only at n=1 and a low threshold.
+    direct = ngram_jaccard_pairs(corpus, n=1, threshold=0.05).select(
+        "doc_a", "doc_b", "jaccard"
+    )
+    based = minhash_lsh_pairs(spark, toks_dir, n=1, threshold=0.05)
+    got = _norm(based)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(
+        got, _norm(direct).merge(got[["doc_a", "doc_b"]])
+    )
